@@ -1,13 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+
+  /** The shipped session: the one copy of the confs Bench, Verify,
+    * Profile and the test suite run under. Callers add only what is
+    * theirs (an app name, a warehouse dir) and build it. Keep each pair
+    * a literal `.config` call here: perfbench's conf-drift check reads
+    * them from this file.
+    */
+  def session(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      // every graft entry point pins UTC: SparkEntry.t()'s timestamp
+      // normalization (unix_micros of an NTZ->TZ cast) depends on it
       .config("spark.sql.session.timeZone", "UTC")
+      // older testdata vintages wrote events.ts as TIMESTAMP(NANOS); the
+      // flag makes those surface as LongType, and SparkEntry.t() maps the
+      // current timestamp[us] vintage to the same long-nanos contract
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // r20: force the SORT-based shuffle writer. The bypass writer
       // (engaged whenever reduce partitions <= 200) opens one file PER
@@ -55,7 +65,11 @@ object Bench {
       // 3.95/5.77→3.37/3.42, q48 2.20→1.62, no regressions observed.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JVM/JIT + whole-stage-codegen compilation on the smallest
     // SF: the generated code for each query's plan is structurally

@@ -1,1771 +1,168 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Temporary profiling / demo harness (not part of the library surface). */
+/** Profiling harness (not part of the library surface). Runs on the
+  * shipped session (`Bench.session`) with `$SPARK_GRAFT_CPUS` cores
+  * (default 4) over the tables in `$SPARK_GRAFT_SF_DIR` (default sf0.1):
+  *
+  *   - `time [q,q,...]`: Bench's protocol for a few queries — warm-up at
+  *     sf0.001, best of 2, operator caches released between runs;
+  *   - `explain q,q,... [outDir [tag]]`: formatted physical plans, to
+  *     stdout, or to `outDir/<q>_<tag>.txt` (tag defaults to `before`);
+  *   - `stageprof [q]`: per-stage wall, task-time sum and task count of
+  *     one warm run, plus the time no stage was running;
+  *   - `plancounts`: static Exchange / nested-loop census per query,
+  *     the source of PlanGuardSpec's exchange budgets.
+  *
+  * A runtime SQL conf under test is flipped with `spark.conf.set` for a
+  * one-off A/B; the session itself is Bench's.
+  */
 object Profile {
 
-  /** Structure-preserving 10x documents staging: each copy c>0 prefixes
-    * every token with a copy tag, so shingle sets across copies are
-    * disjoint — each copy reproduces sf0.1's near-dup density and
-    * candidate counts scale ~linearly (exact copies would grow MinHash
-    * pair counts ~copies^2: a data artifact, not an engine property).
-    */
-  private def stageScaledDocs(spark: SparkSession, out: String, copies: Int): Unit = {
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    (0 until copies).map { c =>
-      docs.select(
-        (col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-        (if (c == 0) col("text")
-         else regexp_replace(col("text"), "(\\S+)", s"x${c}_$$1")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_.unionByName(_))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-  }
+  private val Usage = Seq(
+    "time [q,q,...]",
+    "explain q,q,... [outDir [tag]]",
+    "stageprof [q]",
+    "plancounts")
 
-  /** 10x embeddings staging: per-copy orthogonal transform =
-    * coprime-stride dim permutation composed with seeded ±1 signs.
-    * Within-copy cosines are exactly preserved; cross-copy vectors
-    * decorrelate to ~0 cosine (sign flips alone left some copy pairs
-    * at cosine ~0.5, which q38's loose 0.42 threshold counted as
-    * near-dups — a staging artifact, not an engine property).
-    */
-  private def stageScaledEmbeddings(spark: SparkSession, out: String, copies: Int): Unit = {
-    val embs = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    (0 until copies).map { c =>
-      val perm = typedlit((0 until 64).map(i => ((2 * c + 1) * i + 7 * c) % 64 + 1))
-      val rnd = new scala.util.Random(1000003L * (c + 1))
-      val signs = typedlit((0 until 64).map(_ =>
-        if (c > 0 && rnd.nextBoolean()) -1.0f else 1.0f))
-      embs.select(
-        (col("vec_id") + lit(c * 10000000L)).as("vec_id"),
-        (if (c == 0) col("embedding")
-         else zip_with(perm, signs, (p, s) => element_at(col("embedding"), p) * s))
-          .as("embedding"),
-        col("label"))
-    }.reduce(_.unionByName(_))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-  }
-  /** Best-of-2 timing of one query in a FRESH child JVM — the
-    * adjudication instrument the BASELINE protocol prescribes (a
-    * single-JVM sweep inflates its own tail via GC/codegen churn; a
-    * per-query fork can't). The child re-runs `Profile time <q>` with
-    * the parent's own JVM flags and classpath (sbt forks `run`, so
-    * java.class.path IS the application classpath) and its one `[time]`
-    * line is the measurement.
-    */
-  private def runFreshChild(q: String, sfDir: String): (Long, Double) = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filterNot(_.startsWith("-agentlib")).toSeq
-    val cmd = Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.Profile", "time", q)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.redirectErrorStream(true)
-    val p = pb.start()
-    // drain fully BEFORE waitFor: an unread pipe deadlocks the child
-    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
-    val code = p.waitFor()
-    val re = """\[time\] \S+ rows=(\d+) t=([\d.]+)s""".r.unanchored
-    out.collectFirst { case re(r, t) => (r.toLong, t.toDouble) }
-      .getOrElse(throw new IllegalStateException(
-        s"fresh child for $q exited $code without a [time] line:\n" +
-          out.takeRight(20).mkString("\n")))
-  }
+  private val WarmDir = "/root/testdata/sf0.001"
 
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("")
+    if (!Usage.exists(_.split(' ').head == mode)) {
+      System.err.println(s"unknown Profile mode '$mode'; modes:")
+      Usage.foreach(u => System.err.println(s"  $u"))
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    if (args.headOption.contains("ext")) {
-      // the config-route surface: a session built with
-      // spark.sql.extensions=graft.GraftExtensions resolves the SQL names
-      val s2 = SparkSession.builder()
-        .master(s"local[4]")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        // every graft entry point pins UTC: SparkEntry.t()'s timestamp
-        // normalization (unix_micros of an NTZ->TZ cast) depends on it
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("ext-demo")
-        .getOrCreate()
-      val row = s2.sql(
-        "SELECT trim_utf8_bytes(repeat('x', 50), 12) AS t, " +
-          "dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
-          "word_shingles(split('a b c d', ' '), 2) AS sh").head()
-      println(s"[demo] ext trim=${row.get(0)} dot=${row.get(1)} shingles=${row.get(2)}")
-      s2.stop()
-      return
-    }
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // A/B knobs for the optimization round. Defaults match the BENCH
-      // session (not stock Spark): BYPASS defaults to the tuned r20
-      // value 0 — export SPARK_GRAFT_BYPASS=200 for a stock-Spark side.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PF", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "0"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "20000"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "64KB"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PSMJ", "false"))
-      .config("spark.shuffle.file.buffer",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BUFFER", "32k"))
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BCAST", "10485760"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // UTC like Bench/Verify/SparkSpec: SparkEntry.t()'s timestamp
-      // normalization relies on the session zone, so a host-local zone
-      // here would shift q10/q49/streaming ts values vs the oracle
-      .config("spark.sql.session.timeZone", "UTC")
-      // profiling harness only: q38's ORACLE parameterization is
-      // deliberately quadratic at 10x (bulk-tail threshold, 3-bit band
-      // space — see BASELINE sf1 smoke), and its AQE broadcast collect
-      // exceeds the 1 GiB default at that scale; production callers use
-      // the capped/16-bit regime and never need this
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Bench.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    if (args.headOption.contains("streaming")) {
-      // drive StreamingOps over the real events table as a FILE STREAM:
-      // same parquet layout, readStream instead of read (ts is NANOS ->
-      // surface as long; rebuild a timestamp column for the watermark)
-      // file streaming sources watch a DIRECTORY; stage the table file
-      val dir = java.nio.file.Files.createTempDirectory("events_stream")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-        dir.resolve("events.parquet"))
-      val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      // ts vintage: long nanos -> rebuild a timestamp; timestamp[us] ->
-      // cast through (NTZ interpreted in the session zone)
-      val rawStream = spark.readStream
-        .schema(batchSchema)
-        .parquet(dir.toString)
-      val stream = batchSchema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          rawStream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _ => rawStream.withColumn("ts", col("ts").cast("timestamp"))
-      }
-      val q = graft.streaming.StreamingOps
-        .windowedCounts(stream, "1 hour", "10 minutes")
-        .writeStream.format("memory").queryName("stream_demo")
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      val n = spark.table("stream_demo").count()
-      val sample = spark.table("stream_demo").orderBy(desc("n")).limit(3)
-        .selectExpr("window.start", "event_type", "n").collect()
-      println(s"[demo] streaming windowedCounts closed-window rows=$n")
-      sample.foreach(r => println(s"[demo] ${r.get(0)} ${r.get(1)} n=${r.get(2)}"))
-      // sessionization over the same file stream
-      import spark.implicits._
-      val evStream = stream.selectExpr("event_id AS eventId", "ts", "user_id AS userId",
-        "event_type AS eventType", "value").as[graft.streaming.StreamingOps.Event]
-      val q2 = graft.streaming.StreamingOps.sessionize(evStream, gapMs = 6 * 3600 * 1000L)
-        .writeStream.format("memory").queryName("sess_demo").outputMode("append").start()
-      q2.processAllAvailable()
-      q2.stop()
-      println(s"[demo] streaming sessionize closed sessions=${spark.table("sess_demo").count()}")
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("time")) {
-      // targeted best-of-2 timing for a comma-separated query list at
-      // SPARK_GRAFT_SF_DIR — the Bench protocol (warmup at sf0.001,
-      // caches released between runs) without the full 90+-query sweep
-      val qs = args.drop(1).headOption.map(_.split(",").toSeq)
-        .getOrElse(Seq("q56_incr_dedup"))
-      qs.foreach { q =>
-        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-        graft.ops.CacheScope.releaseAll()
-      }
-      qs.foreach { q =>
-        var rows = 0L
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          rows = SparkEntry.queries(q)(spark, sfDir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          dt
-        }
-        println(f"[time] $q rows=$rows t=${times.min}%.2fs")
-        System.gc() // outside the timed window — see Bench's tail note
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("explainq")) {
-      // dump .explain("formatted") for each named query at
-      // SPARK_GRAFT_SF_DIR into the given directory (default plans/r20),
-      // suffixed with the given tag (default "before") — the
-      // optimization round's plan-evidence artifact
-      val qs = args.drop(1).headOption.map(_.split(",").toSeq).getOrElse(Nil)
-      val tag = args.drop(2).headOption.getOrElse("before")
-      val outDir = args.drop(3).headOption.getOrElse("plans/r20")
-      new java.io.File(outDir).mkdirs()
-      qs.foreach { q =>
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val p = java.nio.file.Paths.get(s"$outDir/${q}_$tag.txt")
-        java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
-        println(s"[explainq] wrote $p (${txt.length} chars)")
-        graft.ops.CacheScope.releaseAll()
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("stageprof")) {
-      // per-STAGE wall/task attribution for one query via a
-      // SparkListener — the UI-less stand-in for the stage page: run
-      // the query once warm, print every stage's duration, task count
-      // and name sorted by duration. Submission gaps (driver-side
-      // planning/collect work) show up as the delta between the sum of
-      // stage times and the wall clock.
-      val q = args.drop(1).headOption.getOrElse("q115_pretrain_curate")
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-      graft.ops.CacheScope.releaseAll()
-      // warm run at the target SF too (codegen for the big-SF plan)
-      SparkEntry.queries(q)(spark, sfDir).count()
-      graft.ops.CacheScope.releaseAll()
-      final case class StageRec(name: String, sub: Long, comp: Long, nt: Int,
-        taskMs: Long)
-      val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRec]()
-      val taskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          taskMs.computeIfAbsent(te.stageId,
-            _ => new java.util.concurrent.atomic.AtomicLong())
-            .addAndGet(te.taskInfo.duration)
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val info = sc.stageInfo
-          stages.put(info.stageId, StageRec(info.name,
-            info.submissionTime.getOrElse(-1L),
-            info.completionTime.getOrElse(-1L), info.numTasks,
-            Option(taskMs.get(info.stageId)).map(_.get()).getOrElse(0L)))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val wall0 = System.currentTimeMillis()
-      val df2 = SparkEntry.queries(q)(spark, sfDir)
-      val tc = System.nanoTime()
-      val rows = df2.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      graft.ops.CacheScope.releaseAll()
-      Thread.sleep(500) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      val all = stages.asScala.toSeq.sortBy(_._2.sub)
-      val stageWall = all.map(r => r._2.comp - r._2.sub).sum
-      val totalTaskMs = all.map(_._2.taskMs).sum
-      // driver-idle gaps: periods with NO stage running (planning/collect)
-      val intervals = all.map(r => (r._2.sub, r._2.comp)).sortBy(_._1)
-      var gapMs = 0L; var cursor = wall0
-      intervals.foreach { case (s, c) =>
-        if (s > cursor) gapMs += s - cursor
-        cursor = math.max(cursor, c)
-      }
-      println(f"[stageprof] $q rows=$rows wall=$wall%.2fs " +
-        f"(construct=${(tc - t0) / 1e9}%.2fs) stages=${all.size} " +
-        f"stage_wall_sum=${stageWall / 1000.0}%.2fs task_sum=${totalTaskMs / 1000.0}%.2fs " +
-        f"no_stage_running=${gapMs / 1000.0}%.2fs")
-      all.sortBy(r => -(r._2.comp - r._2.sub)).take(25).foreach { case (id, r) =>
-        println(f"[stageprof]   ${(r.comp - r.sub) / 1000.0}%6.2fs task_sum=${r.taskMs / 1000.0}%6.2fs tasks=${r.nt}%-4d s$id ${r.name.take(110)}")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("sftcentury")) {
-      // REALISTIC century staging for the contamination-gated event
-      // queries (q155/q156, q157/q160/q161): the standard key-offset
-      // events staging keeps CONTENT identical across copies, so at
-      // 100x the % 997 holdout covers the entire ~500-content space and
-      // 100% of dialogues legitimately leak (r15's measured
-      // zero-survivor century). Here `props` gets a per-copy tag —
-      // the stageScaledDocs philosophy: each copy reproduces sf0.1's
-      // content density, holdout coverage per copy stays ~sf0.1's
-      // ~70%, and the gates pass a non-degenerate fraction. event_type
-      // stays UNTAGGED so roles/masks (purchase/signup) behave exactly
-      // as at sf0.1; users are copy-local (user_id offset), so
-      // dialogues never span copies. Docs stage the standard scaled
-      // way (the tokenizer input). Fresh-child best-of-2 per query.
-      // nonEmpty first: forall is vacuously true on "" and "".toInt throws
-      val copies = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(100)
-      val out = s"tmp/sfx${copies}sft"
-      val off = 100000000L
-      val reuse = args.contains("reuse") &&
-        new java.io.File(s"$out/events.parquet").exists()
-      if (!reuse) {
-        val ev = spark.read.parquet("/root/testdata/sf0.1/events.parquet")
-        (0 until copies).map { c =>
-          ev.select(
-            (col("event_id") + lit(c * off)).as("event_id"),
-            col("ts"),
-            (col("user_id") + lit(c * off)).as("user_id"),
-            col("event_type"),
-            col("value"),
-            (if (c == 0) col("props")
-             else concat(lit(s"x${c}_"), col("props"))).as("props"))
-        }.reduce(_.unionByName(_))
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(s"$out/events.parquet")
-        stageScaledDocs(spark, out, copies)
-      }
-      val qs = args.drop(1).find(_.startsWith("only="))
-        .map(_.stripPrefix("only=").split(",").toSeq)
-        .getOrElse(Seq("q155_sft_curate", "q156_sft_counters",
-          "q157_pref_pairs", "q160_pref_counters", "q161_pref_sequences",
-          // r17: the packing policies at the TAGGED staging (appended-
-          // shard offsets under content-diverse copies) + the round's
-          // new RL/export/multimodal queries
-          "q158_oversize_split", "q159_writer_manifest", "q162_oversize_truncate",
-          "q165_turn_advantages", "q166_bestofn_sequences",
-          "q167_multimodal_pair_dedup", "q168_pref_tensor_manifest",
-          "q169_group_advantages_std", "q170_bestofn_counters",
-          "q171_binary_feedback", "q172_curriculum_order",
-          // r18: the bounded-window curriculum re-measures under the
-          // same row; the manifest/PRM/audio additions join the board
-          "q173_bestofn_manifest", "q174_turn_advantages_rewards",
-          "q175_audio_pair_dedup", "q176_prm_sequences",
-          "q177_manifest_check", "q179_curriculum_resume",
-          "q180_manifest_check_bestfit",
-          // r19: quarantine, interleaved multimodal, discounted returns,
-          // attention segments
-          "q181_manifest_quarantine", "q182_interleaved_sequences",
-          "q183_returns_to_go", "q184_attention_segments",
-          "q185_bestfit_segments",
-          // r20: manifest repair (both layouts — q186 also covers the
-          // split quarantine's century, the r19 verdict #6 ask), the
-          // interleaved best-fit export, RTG value targets
-          "q186_manifest_repair", "q187_manifest_repair_bestfit",
-          "q188_interleaved_bestfit", "q189_prm_rtg_sequences",
-          "q190_curriculum_quarantine", "q191_curriculum_repair",
-          "q192_multimodal_sft"))
-      qs.foreach { q =>
-        val (rows, t) = runFreshChild(q, out)
-        println(f"[sftcentury] ${copies}x $q rows=$rows t=$t%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("evictstream")) {
-      // the EVICTION TWINS under a replayed log at scale (the r19
-      // verdict #6 ask): the staged events file-streamed in micro-
-      // batches plus a far-future FLUSH file written last (file sources
-      // order by modification time), so every main key quiesces and
-      // closes; each twin's closed rows are compared against its batch
-      // reduction over the main rows — stream == batch at volume, and
-      // the wall clock is the throughput row. copies=1 reads sf0.1
-      // directly; copies=N reuses the sftcentury staging (tagged props
-      // → prompt cardinality scales with the copies, the unbounded-
-      // keyspace regime these twins exist for).
-      import org.apache.spark.sql.streaming.OutputMode
-      import graft.streaming.StreamingOps
-      val copies = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(100)
-      val src =
-        if (copies <= 1) s"$sfDir/events.parquet"
-        else {
-          val p = s"tmp/sfx${copies}sft/events.parquet"
-          require(new java.io.File(p).exists(),
-            s"stage first: Profile sftcentury $copies reuse (writes $p)")
-          p
-        }
-      val evRaw = spark.read.parquet(src)
-      val ev0 = (evRaw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          evRaw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _ => evRaw.withColumn("ts", col("ts").cast("timestamp"))
-      })
-        .filter(col("ts").isNotNull)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("props"), col("ts"))
-        .persist()
-      println(s"[evictstream] ${copies}x rows=${ev0.count()}")
-      val stage = java.nio.file.Files.createTempDirectory("evict_stream").toString
-      ev0.repartition(4).write.mode("overwrite").parquet(stage)
-      // the flush: one far-future row, non-null value so no filter
-      // drops it before it advances the watermark; written AFTER the
-      // main files so it lands in the last trigger
-      val maxTs = ev0.agg(max(col("ts"))).head().getTimestamp(0)
-      val flushTs = new java.sql.Timestamp(maxTs.getTime + 10L * 86400000L)
-      Thread.sleep(1100) // mod-time ordering granularity
-      import spark.implicits._
-      Seq((-1L, -1L, "zflush", Some(0.0), "zzz_flush", flushTs))
-        .toDF("event_id", "user_id", "event_type", "value", "props", "ts")
-        .write.mode("append").parquet(stage)
-      def replay(name: String)(mk: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-        val stream = spark.readStream.schema(ev0.schema)
-          .option("maxFilesPerTrigger", 2).parquet(stage)
-        val q = mk(stream).writeStream.format("memory")
-          .queryName(s"evict_$name").outputMode(OutputMode.Append()).start()
-        val t0 = System.nanoTime()
-        q.processAllAvailable()
-        val wall = (System.nanoTime() - t0) / 1e9
-        q.stop()
-        val closed = spark.table(s"evict_$name")
-        println(f"[evictstream] $name wall=$wall%.2fs closed=${closed.count()}")
-        closed
-      }
-      def cmp(name: String, got: org.apache.spark.sql.DataFrame,
-          want: org.apache.spark.sql.DataFrame): Unit = {
-        val g = got.collect().map(_.toSeq).toSet
-        val w = want.collect().map(_.toSeq).toSet
-        println(s"[evictstream] $name stream==batch: ${
-          if (g == w) "MATCH"
-          else s"MISMATCH stream_only=${(g -- w).size} batch_only=${(w -- g).size}"}")
-      }
-      val quiesce = 10L * 60000L
-      // 1. trajectorySignalFinalStream (grp = props, traj = user_id)
-      val traj = replay("traj")(s =>
-        StreamingOps.trajectorySignalFinalStream(
-          s, "props", "user_id", "value", "ts", quiesce, "5 minutes"))
-      cmp("traj",
-        traj.filter(col("grp") =!= "zzz_flush"),
-        graft.scale.Dialogue.turnSignalReduce(
-          ev0.select(col("props").cast("string").as("grp"),
-            col("user_id").as("traj"), col("value")),
-          "grp", "traj", "value"))
-      // 2. feedbackClassCountsFinalStream
-      val fb = replay("fb")(s =>
-        StreamingOps.feedbackClassCountsFinalStream(
-          s, "props", "value", 50.0, "ts", quiesce, "5 minutes"))
-      cmp("fb",
-        fb.filter(col("prompt") =!= "zzz_flush"),
-        StreamingOps.feedbackClassCountsStream(
-          ev0.select(col("props").cast("string").as("prompt"), col("value")),
-          "prompt", "value", 50.0)
-          .select(col("prompt"), col("n_desirable"), col("n_undesirable")))
-      // 3. driftBucketCountsFinalStream (snapshot = event_type)
-      val drift = replay("drift")(s =>
-        StreamingOps.driftBucketCountsFinalStream(
-          s, "props", "event_type", "ts", quiesce, 4096, "5 minutes"))
-      val wantDrift = ev0
-        .select(col("event_type").cast("string").as("snap"),
-          explode(expr("regexp_extract_all(lower(props), '[a-z0-9]+', 0)"))
-            .as("tok"))
-        .select(col("snap"),
-          graft.scale.TextStats.hashBucket(col("tok"), 4096).as("b"))
-        .groupBy(col("snap"), col("b"))
-        .agg(count(lit(1)).as("p_cnt"))
-      // the per-snapshot law against the REAL batch op (not the inline
-      // mirror): spot-pin one snapshot through tokenBucketCounts
-      val snap0 = ev0.select(col("event_type")).head().getString(0)
-      cmp(s"drift[$snap0]==tokenBucketCounts",
-        drift.filter(col("snap") === snap0).select(col("b"), col("p_cnt")),
-        graft.scale.Sampling.tokenBucketCounts(
-          ev0.filter(col("event_type") === snap0).select(col("props")),
-          "props", 4096, "p_cnt"))
-      cmp("drift", drift.filter(col("snap") =!= "zflush"), wantDrift)
-      ev0.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("semauto")) {
-      // the √N-law measurement: semDedup with the AUTO stride (nlist
-      // tracks √N) vs the fixed oracle stride 64 (nlist ∝ N), at sf0.1
-      // and the staged 10x embeddings (requires tmp/sf1full from
-      // sf1bench staging)
-      Seq("/root/testdata/sf0.1" -> "sf0.1", "tmp/sf1full" -> "sf1(10x)").foreach {
-        case (dir, tag) =>
-          val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-          Seq("auto" -> 0L, "fixed64" -> 64L).foreach { case (mode, stride) =>
-            var rows = 0L
-            val times = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              rows = graft.scale.Similarity
-                .semDedup(emb, "vec_id", "embedding", 0.42, centroidStride = stride)
-                .count()
-              val dt = (System.nanoTime() - t0) / 1e9
-              graft.ops.CacheScope.releaseAll()
-              dt
-            }
-            println(f"[semauto] $tag $mode keep=$rows t=${times.min}%.2fs")
-          }
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("scale23")) {
-      // scaling behavior of the MinHash-LSH pipeline: same operator at
-      // 1x and 10x the doc count (ids offset so copies are exact dups
-      // of distinct docs — candidate pairs grow ~linearly x copies^2
-      // within buckets of identical docs)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      Seq(1, 10).foreach { copies =>
-        val scaled = (0 until copies)
-          .map(c => docs.select((col("doc_id") + lit(c * 1000000)).as("doc_id"), col("text")))
-          .reduce(_.unionByName(_))
-          .repartition(spark.sparkContext.defaultParallelism)
-        val t0 = System.nanoTime()
-        val n = graft.scale.Dedup
-          .minhashPairsExact(scaled, "doc_id", "text", 3, 16, 8, 0.2)
-          .count()
-        println(f"[demo] scale23 copies=$copies docs=${5000 * copies} pairs=$n t=${(System.nanoTime() - t0) / 1e9}%.1fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("sf1smoke")) {
-      // Measured decade for the heavy scale queries: stage a 10x sf0.1
-      // corpus and time each query at both SFs (best-of-2, caches
-      // released between runs, exactly as Bench does).
-      //
-      // The scaling is STRUCTURE-PRESERVING, not copy-paste: exact
-      // copies would put 10 identical docs in every MinHash bucket and
-      // grow pair counts ~copies^2 — a data artifact, not an engine
-      // property. Instead each copy c>0 prefixes every token with a
-      // copy tag (shingle sets across copies are disjoint, so each
-      // copy reproduces sf0.1's near-dup density and candidate counts
-      // scale ~linearly), and each embedding copy applies a per-copy
-      // diagonal +-1 sign transform (within-copy cosines are exactly
-      // preserved; cross-copy vectors decorrelate).
-      val out = "tmp/sf1"
-      val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-      stageScaledDocs(spark, out, copies)
-      stageScaledEmbeddings(spark, out, copies)
-      val qs = Seq("q23_lsh_pairs", "q24_simhash", "q25_ann_lsh",
-        "q38_embed_neardup", "q50_dedup_cluster", "q56_incr_dedup",
-        "q68_decontam", "q69_repetition", "q70_boilerplate", "q72_neardup_keep")
-      // JIT/codegen warmup on the smallest SF (as Bench does)
-      qs.foreach { q =>
-        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-        graft.ops.CacheScope.releaseAll()
-      }
-      Seq("/root/testdata/sf0.1" -> "sf0.1", out -> s"sf1(${copies}x)").foreach {
-        case (dir, tag) =>
-          qs.foreach { q =>
-            var rows = 0L
-            val times = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              rows = SparkEntry.queries(q)(spark, dir).count()
-              val dt = (System.nanoTime() - t0) / 1e9
-              graft.ops.CacheScope.releaseAll()
-              dt
-            }
-            println(f"[sf1smoke] $tag $q rows=$rows t=${times.min}%.2fs")
-          }
-          // q38's oracle threshold (0.42) sits in the BULK TAIL of the
-          // isotropic test embeddings (P[cos>0.42] ~ 2e-4), so its
-          // output is quadratic in N by construction — and its 3-bit
-          // band space (2^3 buckets) makes CANDIDATES quadratic too.
-          // Time the production regime as well: high threshold + 16-bit
-          // bands, where the band space exceeds N and candidate work
-          // stays ~linear.
-          var rows80 = 0L
-          val t80 = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            rows80 = graft.scale.Similarity.cosineNearDupPairs(
-              spark.read.parquet(s"$dir/embeddings.parquet"),
-              "vec_id", "embedding", 0.8, numPlanes = 160, bands = 10, dims = 64).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            graft.ops.CacheScope.releaseAll()
-            dt
-          }
-          println(f"[sf1smoke] $tag q38@t0.8/16bit rows=$rows80 t=${t80.min}%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("ivfprobe")) {
-      // stage breakdown of the q93 trained-IVF path at SPARK_GRAFT_SF_DIR
-      import graft.scale.{KMeans, Similarity}
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val probes = emb.filter(col("vec_id") % 101 === 0)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"[ivfprobe] $tag n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      time("centroids") {
-        KMeans.trainedCentroids(emb, "vec_id", "embedding", k = 8, iters = 2).count()
-      }
-      graft.ops.CacheScope.releaseAll()
-      val cents = KMeans.trainedCentroids(emb, "vec_id", "embedding", k = 8, iters = 2)
-      time("full") {
-        Similarity.ivfTopKWithCentroids(
-          emb, probes, cents, "vec_id", "embedding", k = 5, nprobe = 2).count()
-      }
-      graft.ops.CacheScope.releaseAll()
-      time("full2") {
-        Similarity.ivfTopKWithCentroids(
-          emb, probes, cents, "vec_id", "embedding", k = 5, nprobe = 2).count()
-      }
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("retrievalcap")) {
-      // q90's degenerate-vocabulary robustness measurement: time the
-      // PRODUCTION retrieval shape (df-ceiling engaged) vs the oracle
-      // shape (cap disabled) over SPARK_GRAFT_SF_DIR's documents. The
-      // staged 10x/100x corpora share the base fixture vocabulary
-      // across copies (the copy tag becomes its own token under the
-      // [a-z0-9]+ tokenizer), so the uncapped shape's scored pairs grow
-      // ~quadratically with corpus size — exactly the wall the
-      // stop-word cut bounds. Pass "both" to also time the uncapped
-      // shape (affordable up to ~10x only); a bare number overrides the
-      // default 300 permille ceiling.
-      val cap = args.drop(1).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(300)
-      val runUncapped = args.contains("both")
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-      val queries = docs
-        .filter(col("doc_id") % 101 === 0)
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(
-            regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0)), 1, 8),
-            " ").as("qtext"))
-      val shapes = Seq(s"capped$cap" -> cap) ++
-        (if (runUncapped) Seq("uncapped" -> 1000) else Nil)
-      shapes.foreach { case (tag, mp) =>
-        var rows = 0L
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          rows = graft.scale.Retrieval.searchTopK(
-            docs, queries, "doc_id", "text", "query_id", "qtext", 5,
-            maxDfPermille = mp).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          dt
-        }
-        println(f"[retrievalcap] $sfDir $tag rows=$rows t=${times.min}%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("lshstages")) {
-      // q72/q107 stage breakdown: signatures -> candidate pairs ->
-      // verified pairs -> CC keep, each timed from cold (caches
-      // released), best-of-2, at SPARK_GRAFT_SF_DIR
-      import graft.scale.Dedup
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-      def time(tag: String)(f: => Long): Unit = {
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val n = f
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          (dt, n)
-        }
-        println(f"[lshstages] $tag n=${times.head._2} t=${times.map(_._1).min}%.2fs")
-      }
-      time("signatures") {
-        Dedup.minhashSignatures(docs, "doc_id", "text", 3, 16).count()
-      }
-      time("verified_pairs") {
-        Dedup.minhashPairsExact(docs, "doc_id", "text", 3, 16, 8, 0.2).count()
-      }
-      time("cc_keep_q72") {
-        Dedup.dedupByCluster(docs.select("doc_id"),
-          Dedup.minhashPairsExact(docs, "doc_id", "text", 3, 16, 8, 0.2),
-          "doc_id").count()
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("pqlaw")) {
-      // IVFADC coarse-list law: the ORACLE shape's fixed coarseK=8 vs
-      // coarseK ≈ √N, same nprobe — candidates per query scale
-      // N·nprobe/coarseK, so √N lists hold the ~N^1.5 end-to-end curve
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val n = emb.count()
-      val sqrtK = math.max(8, math.round(math.sqrt(n.toDouble)).toInt)
-      Seq("fixed8" -> 8, s"sqrtN$sqrtK" -> sqrtK).foreach { case (tag, ck) =>
-        var rows = 0L
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          rows = graft.scale.PQ.ivfAdcTopK(
-            emb, emb.filter(col("vec_id") % 101 === 0),
-            "vec_id", "embedding", coarseK = ck, nprobe = 2, m = 2, k = 4,
-            topK = 5).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          dt
-        }
-        println(f"[pqlaw] $sfDir $tag rows=$rows t=${times.min}%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("mixppm")) {
-      // q94's century starvation vs the ppm regime: same 200-doc budget
-      // at per-mille and per-million resolution over SPARK_GRAFT_SF_DIR
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      Seq(1000L, 1000000L).foreach { res =>
-        val t0 = System.nanoTime()
-        val n = graft.scale.TextStats
-          .temperatureMixAtResolution(docs, "doc_id", "lang", 200L, res).count()
-        println(f"[mixppm] $sfDir res=$res rows=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("sigprobe")) {
-      // why does the 160-plane signature cost ~11s for 20k vectors?
-      // isolate the signature projection and check codegen coverage
-      val emb = spark.read.parquet("tmp/sf1/embeddings.parquet")
-      Seq(16, 160).foreach { np =>
-        val w = graft.scale.Similarity.planeWeights(np, 64)
-        val df = emb.select(
-          graft.scale.Similarity
-            .planeSignature(col("embedding").cast("array<double>"), w).as("sig"))
-        val plan = df.queryExecution.executedPlan.treeString
-        println(s"[sigprobe] planes=$np wholestage=${plan.contains("WholeStageCodegen")}")
-        (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val n = df.agg(count(col("sig"))).head().getLong(0)
-          println(f"[sigprobe] planes=$np run$i n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        }
-        (1 to 3).foreach { i =>
-          val t0 = System.nanoTime()
-          val n = graft.scale.Similarity.cosineNearDupPairs(
-            emb, "vec_id", "embedding", 0.8, numPlanes = np, bands = np / 16 max 2,
-            dims = 64).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          println(f"[sigprobe] planes=$np FULL run$i pairs=$n t=$dt%.2fs")
-        }
-        // stage breakdown at this plane count
-        val bands = np / 16 max 2
-        val rpb = np / bands
-        val w2 = graft.scale.Similarity.planeWeights(np, 64)
-        val sig = emb
-          .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
-          .withColumn("sig", graft.scale.Similarity.planeSignature(col("v"), w2))
-          .withColumn("norm", graft.scale.Similarity.l2Norm(col("v")))
-          .persist()
-        var t0 = System.nanoTime()
-        sig.count()
-        println(f"[sigprobe] planes=$np stage:sig+persist t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        val banded = sig.select(col("id"),
-          explode(array((0 until bands).map { b =>
-            struct(lit(b).as("band_idx"),
-              substring(col("sig"), b * rpb + 1, rpb).as("band_sig"))
-          }: _*)).as("band"))
-          .select(col("id"), col("band.band_idx").as("band_idx"),
-            col("band.band_sig").as("band_sig"))
-        t0 = System.nanoTime()
-        banded.count()
-        println(f"[sigprobe] planes=$np stage:banded t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        val cand = banded.groupBy("band_idx", "band_sig")
-          .agg(collect_list(col("id")).as("ids"))
-          .filter(size(col("ids")).between(2, 1000))
-          .select(explode(col("ids")).as("id_a"), col("ids"))
-          .select(col("id_a"), explode(col("ids")).as("id_b"))
-          .filter(col("id_a") < col("id_b"))
-          .distinct()
-        t0 = System.nanoTime()
-        val nc = cand.count()
-        println(f"[sigprobe] planes=$np stage:candidates n=$nc t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        sig.unpersist()
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("sf1bench")) {
-      // FULL 10x bench: stage EVERY table at 10x sf0.1 and time EVERY
-      // query at both SFs (best-of-2, caches released between runs).
-      // TPC-H tables + events scale by key-disjoint copies: every key
-      // column gets a per-copy offset (1e8 * c, far above any sf0.1
-      // key, and a multiple of 64 so q44's stride-picked centroids
-      // scale linearly too), applied CONSISTENTLY across tables so
-      // foreign keys keep joining copy-locally. region/nation stay 1x:
-      // they are fixed-cardinality dims (25/5 rows at every TPC-H SF)
-      // and nationkey is not offset anywhere. documents/embeddings use
-      // the structure-preserving staging (see stageScaledDocs/
-      // stageScaledEmbeddings). Fixture-file queries (q45/q57/q64/q66/
-      // q67/q74) read committed XML/TSV/media that do not scale with
-      // SF — their ratio ~1 is expected, kept for completeness.
-      // extra args: "reuse" skips staging when the staged dir exists;
-      // "only=qA,qB" restricts the timed set; a bare number = copies
-      // (10 = the sf1 decade under tmp/sf1full, 100 = the sf10 century
-      // under tmp/sfx100); "fresh" forks ONE CHILD JVM PER QUERY
-      // (best-of-2 inside each child) — the adjudication-grade protocol,
-      // immune to cross-query JVM contamination by construction
-      val extra = args.drop(1)
-      val copies = extra.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(10)
-      val out = if (copies == 10) "tmp/sf1full" else s"tmp/sfx$copies"
-      val only: Option[Set[String]] =
-        extra.find(_.startsWith("only=")).map(_.stripPrefix("only=").split(",").toSet)
-      val fresh = extra.contains("fresh")
-      val reuse = extra.contains("reuse") && new java.io.File(s"$out/lineitem.parquet").exists()
-      val off = 100000000L
-      def stage(table: String, keyCols: Seq[String]): Unit = {
-        val df = spark.read.parquet(s"/root/testdata/sf0.1/$table.parquet")
-        (0 until copies).map { c =>
-          df.select(df.columns.toSeq.map { cn =>
-            if (keyCols.contains(cn)) (col(cn) + lit(c * off)).as(cn) else col(cn)
-          }: _*)
-        }.reduce(_.unionByName(_))
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode("overwrite").parquet(s"$out/$table.parquet")
-      }
-      if (!reuse) {
-        stage("region", Seq.empty)
-        stage("nation", Seq.empty)
-        stage("customer", Seq("c_custkey"))
-        stage("supplier", Seq("s_suppkey"))
-        stage("part", Seq("p_partkey"))
-        stage("orders", Seq("o_orderkey", "o_custkey"))
-        stage("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
-        stage("events", Seq("event_id", "user_id"))
-        stageScaledDocs(spark, out, copies)
-        stageScaledEmbeddings(spark, out, copies)
-      }
-      // q38's ORACLE shape disables the bucket cap for 1:1 DuckDB
-      // fidelity; at 10x its bulk-tail threshold + 3-bit band space
-      // make candidates quadratic BY MATH (BASELINE sf1 smoke, r8).
-      // The bench times the PRODUCTION shape — the default maxBucket
-      // cap — at BOTH SFs; at sf0.1 no bucket reaches the cap, so the
-      // result set is identical to the oracle shape there.
-      val overrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-        Map("q38_embed_neardup" -> ((s: SparkSession, dir: String) =>
-          graft.scale.Similarity.cosineNearDupPairs(
-            s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding", 0.42,
-            numPlanes = 30, bands = 10, dims = 64)))
-      def runQ(q: String, dir: String): Long =
-        overrides.getOrElse(q, SparkEntry.queries(q))(spark, dir).count()
-      val qs = SparkEntry.queries.keys.toSeq.sorted
-        .filter(q => only.forall(_.contains(q)))
-      val dirs = Seq("/root/testdata/sf0.1" -> "sf0.1", out -> s"${copies}x")
-      if (fresh) {
-        // demonstrate the CC size switch at this scale: q101's edge
-        // fixture vs the DEFAULT driver union-find threshold (q101
-        // itself passes 100 explicitly; past 2M edges even the default
-        // takes the distributed propagation path)
-        val ev = spark.read.parquet(s"$out/events.parquet").select(col("event_id"))
-        val nEdges = ev.filter(col("event_id") % 10 <= 2).count() +
-          ev.filter(col("event_id") % 20 === 0).count()
-        println(s"[sf1bench] q101 edge fixture at ${copies}x: $nEdges edges " +
-          s"(default driver union-find threshold 2000000 -> " +
-          s"${if (nEdges > 2000000) "DISTRIBUTED" else "driver"} path)")
-        val results = dirs.map { case (dir, tag) =>
-          tag -> qs.map { q =>
-            val (rows, t) = runFreshChild(q, dir)
-            println(f"[sf1bench-fresh] $tag $q rows=$rows t=$t%.2fs")
-            q -> (rows, t)
-          }.toMap
-        }
-        val (base, scaled) = (results.head._2, results.last._2)
-        println("[sf1bench-fresh] ==== ratio table (markdown) ====")
-        qs.foreach { q =>
-          val (r0, t0) = base(q)
-          val (r1, t1) = scaled(q)
-          println(f"| $q | $r0 | $t0%.2f s | $r1 | ${t1 / t0}%.1fx (${t1}%.2f s) |")
-        }
-        val tot0 = base.values.map(_._2).sum
-        val tot1 = scaled.values.map(_._2).sum
-        println(f"[sf1bench-fresh] TOTAL sf0.1=${tot0}%.1fs ${copies}x=${tot1}%.1fs " +
-          f"ratio=${tot1 / tot0}%.1fx")
-        spark.stop()
-        return
-      }
-      qs.foreach { q => // JIT/codegen warmup at the smallest SF, as Bench does
-        runQ(q, "/root/testdata/sf0.001")
-        graft.ops.CacheScope.releaseAll()
-      }
-      val results = dirs.map {
-        case (dir, tag) =>
-          tag -> qs.map { q =>
-            var rows = 0L
-            val times = (1 to 2).map { _ =>
-              val t0 = System.nanoTime()
-              rows = runQ(q, dir)
-              val dt = (System.nanoTime() - t0) / 1e9
-              graft.ops.CacheScope.releaseAll()
-              dt
-            }
-            println(f"[sf1bench] $tag $q rows=$rows t=${times.min}%.2fs")
-            System.gc() // outside the timed window — see Bench's tail note
-            q -> (rows, times.min)
-          }.toMap
-      }
-      val (base, scaled) = (results.head._2, results.last._2)
-      println("[sf1bench] ==== ratio table (markdown) ====")
-      qs.foreach { q =>
-        val (r0, t0) = base(q)
-        val (r1, t1) = scaled(q)
-        println(f"| $q | $r0 | $t0%.2f s | $r1 | ${t1 / t0}%.1fx (${t1}%.2f s) |")
-      }
-      val tot0 = base.values.map(_._2).sum
-      val tot1 = scaled.values.map(_._2).sum
-      println(f"[sf1bench] TOTAL sf0.1=${tot0}%.1fs sf1=${tot1}%.1fs ratio=${tot1 / tot0}%.1fx")
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("frontier")) {
-      // the recall-vs-cost frontier harness: sweep the LSH banding knob
-      // and the IVF probe knob over SPARK_GRAFT_SF_DIR, timing the
-      // production operator per setting (best-of-2, caches released)
-      // and reading recall from the deterministic sweep frames — the
-      // (knob, recall, seconds) triples BASELINE records.
-      // Century knobs (defaults preserve the recorded 10x protocol):
-      //   SPARK_GRAFT_FRONTIER_SAMPLE  recall-truth sample permille
-      //     (the n-gram ground-truth join is the quadratic-prone part;
-      //     timing always runs the FULL corpus)
-      //   SPARK_GRAFT_FRONTIER_PROBE_MOD  vec_id % MOD === 0 probe set
-      //   SPARK_GRAFT_FRONTIER_NPROBES  comma list for the IVF sweep
-      import graft.scale.{Dedup, Similarity}
-      val samplePermille = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_SAMPLE", "1000").toInt
-      val probeMod = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_PROBE_MOD", "50").toLong
-      val nprobes = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_NPROBES", "1,2,4,8")
-        .split(",").map(_.trim.toInt).toSeq
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-      val bandsList = Seq(2, 4, 8, 16)
-      val lshRecall = Dedup.recallSweep(docs, "doc_id", "text", bandsList = bandsList,
-        samplePermille = samplePermille)
-        .collect().map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4))).toMap
-      graft.ops.CacheScope.releaseAll()
-      bandsList.foreach { b =>
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          Dedup.minhashPairsExact(docs, "doc_id", "text", 3, 16, b, 0.2).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          dt
-        }
-        val (pairs, rec) = lshRecall(b.toLong)
-        println(f"[frontier] lsh bands=$b pairs=$pairs recall_milli=$rec t=${times.min}%.2fs")
-      }
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val probes = emb.filter(col("vec_id") % probeMod === 0)
-      val ivfRecall = Similarity.annRecallSweep(
-        emb, probes, "vec_id", "embedding", k = 5, nprobeList = nprobes)
-        .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
-      graft.ops.CacheScope.releaseAll()
-      nprobes.foreach { np =>
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          Similarity.ivfTopK(emb, probes, "vec_id", "embedding", 5, nprobe = np).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.CacheScope.releaseAll()
-          dt
-        }
-        val (hit, rec) = ivfRecall(np.toLong)
-        println(f"[frontier] ivf nprobe=$np hits=$hit recall_milli=$rec t=${times.min}%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("pretrainstages")) {
-      // q115 stage breakdown at SPARK_GRAFT_SF_DIR: time each pipeline
-      // stage's materialization from cold (caches released between),
-      // mirroring Curation.pretrainCurate's frames
-      import graft.scale.{Curation, Dedup, TextStats}
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val docs = docs0.filter(col("doc_id") % 11 =!= 0)
-        .select(col("doc_id"), col("text"),
-          expr("substring(source, 4)").cast("long").as("priority"), col("lang"))
-        .repartition(spark.sparkContext.defaultParallelism)
-      val holdout = docs0.filter(col("doc_id") % 11 === 0)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"[pretrainstages] $tag n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      val chunks = TextStats.chunkByTokens(docs, "doc_id", "text", 32, 16,
-        carryCols = Seq("priority", "lang"))
-        .withColumn("chunk_id", col("doc_id") * 65536L + col("chunk_idx"))
-        .persist()
-      time("chunk")(chunks.count())
-      val pairsX = Dedup.minhashPairsExact(
-        chunks.select(col("chunk_id"), col("chunk_text")),
-        "chunk_id", "chunk_text", 3, 16, 8, 0.6)
-        .filter(expr("(id_a div 65536) != (id_b div 65536)")).persist()
-      time("lsh_pairs")(pairsX.count())
-      val reps = Dedup.connectedComponents(pairsX, "id_a", "id_b")
-        .withColumnRenamed("id", "chunk_id").persist()
-      time("cc")(reps.count())
-      val ded = Dedup.dedupByClusterPriorityWithReps(chunks, reps, "chunk_id", "priority").persist()
-      time("priority_dedup")(ded.count())
-      val clean = ded.join(
-        Dedup.decontaminate(ded,
-          holdout.select(col("doc_id").as("chunk_id"), col("text").as("chunk_text")),
-          "chunk_id", "chunk_text", 4).select("chunk_id"),
-        Seq("chunk_id"), "left_anti").persist()
-      time("decontam")(clean.count())
-      // same corpus-quantile gate as the shipped pretrainCurate (the
-      // absolute-ceiling version predated the 100× quantile fix and no
-      // longer mirrored the pipeline it times)
-      val scored = TextStats.bigramSurprisal(clean, "chunk_id", "chunk_text")
-      val cutoff = scored.agg(
-        expr("percentile(avg_surp, 0.9D)").as("surp_cut"))
-      val gated = clean.join(
-        scored.crossJoin(broadcast(cutoff))
-          .filter(col("avg_surp") <= col("surp_cut")).select("chunk_id"),
-        Seq("chunk_id"), "left_semi").persist()
-      time("surprisal_gate")(gated.count())
-      val mixed = TextStats.temperatureMixAtResolution(gated, "chunk_id", "lang", 400L, 1000000L)
-      time("mix")(mixed.count())
-      val split = graft.scale.Sampling.leakageSafeSplitWithReps(
-        gated.select("chunk_id"), reps, "chunk_id", 100, 100)
-      time("split")(split.count())
-      time("full_q115")(SparkEntry.queries("q115_pretrain_curate")(spark, sfDir).count())
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("planprof")) {
-      // driver-side vs executor-side split for a query: time the plan
-      // CONSTRUCTION (fn call — analysis + any eager .rdd planning in
-      // CacheScope.cut) separately from the action, twice each
-      val qs = args.drop(1).headOption.map(_.split(",").toSeq)
-        .getOrElse(Seq("q155_sft_curate"))
-      qs.foreach { q =>
-        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-        graft.ops.CacheScope.releaseAll()
-        (1 to 2).foreach { i =>
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(q)(spark, sfDir)
-          val t1 = System.nanoTime()
-          val rows = df.count()
-          val t2 = System.nanoTime()
-          graft.ops.CacheScope.releaseAll()
-          println(f"[planprof] $q run$i rows=$rows construct=${(t1 - t0) / 1e9}%.2fs " +
-            f"action=${(t2 - t1) / 1e9}%.2fs")
-        }
-        System.gc()
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("sqlprof")) {
-      // per-OPERATOR attribution for one query: run warm, then walk the
-      // executed (AQE-final) physical plan and print every node's SQL
-      // metrics — the UI SQL-tab stand-in. Time-like metrics are in ms.
-      val q = args.drop(1).headOption.getOrElse("q115_pretrain_curate")
-      val minMs = args.drop(2).headOption.map(_.toLong).getOrElse(200L)
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").count()
-      graft.ops.CacheScope.releaseAll()
-      SparkEntry.queries(q)(spark, sfDir).count()
-      graft.ops.CacheScope.releaseAll()
-      val df = SparkEntry.queries(q)(spark, sfDir)
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[sqlprof] $q rows=$rows wall=$wall%.2fs (metrics >= ${minMs}ms)")
-      def walk(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
-        val interesting = p.metrics.filter { case (k, m) =>
-          (k.contains("time") || k.contains("Time") || k == "numOutputRows") &&
-            m.value > 0
-        }
-        val times = interesting.filter { case (k, _) => k != "numOutputRows" }
-        val maxT = if (times.nonEmpty) times.values.map(_.value).max else 0L
-        if (maxT >= minMs) {
-          val ms = interesting.map { case (k, m) =>
-            s"$k=${m.value}"
-          }.mkString(" ")
-          println(s"[sqlprof] ${"  " * depth}${p.nodeName}: $ms")
-        }
-        p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            walk(a.executedPlan, depth + 1)
-          case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            walk(s.plan, depth + 1)
-          case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-            () // metrics live on the original
-          case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-            walk(i.relation.cachedPlan, depth + 1)
-          case _ => p.children.foreach(walk(_, depth + 1))
-        }
-        p.subqueries.foreach(walk(_, depth + 1))
-      }
-      walk(df.queryExecution.executedPlan, 0)
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("lshchunk")) {
-      // candidate-pair composition of the chunk-pipeline LSH: how many
-      // LSH candidates are SAME-DOC overlapping-window pairs (verified
-      // then discarded by the caller's cross-doc filter) vs cross-doc
-      import graft.scale.{Dedup, TextStats}
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val chunks = TextStats.chunkByTokens(
-        docs0.filter(col("doc_id") % 11 =!= 0)
-          .repartition(spark.sparkContext.defaultParallelism),
-        "doc_id", "text", 32, 16)
-        .withColumn("chunk_id", col("doc_id") * 65536L + col("chunk_idx"))
-        .select(col("chunk_id"), col("chunk_text")).persist()
-      println(s"[lshchunk] chunks=${chunks.count()}")
-      var t0 = System.nanoTime()
-      val sig = Dedup.minhashSignatures(chunks, "chunk_id", "chunk_text", 3, 16).persist()
-      println(f"[lshchunk] sigs=${sig.count()} t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      // reproduce the band/bucket/pair internals (bands=8, cap 1000)
-      val rowsPerBand = 2
-      val keys = (0 until 8).map { b =>
-        val slice = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-        md5(concat(lit(s"$b:"), concat_ws(",", slice: _*)).cast("binary"))
-      }
-      val banded = sig.select(col("id"), explode(array(keys: _*)).as("band"))
-      t0 = System.nanoTime()
-      val buckets = banded.groupBy("band")
-        .agg(collect_list(col("id")).as("ids"))
-        .filter(size(col("ids")) >= 2)
-      val pairs = buckets
-        .select(explode(col("ids")).as("id_a"), col("ids"))
-        .select(col("id_a"), explode(filter(col("ids"), x => x > col("id_a"))).as("id_b"))
-        .distinct().persist()
-      val nPairs = pairs.count()
-      val nSame = pairs.filter(expr("(id_a div 65536) = (id_b div 65536)")).count()
-      println(f"[lshchunk] candidates=$nPairs same_doc=$nSame t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-      val full = Dedup.minhashPairsExact(chunks, "chunk_id", "chunk_text", 3, 16, 8, 0.6)
-        .filter(expr("(id_a div 65536) != (id_b div 65536)")).count()
-      println(f"[lshchunk] full_verified_crossdoc=$full t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("incrstages")) {
-      // q121 stage breakdown at SPARK_GRAFT_SF_DIR: time each
-      // pretrainCurateIncrement stage's materialization, mirroring the
-      // pipeline's own frames (the pretrainstages convention)
-      import graft.scale.{Curation, Dedup, TextStats}
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val storeChunks = TextStats.chunkByTokens(
-        docs0.filter(col("doc_id") % 11 =!= 0 && col("doc_id") % 3 =!= 0)
-          .repartition(spark.sparkContext.defaultParallelism),
-        "doc_id", "text", 32, 16, carryCols = Seq("lang"))
-        .withColumn("chunk_id", col("doc_id") * 65536L + col("chunk_idx"))
-        .select(col("chunk_id"), col("chunk_text"), col("lang")).persist()
-      val batch = docs0.filter(col("doc_id") % 11 =!= 0 && col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"),
-          expr("substring(source, 4)").cast("long").as("priority"), col("lang"))
-        .repartition(spark.sparkContext.defaultParallelism)
-      val holdout = docs0.filter(col("doc_id") % 11 === 0)
-      def time(tag: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"[incrstages] $tag n=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      time("store_chunks")(storeChunks.count())
-      val chunks = TextStats.chunkByTokens(batch, "doc_id", "text", 32, 16,
-        carryCols = Seq("priority", "lang"))
-        .withColumn("chunk_id", col("doc_id") * 65536L + col("chunk_idx"))
-        .persist()
-      time("batch_chunks")(chunks.count())
-      val pairs = Dedup.minhashPairsExact(
-        chunks.select(col("chunk_id"), col("chunk_text")),
-        "chunk_id", "chunk_text", 3, 16, 8, 0.6)
-        .filter(expr("(id_a div 65536) != (id_b div 65536)")).persist()
-      time("batch_lsh_pairs")(pairs.count())
-      val reps = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .withColumnRenamed("id", "chunk_id").persist()
-      time("cc")(reps.count())
-      val ded = Dedup.dedupByClusterPriorityWithReps(chunks, reps, "chunk_id", "priority")
-        .persist()
-      time("priority_dedup")(ded.count())
-      val sigStore = Dedup.minhashSignatures(
-        storeChunks.select(col("chunk_id"), col("chunk_text")),
-        "chunk_id", "chunk_text", 3, 16).persist()
-      time("store_sigs")(sigStore.count())
-      val dedAsDocs = ded.select(col("chunk_id"), col("chunk_text"))
-      val batchSigs = Dedup.minhashSignatures(dedAsDocs, "chunk_id", "chunk_text", 3, 16)
-        .persist()
-      time("batch_sigs")(batchSigs.count())
-      val inc = Dedup.nearDupAgainstSignatures(
-        dedAsDocs, storeChunks.select(col("chunk_id"), col("chunk_text")),
-        batchSigs, sigStore,
-        "chunk_id", "chunk_text", 3, 16, 8, 0.6, 1000).persist()
-      time("incumbent_filter")(inc.count())
-      val clean = inc.join(
-        Dedup.decontaminate(inc,
-          holdout.select(col("doc_id").as("chunk_id"), col("text").as("chunk_text")),
-          "chunk_id", "chunk_text", 4).select("chunk_id"),
-        Seq("chunk_id"), "left_anti").persist()
-      time("decontam")(clean.count())
-      val scored = TextStats.bigramSurprisal(clean, "chunk_id", "chunk_text")
-      val cutoff = scored.agg(expr("percentile(avg_surp, 0.9D)").as("surp_cut"))
-      val gated = clean.join(
-        scored.crossJoin(broadcast(cutoff))
-          .filter(col("avg_surp") <= col("surp_cut")).select("chunk_id"),
-        Seq("chunk_id"), "left_semi").persist()
-      time("surprisal_gate")(gated.count())
-      time("full_q121")(SparkEntry.queries("q121_incr_curate")(spark, sfDir).count())
-      graft.ops.CacheScope.releaseAll()
-      time("full_q123")(SparkEntry.queries("q123_incr_counters")(spark, sfDir).count())
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("pqtrained")) {
-      // the trained-√N SERVING century row: the coarse quantizer trains
-      // ONCE on a deterministic hash sample (renumbered dense — the
-      // trainer's first-k init contract), then serves the FULL corpus
-      // through ivfAdcTopKWithCentroids with a FIXED query set — the
-      // production shape q120's oracle deliberately isn't (fixed k=8,
-      // Q=N/101, train-per-query). Knobs: SPARK_GRAFT_TRAIN_SAMPLE
-      // (permille, default 10), SPARK_GRAFT_PQ_NPROBE (default 32).
-      import graft.scale.{KMeans, PQ, TextStats}
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
-      val samplePermille = sys.env.getOrElse("SPARK_GRAFT_TRAIN_SAMPLE", "10").toInt
-      val nprobe = sys.env.getOrElse("SPARK_GRAFT_PQ_NPROBE", "32").toInt
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .repartition(spark.sparkContext.defaultParallelism)
-      val n = emb.count()
-      val kCoarse = math.max(8, math.round(math.sqrt(n.toDouble)).toInt)
-      val sample = emb.filter(
-        TextStats.hashBucket(col("vec_id").cast("string"), 1000) < samplePermille)
-      // dense 0-based renumbering for the trainer (zipWithIndex — the
-      // scaladoc'd upstream contract)
-      val vecType = emb.schema("embedding").dataType
-      val renumbered = spark.createDataFrame(
-        sample.select("embedding").rdd.zipWithIndex.map {
-          case (r, i) => Row(i, r.get(0))
-        },
-        StructType(Seq(
-          StructField("vec_id", LongType), StructField("embedding", vecType))))
-      var t0 = System.nanoTime()
-      val cents = KMeans.trainedCentroids(
-        renumbered, "vec_id", "embedding", k = kCoarse, iters = 2).persist()
-      val nc = cents.count()
-      println(f"[pqtrained] n=$n sample=${samplePermille}permille k=$kCoarse " +
-        f"trained_centroids=$nc train_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      val queries = emb.filter(col("vec_id") % 5000 === 0)
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val rows = PQ.ivfAdcTopKWithCentroids(
-          emb, queries, cents, "vec_id", "embedding",
-          nprobe = nprobe, m = 2, k = 4, topK = 5).count()
-        println(f"[pqtrained] serve run$i nprobe=$nprobe rows=$rows " +
-          f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        graft.ops.CacheScope.releaseAll()
-      }
-      cents.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("incrprod")) {
-      // incremental curation in its PRODUCTION shape: the store's
-      // signature index prebuilt and persisted (vs q121's in-job
-      // convenience build) — the delta is what index maintenance buys
-      import graft.scale.{Curation, Dedup, TextStats}
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val storeChunks = TextStats.chunkByTokens(
-        docs0.filter(col("doc_id") % 11 =!= 0 && col("doc_id") % 3 =!= 0),
-        "doc_id", "text", 32, 16, carryCols = Seq("lang"))
-        .withColumn("chunk_id", col("doc_id") * 65536L + col("chunk_idx"))
-        .select(col("chunk_id"), col("chunk_text"), col("lang")).persist()
-      val batch = docs0.filter(col("doc_id") % 11 =!= 0 && col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text"),
-          expr("substring(source, 4)").cast("long").as("priority"), col("lang"))
-        .repartition(spark.sparkContext.defaultParallelism)
-      val holdout = docs0.filter(col("doc_id") % 11 === 0)
-      var t0 = System.nanoTime()
-      val sigs = Dedup.minhashSignatures(storeChunks, "chunk_id", "chunk_text", 3, 16)
-        .persist()
-      val nSig = sigs.count()
-      println(f"[incrprod] store_sigs=$nSig index_build_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      Seq("injob" -> None, "prebuilt" -> Some(sigs)).foreach { case (tag, s) =>
-        (1 to 2).foreach { i =>
-          t0 = System.nanoTime()
-          val rows = Curation.pretrainCurateIncrement(
-            batch, holdout, storeChunks, "doc_id", "text", "priority", "lang",
-            storeSigs = s, approxQuantileAccuracy = 0)
-            .sequences.count()
-          println(f"[incrprod] $tag run$i rows=$rows t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-          graft.ops.CacheScope.releaseAll()
-        }
-      }
-      sigs.unpersist(); storeChunks.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("incrstream")) {
-      // the incremental STREAMING twin at scale: nearDupMatchesStream
-      // against the store's frozen signature index (q121's incumbent
-      // filter as a micro-batch stream), stream==batch pinned on the
-      // same strata. Serving index (band index + corpus shingles)
-      // builds once; each micro-batch pays batch-chunk-sized work.
-      import graft.scale.{Dedup, TextStats}
-      import org.apache.spark.sql.streaming.OutputMode
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      def chunksOf(pred: org.apache.spark.sql.Column) = TextStats.chunkByTokens(
-        docs0.filter(pred), "doc_id", "text", 32, 16)
-        .withColumn("chunk_id", col("doc_id") * 65536L + col("chunk_idx"))
-        .select(col("chunk_id"), col("chunk_text"))
-      val storeChunks = chunksOf(
-        col("doc_id") % 11 =!= 0 && col("doc_id") % 3 =!= 0).persist()
-      val batchChunks = chunksOf(
-        col("doc_id") % 11 =!= 0 && col("doc_id") % 3 === 0).persist()
-      println(s"[incrstream] store_chunks=${storeChunks.count()} " +
-        s"batch_chunks=${batchChunks.count()}")
-      var t0 = System.nanoTime()
-      val sigs = Dedup.minhashSignatures(
-        storeChunks, "chunk_id", "chunk_text", 3, 16).persist()
-      sigs.count()
-      // pre-partition the STATIC serving frames on their join keys
-      // before persisting: a micro-batch plan re-executes the static
-      // side of a stream-static join every trigger, and an unaligned
-      // cache re-shuffles the store-sized index each time (measured:
-      // ~90 s/trigger fixed cost at the century); with the cached
-      // partitioning matching the join's requirement the per-trigger
-      // exchange elides and only the batch-sized probe side shuffles
-      val index = Dedup.signatureBandIndex(sigs)
-        .repartition(col("band")).sortWithinPartitions("band").persist()
-      index.count()
-      val corpSh = storeChunks.select(col("chunk_id").as("corp_id"),
-        Dedup.shingles(col("chunk_text"), 3).as("shb"))
-        .repartition(col("corp_id")).sortWithinPartitions("corp_id").persist()
-      corpSh.count()
-      println(f"[incrstream] serving_index_build_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      // batch truth: the q56/q121 incumbent filter's dropped set
-      t0 = System.nanoTime()
-      val survivors = Dedup.nearDupAgainstSignatures(
-        batchChunks, storeChunks,
-        Dedup.minhashSignatures(batchChunks, "chunk_id", "chunk_text", 3, 16), sigs,
-        "chunk_id", "chunk_text", 3, 16, 8, 0.2)
-        .select("chunk_id").collect().map(_.getLong(0)).toSet
-      val allBatch = batchChunks.select("chunk_id").collect().map(_.getLong(0)).toSet
-      val dropped = allBatch -- survivors
-      println(f"[incrstream] batch dropped=${dropped.size} " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      graft.ops.CacheScope.releaseAll()
-      // streaming twin: the batch staged as 4 parquet files, one per
-      // micro-batch trigger
-      val stage = java.nio.file.Files.createTempDirectory("incr_stream").toString
-      batchChunks.repartition(4).write.mode("overwrite").parquet(stage)
-      val fpt = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "1")
-      val stream = spark.readStream
-        .schema(batchChunks.schema)
-        .option("maxFilesPerTrigger", fpt)
-        .parquet(stage)
-      val q = graft.streaming.StreamingOps.nearDupMatchesStream(
-        stream, corpSh, index, "chunk_id", "chunk_text", threshold = 0.2)
-        .writeStream.format("memory").queryName("incrstream_cent")
-        .outputMode(OutputMode.Append()).start()
-      t0 = System.nanoTime()
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) q.explain(extended = false)
-      val prog = q.recentProgress.toSeq
-        .map(p => f"${p.numInputRows}r/${p.durationMs.get("triggerExecution") / 1000.0}%.2fs")
-      q.stop()
-      val streamed = spark.table("incrstream_cent")
-        .select("chunk_id").distinct().collect().map(_.getLong(0)).toSet
-      println(f"[incrstream] stream wall=$wall%.2fs batches=${prog.mkString(" ")}")
-      println(s"[incrstream] stream==batch: ${if (streamed == dropped) "MATCH"
-        else s"MISMATCH stream_only=${(streamed -- dropped).size} batch_only=${(dropped -- streamed).size}"}")
-      Seq(sigs, index, corpSh, storeChunks, batchChunks).foreach(_.unpersist())
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("bpedim")) {
-      // tokenize-once artifact: what the prebuilt word->pieces dim buys
-      // on repeat corpus encodes — encodeByVocab re-derives the dim per
-      // call (a corpus-token-sized distinct() exchange + the vocab UDF
-      // pass); encodeWithPieceDim pays only the token-stream join
-      import graft.scale.Bpe
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val nm = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "500").toInt
-      var t0 = System.nanoTime()
-      val merges = Bpe.trainMergesFast(docs0, "text", nm)
-      println(f"[bpedim] merges=${merges.size} train_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val n = Bpe.encodeByVocab(docs0, "doc_id", "text", merges).count()
-        println(f"[bpedim] byVocab run$i pieces=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      val store = java.nio.file.Files.createTempDirectory("bpe_dim").toString
-      t0 = System.nanoTime()
-      Bpe.writePieceDim(store, docs0, "text", merges)
-      println(f"[bpedim] dim_build_publish_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      val dim = Bpe.readPieceDim(spark, store, merges).persist()
-      println(s"[bpedim] dim_words=${dim.count()}")
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val n = Bpe.encodeWithPieceDim(docs0, "doc_id", "text", merges, dim).count()
-        println(f"[bpedim] withDim run$i pieces=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      dim.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("embdrift")) {
-      // q141's production form: embeddingCellDriftWithCentroids at a
-      // FIXED nlist (stride derived from the reference count, so the
-      // cell count stays a model constant as the corpus grows) vs the
-      // oracle stride-64 shape whose nlist ∝ N
-      import graft.scale.Similarity
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val tgt = emb.filter(col("vec_id") % 3 === 0)
-      val ref = emb.filter(col("vec_id") % 3 =!= 0).persist()
-      val refN = ref.count()
-      println(s"[embdrift] ref_vectors=$refN")
-      Seq(64, 256, 1024).foreach { nlist =>
-        // fixed-COUNT cell system: first nlist reference ids (TakeOrdered)
-        val cents = ref
-          .select(col("vec_id").as("centroid_id"),
-            col("embedding").cast("array<double>").as("centroid_vec"))
-          .orderBy("centroid_id").limit(nlist)
-        val nc = cents.count()
-        val t0 = System.nanoTime()
-        val rows = Similarity.embeddingCellDriftWithCentroids(
-          tgt, ref, cents, "vec_id", "embedding").count()
-        println(f"[embdrift] nlist=$nc cells_out=$rows " +
-          f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        graft.ops.CacheScope.releaseAll()
-      }
-      val t0 = System.nanoTime()
-      val rows = Similarity.embeddingCellDrift(
-        tgt, ref, "vec_id", "embedding", centroidStride = 64).count()
-      println(f"[embdrift] stride64(oracle, nlist prop N) cells_out=$rows " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      graft.ops.CacheScope.releaseAll()
-      ref.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("bpescale")) {
-      // the BPE scale law, measured: training = ONE corpus-sized pass
-      // (word counts) + numMerges iterations over the DISTINCT-WORD
-      // frame, so train cost should be dominated by the corpus pass and
-      // the merge loop near-flat across corpus scale (the staged 100x
-      // docs replicate text, so vocabulary grows only by the ~100 tiny
-      // copy-tag tokens); encode is a scan-pure projection that should
-      // scale ~linearly with rows. Knobs: SPARK_GRAFT_BPE_MERGES
-      // (default 40).
-      import graft.scale.Bpe
-      val numMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "40").toInt
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .repartition(spark.sparkContext.defaultParallelism).persist()
-      val nd = docs.count()
-      var t0 = System.nanoTime()
-      val wc = Bpe.wordCounts(docs, "text")
-      val vocab = wc.count()
-      println(f"[bpescale] docs=$nd vocab=$vocab " +
-        f"wordcount_pass_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-      val merges = Bpe.trainMerges(docs, "text", numMerges)
-      println(f"[bpescale] train merges=${merges.size} " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      graft.ops.CacheScope.releaseAll()
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val pieces = Bpe.encode(docs, "doc_id", "text", merges)
-          .groupBy().count().head().getLong(0)
-        println(f"[bpescale] encode run$i pieces=$pieces " +
-          f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val hist = Bpe.pieceHistogram(docs, "text", merges, 100).count()
-        println(f"[bpescale] histogram run$i topk=$hist " +
-          f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        graft.ops.CacheScope.releaseAll()
-      }
-      docs.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("bpeprod")) {
-      // the production-vocab paths measured against the oracle-shaped
-      // ones at the same SF: (a) trainMergesFast vs trainMerges at the
-      // oracle's merge count (job-per-merge vs one pass + in-memory),
-      // (b) trainMergesFast asked for a production-scale merge count
-      // (early-stops at full fusion — the fixture vocab is tiny; the
-      // number that matters is wall-clock per merge without job
-      // scheduling), (c) encodeByVocab vs the replace-chain encode over
-      // the full corpus. Knobs: SPARK_GRAFT_BPE_MERGES (default 40).
-      import graft.scale.Bpe
-      val numMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "40").toInt
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .repartition(spark.sparkContext.defaultParallelism).persist()
-      docs.count()
-      var t0 = System.nanoTime()
-      val mSlow = Bpe.trainMerges(docs, "text", numMerges)
-      println(f"[bpeprod] train jobs-per-merge merges=${mSlow.size} " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-      val mFast = Bpe.trainMergesFast(docs, "text", numMerges)
-      println(f"[bpeprod] train fast merges=${mFast.size} " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs equal=${mFast == mSlow}")
-      t0 = System.nanoTime()
-      val mAll = Bpe.trainMergesFast(docs, "text", 32000)
-      println(f"[bpeprod] train fast 32k-request merges=${mAll.size} (full fusion) " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val a = Bpe.encode(docs, "doc_id", "text", mFast)
-          .groupBy().count().head().getLong(0)
-        val tChain = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val b = Bpe.encodeByVocab(docs, "doc_id", "text", mFast)
-          .groupBy().count().head().getLong(0)
-        println(f"[bpeprod] encode run$i chain=$tChain%.2fs " +
-          f"vocabjoin=${(System.nanoTime() - t0) / 1e9}%.2fs pieces=$a equal=${a == b}")
-      }
-      docs.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("bpevocab")) {
-      // the production-VOCABULARY question the tiny fixture alphabet
-      // (31 distinct words) leaves open: does the in-memory trainer
-      // hold at Heaps'-law vocab sizes? Synthetic deterministic
-      // vocabulary: word i = md5(i) hex prefix of length 4-12 (hex is a
-      // [a-z0-9] subset), Zipf-ish counts 1e9/(i+1); collisions merged
-      // by a sum agg (still ~the requested vocab size). Trains
-      // trainMergesFromCounts at a production merge count, then times
-      // the per-distinct-word encode kernel pass over the same
-      // vocabulary. Knobs: SPARK_GRAFT_BPE_VOCAB (default 1000000),
-      // SPARK_GRAFT_BPE_MERGES (default 2000).
-      import graft.scale.Bpe
-      val vocabN = sys.env.getOrElse("SPARK_GRAFT_BPE_VOCAB", "1000000").toLong
-      val numMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "2000").toInt
-      val counts = spark.range(vocabN).select(
-        substring(md5(col("id").cast("string")), lit(1),
-          (pmod(col("id"), lit(9)) + 4).cast("int")).as("w"),
-        (lit(1000000000L) / (col("id") + 1) + 1).cast("long").as("cnt"))
-        .groupBy("w").agg(sum("cnt").as("cnt"))
-        .persist()
-      val nw = counts.count()
-      var t0 = System.nanoTime()
-      val merges = Bpe.trainMergesFromCounts(counts, "w", "cnt", numMerges)
-      println(f"[bpevocab] vocab=$nw merges=${merges.size} " +
-        f"train_t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      (1 to 2).foreach { i =>
-        t0 = System.nanoTime()
-        val hist = Bpe.pieceHistogramFromCounts(counts, "w", "cnt", merges, 100).count()
-        println(f"[bpevocab] encode-kernel pass run$i topk=$hist " +
-          f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      counts.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("bpefrontier")) {
-      // the vocab-size knob quantified: fertility (pieces per word,
-      // per-mille) as a function of merge count, evaluated at PREFIXES
-      // of one trained table (a BPE merge list's prefix IS the smaller
-      // table — no retraining per point). Uses the synthetic Zipf
-      // vocabulary (bpevocab's construction). Knobs:
-      // SPARK_GRAFT_BPE_VOCAB (default 1000000), SPARK_GRAFT_BPE_MERGES
-      // (default 2000).
-      import graft.scale.Bpe
-      val vocabN = sys.env.getOrElse("SPARK_GRAFT_BPE_VOCAB", "1000000").toLong
-      val numMerges = sys.env.getOrElse("SPARK_GRAFT_BPE_MERGES", "2000").toInt
-      val counts = spark.range(vocabN).select(
-        substring(md5(col("id").cast("string")), lit(1),
-          (pmod(col("id"), lit(9)) + 4).cast("int")).as("w"),
-        (lit(1000000000L) / (col("id") + 1) + 1).cast("long").as("cnt"))
-        .groupBy("w").agg(sum("cnt").as("cnt"))
-        .persist()
-      val totalWords = counts.agg(sum("cnt")).head().getLong(0)
-      val merges = Bpe.trainMergesFromCounts(counts, "w", "cnt", numMerges)
-      val points = Seq(0, numMerges / 16, numMerges / 8, numMerges / 4,
-        numMerges / 2, numMerges).distinct
-      points.foreach { k =>
-        val table = merges.take(k)
-        val t0 = System.nanoTime()
-        val pieces = {
-          val applyUdf = udf((w: String) => Bpe.applyMergesLocal(w, table).length)
-          counts.select((col("cnt") * applyUdf(col("w"))).as("p"))
-            .agg(sum("p")).head().getLong(0)
-        }
-        println(f"[bpefrontier] merges=$k fertility_permille=${pieces * 1000 / totalWords} " +
-          f"pieces=$pieces t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      counts.unpersist()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("dsirbuckets")) {
-      // the DSIR feature-resolution knob: selection stability and cost
-      // vs bucket count. More buckets = finer features (fewer hash
-      // collisions mixing target and raw vocabulary) = a selection
-      // closer to the collision-free one, at a linearly larger model.
-      // Reports top-k overlap vs the finest sweep member and wall time,
-      // at SPARK_GRAFT_SF_DIR.
-      import graft.scale.Sampling
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val raw = docs.filter(col("lang") =!= "en")
-      val target = docs.filter(col("lang") === "en")
-      val k = 200
-      val sweeps = Seq(256, 1024, 4096, 16384, 65536)
-      val sel = sweeps.map { b =>
-        val t0 = System.nanoTime()
-        val ids = Sampling.dsirSelect(raw, target, "doc_id", "text",
-          buckets = b, k = k).select("doc_id").collect().map(_.getLong(0)).toSet
-        graft.ops.CacheScope.releaseAll()
-        (b, ids, (System.nanoTime() - t0) / 1e9)
-      }
-      val ref = sel.last._2
-      sel.foreach { case (b, ids, t) =>
-        println(f"[dsirbuckets] buckets=$b overlap_ref_permille=${ids.intersect(ref).size * 1000 / k} t=$t%.2fs")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("ccdeep")) {
-      // distributed CC on a HIGH-DIAMETER graph: 100k parallel chains of
-      // length 31 (3.1M nodes, 3M edges — above the driver switch), so
-      // min-label propagation needs ~30 rounds. Exercises the per-round
-      // plan/lineage nesting the clique-ish dedup fixtures (diameter
-      // ~2-3) never reach. Knobs: SPARK_GRAFT_CC_CHAINLEN (default 31),
-      // SPARK_GRAFT_CC_CHAINS (default 100000).
-      import graft.scale.Dedup
-      val len = sys.env.getOrElse("SPARK_GRAFT_CC_CHAINLEN", "31").toInt
-      val chains = sys.env.getOrElse("SPARK_GRAFT_CC_CHAINS", "100000").toLong
-      val edges = spark.range(chains * (len - 1)).select(
-        ((col("id") / (len - 1)).cast("long") * len + pmod(col("id"), lit(len - 1))).as("a"),
-        ((col("id") / (len - 1)).cast("long") * len + pmod(col("id"), lit(len - 1)) + 1).as("b"))
-        .repartition(spark.sparkContext.defaultParallelism)
-      val t0 = System.nanoTime()
-      val comps = Dedup.connectedComponents(edges, "a", "b", maxRounds = len + 5)
-      val ncomp = comps.select("rep").distinct().count()
-      val nnode = comps.count()
-      println(f"[ccdeep] chains=$chains len=$len components=$ncomp nodes=$nnode " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("counters")) {
-      // q118 counter-overhead breakdown: construction (eager through
-      // ShardPack's prefix-sum pass), the q115 sequences action, then
-      // each stage counter cold (the literal-stage filter constant-
-      // folds away every other union branch) and the whole counters
-      // frame in one action — shows what the lineage-cut stage caches
-      // buy (r13: counters_all 15.4 s -> 0.7 s at sf0.1)
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      def timed[T](tag: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[counters] $tag t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
-      val result = timed("construct") {
-        graft.scale.Curation.pretrainCurate(
-          docs0.filter(col("doc_id") % 11 =!= 0)
-            .select(col("doc_id"), col("text"),
-              expr("substring(source, 4)").cast("long").as("priority"), col("lang"))
-            .repartition(spark.sparkContext.defaultParallelism),
-          docs0.filter(col("doc_id") % 11 === 0),
-          "doc_id", "text", "priority", "lang",
-          approxQuantileAccuracy = 0)
-      }
-      timed("sequences")(result.sequences.count())
-      import org.apache.spark.sql.Row
-      Seq("docs_in", "chunks", "near_dup_pairs", "chunks_dedup", "chunks_clean",
-        "chunks_gated", "sequences_mixed", "train_sequences", "packed_sequences",
-        "shards").foreach { st =>
-        timed(s"cold_$st")(result.counters.filter(col("stage") === st).collect())
-      }
-      val rows = timed("counters_all")(result.counters.collect().toSeq)
-      rows.foreach { case Row(stage: String, n: Long) =>
-        println(s"[counters] stage=$stage n=$n")
-      }
-      graft.ops.CacheScope.releaseAll()
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("plancounts")) {
-      // static-plan Exchange / nested-loop census per query (AQE off so
-      // the shape is deterministic) — feeds PlanGuardSpec's budgets
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-        val p = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").queryExecution.executedPlan
-        var ex = 0; var bnlj = 0
-        p.foreach { n =>
-          if (n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) ex += 1
-          if (n.nodeName.contains("BroadcastNestedLoop") ||
-            n.nodeName.contains("CartesianProduct")) bnlj += 1
-        }
-        println(s"[plan] $q exchanges=$ex bnlj=$bnlj")
-      }
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("entry")) {
-      val n = SparkEntry.entry(spark).count()
-      println(s"[demo] entry rows=$n")
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("explain")) {
-      args.drop(1).foreach { name =>
-        println(s"===== $name =====")
-        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-      }
-      spark.stop()
-      return
-    }
-
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    val names = if (args.isEmpty) Seq("q23_lsh_pairs") else args.toSeq
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        println(f"[profile] $name run$i rows=$n t=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        // as in Bench: run 2 must recompute from the scan, not read
-        // run 1's operator-internal persists
-        graft.ops.CacheScope.releaseAll()
-      }
+    val rest = args.drop(1)
+    def queryList(default: Seq[String]) =
+      rest.headOption.map(_.split(",").toSeq).getOrElse(default)
+    mode match {
+      case "time" => time(spark, sfDir, queryList(Seq("q56_incr_dedup")))
+      case "explain" =>
+        explain(spark, sfDir, queryList(Nil), rest.lift(1), rest.lift(2).getOrElse("before"))
+      case "stageprof" => stageprof(spark, sfDir, rest.headOption.getOrElse("q115_pretrain_curate"))
+      case "plancounts" => plancounts(spark)
     }
     spark.stop()
+  }
+
+  private def time(spark: SparkSession, sfDir: String, qs: Seq[String]): Unit = {
+    qs.foreach { q =>
+      SparkEntry.queries(q)(spark, WarmDir).count()
+      graft.ops.CacheScope.releaseAll()
+    }
+    qs.foreach { q =>
+      var rows = 0L
+      val times = (1 to 2).map { _ =>
+        val t0 = System.nanoTime()
+        rows = SparkEntry.queries(q)(spark, sfDir).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        graft.ops.CacheScope.releaseAll()
+        dt
+      }
+      println(f"[time] $q rows=$rows t=${times.min}%.2fs")
+      System.gc() // outside the timed window — see Bench's tail note
+    }
+  }
+
+  private def explain(spark: SparkSession, sfDir: String, qs: Seq[String],
+      outDir: Option[String], tag: String): Unit = {
+    outDir.foreach(new java.io.File(_).mkdirs())
+    qs.foreach { q =>
+      val txt = SparkEntry.queries(q)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      outDir match {
+        case Some(dir) =>
+          val p = java.nio.file.Paths.get(s"$dir/${q}_$tag.txt")
+          java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
+          println(s"[explain] wrote $p (${txt.length} chars)")
+        case None =>
+          println(s"===== $q =====")
+          println(txt)
+      }
+      graft.ops.CacheScope.releaseAll()
+    }
+  }
+
+  /** The UI-less stand-in for the stage page: run the query once warm
+    * under a SparkListener and print every stage's duration, task count
+    * and name, longest first. Submission gaps (driver-side planning and
+    * collect work) show up as the time no stage was running.
+    */
+  private def stageprof(spark: SparkSession, sfDir: String, q: String): Unit = {
+    SparkEntry.queries(q)(spark, WarmDir).count()
+    graft.ops.CacheScope.releaseAll()
+    // warm run at the target SF too (codegen for the big-SF plan)
+    SparkEntry.queries(q)(spark, sfDir).count()
+    graft.ops.CacheScope.releaseAll()
+    final case class StageRec(name: String, sub: Long, comp: Long, nt: Int,
+      taskMs: Long)
+    val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRec]()
+    val taskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        taskMs.computeIfAbsent(te.stageId,
+          _ => new java.util.concurrent.atomic.AtomicLong())
+          .addAndGet(te.taskInfo.duration)
+      }
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val info = sc.stageInfo
+        stages.put(info.stageId, StageRec(info.name,
+          info.submissionTime.getOrElse(-1L),
+          info.completionTime.getOrElse(-1L), info.numTasks,
+          Option(taskMs.get(info.stageId)).map(_.get()).getOrElse(0L)))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    val wall0 = System.currentTimeMillis()
+    val df = SparkEntry.queries(q)(spark, sfDir)
+    val tc = System.nanoTime()
+    val rows = df.count()
+    val wall = (System.nanoTime() - t0) / 1e9
+    graft.ops.CacheScope.releaseAll()
+    Thread.sleep(500) // let the listener bus drain
+    spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val all = stages.asScala.toSeq.sortBy(_._2.sub)
+    val stageWall = all.map(r => r._2.comp - r._2.sub).sum
+    val totalTaskMs = all.map(_._2.taskMs).sum
+    // driver-idle gaps: periods with NO stage running (planning/collect)
+    val intervals = all.map(r => (r._2.sub, r._2.comp)).sortBy(_._1)
+    var gapMs = 0L; var cursor = wall0
+    intervals.foreach { case (s, c) =>
+      if (s > cursor) gapMs += s - cursor
+      cursor = math.max(cursor, c)
+    }
+    println(f"[stageprof] $q rows=$rows wall=$wall%.2fs " +
+      f"(construct=${(tc - t0) / 1e9}%.2fs) stages=${all.size} " +
+      f"stage_wall_sum=${stageWall / 1000.0}%.2fs task_sum=${totalTaskMs / 1000.0}%.2fs " +
+      f"no_stage_running=${gapMs / 1000.0}%.2fs")
+    all.sortBy(r => -(r._2.comp - r._2.sub)).take(25).foreach { case (id, r) =>
+      println(f"[stageprof]   ${(r.comp - r.sub) / 1000.0}%6.2fs task_sum=${r.taskMs / 1000.0}%6.2fs tasks=${r.nt}%-4d s$id ${r.name.take(110)}")
+    }
+  }
+
+  /** AQE off so the plan shape is deterministic. */
+  private def plancounts(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
+      val p = SparkEntry.queries(q)(spark, WarmDir).queryExecution.executedPlan
+      var ex = 0; var bnlj = 0
+      p.foreach { n =>
+        if (n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) ex += 1
+        if (n.nodeName.contains("BroadcastNestedLoop") ||
+          n.nodeName.contains("CartesianProduct")) bnlj += 1
+      }
+      println(s"[plan] $q exchanges=$ex bnlj=$bnlj")
+    }
   }
 }

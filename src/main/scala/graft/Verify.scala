@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // older testdata vintages wrote events.ts as TIMESTAMP(NANOS); the
-      // flag makes those surface as LongType, and SparkEntry.t() maps the
-      // current timestamp[us] vintage to the same long-nanos contract
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r20: sort-based shuffle writer (see Bench) — results identical,
-      // the 192-query sweep just spends less time creating tiny files
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // r21: codegen class cache sized for the 192-query sweep (see
-      // Bench) — results identical, the sweep just stops recompiling
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // r21: AQE coalescing floor for compute-dense tiny-byte shuffles
-      // (see Bench) — results identical, partitioning-invariance law
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
-      // r21: allow shuffled-hash joins (see Bench) — strategy-only,
-      // results identical
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave a LOUD artifact: a swallowed

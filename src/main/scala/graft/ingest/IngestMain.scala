@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
+import graft.pipelines.CliSession
 
 /** CLI entry for the ingest stage of the Load pipeline (SURVEY §3.1):
   * `runMain graft.ingest.IngestMain <vcv-xml-path> <out-dir>` reads a
@@ -12,14 +12,7 @@ import org.apache.spark.sql.SparkSession
 object IngestMain {
   def main(args: Array[String]): Unit = {
     val Array(xmlPath, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession.local()
 
     val parsed = XmlIngest.parseRecords(XmlIngest.readRecords(spark, xmlPath)).cache()
     val vars = XmlIngest.variants(parsed).cache()

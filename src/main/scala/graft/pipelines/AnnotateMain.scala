@@ -28,14 +28,7 @@ import graft.ops.NameNormalize
 object AnnotateMain {
   def main(args: Array[String]): Unit = {
     val Array(storeDir, dimsDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession.local()
     run(spark, storeDir, dimsDir).toSeq.sorted.foreach { case ((aspect, action), n) =>
       println(s"[annotate] $aspect.$action: $n")
     }

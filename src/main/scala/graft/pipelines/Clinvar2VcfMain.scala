@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,13 +25,7 @@ object Clinvar2VcfMain {
   def main(args: Array[String]): Unit = {
     val Array(storeDir, outDir) = args.take(2)
     val assembly = args.lift(2).getOrElse("GRCh38")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession.local()
     import spark.implicits._
 
     def optParquet(path: String, schema: StructType) =
@@ -72,7 +65,9 @@ object Clinvar2VcfMain {
       .find(f => f.getName.startsWith("part-")).get
     val body = java.nio.file.Files.readString(part.toPath)
     java.nio.file.Files.writeString(part.toPath, Header + "\n" + body)
-    println(s"[vcf] wrote ${lines.count()} body lines to ${part.getPath}")
+    // count the file just read, not `lines`: that would run the whole
+    // extract -> join -> reconcile plan a second time
+    println(s"[vcf] wrote ${body.linesIterator.size} body lines to ${part.getPath}")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI for `--addRsIds` (SURVEY J12):
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
 object VariantRsIdMain {
   def main(args: Array[String]): Unit = {
     val Array(storeDir, variantMapPath) = args.take(2)
-    val spark = local()
+    val spark = CliSession.local()
     // the store keeps dbSNP accessions raw (parser F8); the DB link
     // text the reference filters on (X7) is "rs" + acc
     val updates = VariantRsIdPipeline.run(
@@ -24,17 +23,6 @@ object VariantRsIdMain {
     println(s"[rsid] total updates: ${updates.count()}")
     spark.stop()
   }
-
-  private[pipelines] def local(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }
 
 /** CLI for `--qcDuplicateTerms[AndSynonyms]` (SURVEY O2):
@@ -45,7 +33,7 @@ object VariantRsIdMain {
   */
 object DupTermQcMain {
   def main(args: Array[String]): Unit = {
-    val spark = VariantRsIdMain.local()
+    val spark = CliSession.local()
     val terms = spark.read.parquet(args(0))
     val synonyms = args.lift(1).map(p => spark.read.parquet(p))
     val dagEdges = args.lift(2).map(p => spark.read.parquet(p))

@@ -1007,8 +1007,8 @@ object Dedup {
     * count each setting admits (n_lsh_pairs IS the verify-join size) —
     * together they make the log2(N)-bands production rule demonstrable
     * on any corpus instead of asserted in scaladoc. Wall-clock per
-    * setting comes from the `Profile frontier` harness (timing is a
-    * driver concern, not a frame column).
+    * setting was measured by a since-deleted `Profile frontier` mode
+    * (timing is a driver concern, not a frame column).
     */
   def recallSweep(
       docs: DataFrame,

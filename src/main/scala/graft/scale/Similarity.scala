@@ -339,7 +339,7 @@ object Similarity {
     * side is ~N·nprobe/nlist candidates per probe. Together with
     * [[graft.scale.Dedup.recallSweep]] this makes the √N-lists /
     * probe-budget production rules measurable on any corpus; wall-clock
-    * per setting comes from the `Profile frontier` harness.
+    * per setting was measured by a since-deleted `Profile frontier` mode.
     */
   def annRecallSweep(
       corpus: DataFrame,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class GraftExtensionsSpec extends SparkSpec {
@@ -21,6 +22,24 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(row._2 === 11.0)
     assert(row._3 === 25L) // 3^2 + 4^2
     assert(row._4 === Seq("a b", "b c", "c d"))
+  }
+
+  test("config route: a session built with GraftExtensions resolves the SQL names") {
+    // the spark.sql.extensions route: the builder hands the extension to
+    // a NEW session on the shared context, and nothing calls register()
+    val shared = spark
+    try {
+      val ext = SparkSession.builder().withExtensions(new GraftExtensions).create()
+      val row = ext.sql(
+        "SELECT trim_utf8_bytes(repeat('x', 50), 12) AS t, " +
+          "word_shingles(split('a b c d', ' '), 2) AS sh").head()
+      assert(row.getString(0) === "x" * 8 + " ...")
+      assert(row.getSeq[String](1) === Seq("a b", "b c", "c d"))
+    } finally {
+      // never stop `ext`: it shares the suite's SparkContext
+      SparkSession.setActiveSession(shared)
+      SparkSession.setDefaultSession(shared)
+    }
   }
 
   test("SQL surface: argmax_tie_min aggregates with min-id tie-break, in HashAggregate") {

@@ -20,27 +20,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the shipped session, so the suite runs the confs the bench measures
+    val s = Bench.session("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver-generated events.parquet uses TIMESTAMP(NANOS) (pandas ns)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // sort-based shuffle writer (see Bench) — avoids the bypass
-      // writer's O(M·R) tiny-file storm on the suite's many small jobs
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // codegen class cache sized for the full suite (see Bench) —
-      // avoids Janino/C2 recompilation of repeated generated sources
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // AQE coalescing floor (see Bench) — suite runs the same session
-      // shape the bench measures
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
-      // allow shuffled-hash joins (see Bench)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
