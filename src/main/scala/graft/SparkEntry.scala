@@ -978,10 +978,10 @@ object SparkEntry {
     // keys. A wrong natural-key column or a broken rekey fails these
     // rows — they gate LoadPipeline.run's wiring, not just DiffSync.
     "q62_child_hgvs_diff" -> ((s, dir) =>
-      childLoadResult(s, dir).hgvsDiff
+      childLoadResult(s, dir).diff(graft.pipelines.ClinvarStore.HgvsNames)
         .select("rgd_id", "hgvs_type", "name", "action")),
     "q63_child_mappos_diff" -> ((s, dir) =>
-      childLoadResult(s, dir).mapPosDiff
+      childLoadResult(s, dir).diff(graft.pipelines.ClinvarStore.MapPositions)
         .select("rgd_id", "assembly", "chromosome", "start_pos", "stop_pos", "action")),
 
     // --- multimodal decode gate: REAL image + audio codecs against

@@ -122,6 +122,10 @@ object VcvParser {
   private def parseInner(xml: String): ParseResult = {
     val dbf = DocumentBuilderFactory.newInstance()
     dbf.setNamespaceAware(false)
+    // hostile input: no DOCTYPE, so no entity can reach a file or a host
+    dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
+    dbf.setFeature("http://xml.org/sax/features/external-general-entities", false)
+    dbf.setFeature("http://xml.org/sax/features/external-parameter-entities", false)
     val doc = dbf.newDocumentBuilder()
       .parse(new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
     val va = doc.getDocumentElement // <VariationArchive>

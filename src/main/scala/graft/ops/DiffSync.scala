@@ -30,6 +30,11 @@ object DiffSync {
   val Update = "update"
   val Delete = "delete"
   val Match = "match"
+  /** A delete held back by [[guardDeletes]]/[[guardDeletesBy]]: the row stays. */
+  val KeepStale = "keep_stale"
+
+  /** The actions that change the stored rows. */
+  val Changed: Seq[String] = Seq(Insert, Update, Delete)
 
   /** Classify `incoming` vs `current` on `keyCols`; equality of
     * `contentCols` (null-safe) decides update vs match.
@@ -87,7 +92,7 @@ object DiffSync {
         when(
           col(ActionCol) === Delete &&
             col("_g_ndel") > col("_g_ncur") * maxDeleteFraction,
-          lit("keep_stale"))
+          lit(KeepStale))
           .otherwise(col(ActionCol)))
       .drop("_g_ndel", "_g_ncur")
   }
@@ -125,7 +130,7 @@ object DiffSync {
         when(
           col(ActionCol) === Delete &&
             col("_g_ndel") - col("_g_nins") > col("_g_ncur") * maxDeleteFraction,
-          lit("keep_stale"))
+          lit(KeepStale))
           .otherwise(col(ActionCol)))
       .drop("_g_ndel", "_g_nins", "_g_ncur")
   }
@@ -144,7 +149,7 @@ object DiffSync {
       // diffs from operators without an old-side copy (e.g. AliasSync)
       // carry no *_old columns — the current value is the value
       if (diff.columns.contains(c + oldSuffix))
-        when(col(ActionCol) === "keep_stale", col(c + oldSuffix))
+        when(col(ActionCol) === KeepStale, col(c + oldSuffix))
           .otherwise(col(c))
           .as(c)
       else col(c)

@@ -4,8 +4,9 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.StructType
 
 /** Crash-atomic snapshot store: versioned entity directories published
   * through a single manifest flip.
@@ -107,6 +108,17 @@ object SnapshotStore {
   /** True when the entity resolves to existing data. */
   def exists(storeDir: String, entity: String): Boolean =
     paths(storeDir, entity).exists(p => new File(p).exists())
+
+  /** [[read]], or an empty frame of `schema` when the entity has no data
+    * yet (a fresh store, an optional side table never staged).
+    */
+  def readOrEmpty(
+      spark: SparkSession,
+      storeDir: String,
+      entity: String,
+      schema: StructType): DataFrame =
+    if (exists(storeDir, entity)) read(spark, storeDir, entity)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   private val VersionDir = "^v(\\d+)$".r
 

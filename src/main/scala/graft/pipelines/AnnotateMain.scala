@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.ingest.XmlIngest
 import graft.ops.NameNormalize
@@ -42,9 +41,9 @@ object AnnotateMain {
     * unchanged store must classify every annotation as match.
     */
   def run(spark: SparkSession, storeDir: String, dimsDir: String): Map[(String, String), Long] = {
-    val variants = graft.ops.SnapshotStore.read(spark, storeDir, "variants")
-    val variantXdb = graft.ops.SnapshotStore.read(spark, storeDir, "xdb_ids")
-    val geneAssocs = graft.ops.SnapshotStore.read(spark, storeDir, "gene_associations")
+    val variants = ClinvarStore.Variants.read(spark, storeDir)
+    val variantXdb = ClinvarStore.XdbIds.read(spark, storeDir)
+    val geneAssocs = ClinvarStore.GeneAssociations.read(spark, storeDir)
     val genes = spark.read.parquet(s"$dimsDir/genes.parquet")
     val variantGene = geneAssocs.join(broadcast(genes), Seq("gene_id"))
       .select(col("rgd_id"), col("gene_id"), col("gene_rgd_id"))
@@ -62,46 +61,12 @@ object AnnotateMain {
       else termIndex.limit(0)
     val orthologs = spark.read.parquet(s"$dimsDir/orthologs.parquet")
 
-    val currentAnnots =
-      if (graft.ops.SnapshotStore.exists(storeDir, "annotations"))
-        graft.ops.SnapshotStore.read(spark, storeDir, "annotations")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("annotated_rgd_id", LongType),
-          StructField("term_acc", StringType),
-          StructField("aspect", StringType),
-          StructField("evidence", StringType),
-          StructField("xref_source", StringType),
-          StructField("with_info", StringType))))
-
     val result = AnnotatePipeline.run(
       variants, variantXdb, variantGene, conceptMap, rdoSynonyms,
-      termIndex, hpoTermIndex, orthologs, currentAnnots)
-
-    result.annotDiff.cache()
-      .write.mode("overwrite").parquet(s"$storeDir/audit/annotations")
+      termIndex, hpoTermIndex, orthologs, ClinvarStore.Annotations.read(spark, storeDir))
     // subset publish: only `annotations` moves to the new version; the
-    // load entities keep their manifest pointers in the same atomic
-    // flip. Bucket-selective on the annotation natural key — the
-    // annotation table is the largest entity at scale (ortholog
-    // fan-out), so a daily annotate pass pays ~changed-fraction I/O
-    val annotKeys = AnnotatePipeline.AnnotNaturalKey
-    graft.ops.SnapshotStore.publishBucketed(
-      storeDir,
-      Seq("annotations" -> graft.ops.SnapshotStore.BucketedEntity(
-        snapshot = graft.ops.DiffSync.nextSnapshot(
-          result.annotDiff, annotKeys, Seq("with_info")),
-        changedKeys = result.annotDiff.filter(
-          !col(graft.ops.DiffSync.ActionCol)
-            .isin(graft.ops.DiffSync.Match, "keep_stale")),
-        keyCols = annotKeys,
-        numBuckets = LoadMain.LoadBuckets)),
-      retain = LoadMain.retention)
-    val counters = result.counters.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    result.annotDiff.unpersist(blocking = false)
-    graft.ops.CacheScope.releaseAll()
-    counters
+    // load entities keep their manifest pointers in the same atomic flip
+    ClinvarStore.publish(
+      storeDir, Seq(ClinvarStore.Annotations -> result.annotDiff), result.counters)
   }
 }

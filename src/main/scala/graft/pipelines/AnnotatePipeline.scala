@@ -152,7 +152,7 @@ object AnnotatePipeline {
       maxLen = xrefMax)
     MergeSplit.mergeThenSplit(
       phase1,
-      keyCols = Seq("annotated_rgd_id", "term_acc", "aspect", "evidence", "xref_source"),
+      keyCols = ClinvarStore.Annotations.keyCols, // the store's natural key
       // with_info splits on all three separators, exactly as the
       // reference does (AnnotCache.mergeIncomingAnnots2:183 splits on
       // "[\|\,\;]" before re-concatenating with "|")
@@ -163,15 +163,8 @@ object AnnotatePipeline {
 
   final case class Result(annotDiff: DataFrame, counters: DataFrame)
 
-  /** The annotation natural key — the 5 columns the reference's
-    * exact-match probe looks up before deciding touch vs insert
-    * (VariantAnnotator.java:180-187 getAnnotationKey;
-    * Dao.java:635-637). `with_info` is content, not key.
-    */
-  val AnnotNaturalKey: Seq[String] =
-    Seq("annotated_rgd_id", "term_acc", "aspect", "evidence", "xref_source")
-
-  /** J11: the annotation exact-match probe + stale-delete guard.
+  /** J11: the annotation exact-match probe (on the
+    * [[ClinvarStore.Annotations]] natural key) + stale-delete guard.
     * Matching rows are the reference's "touch" (update last-modified
     * only — a `match` here), missing rows insert, content-changed rows
     * update, and stale rows delete UNLESS the per-aspect NET count
@@ -188,7 +181,7 @@ object AnnotatePipeline {
       currentAnnots: DataFrame,
       maxDeleteFraction: Double = 0.05): DataFrame =
     DiffSync.guardDeletesBy(
-      DiffSync(incoming, currentAnnots, AnnotNaturalKey, Seq("with_info")),
+      ClinvarStore.Annotations.diff(incoming, currentAnnots),
       Seq("aspect"),
       maxDeleteFraction)
 

@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** CLI for the `--clinvar2vcf` flow (SURVEY §3.3):
   * `runMain graft.pipelines.Clinvar2VcfMain <store-dir> <out-dir> [assembly]`.
@@ -26,17 +26,11 @@ object Clinvar2VcfMain {
     val Array(storeDir, outDir) = args.take(2)
     val assembly = args.lift(2).getOrElse("GRCh38")
     val spark = CliSession.local()
-    import spark.implicits._
 
-    def optParquet(path: String, schema: StructType) =
-      if (new java.io.File(path).exists()) spark.read.parquet(path)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-    val variants = graft.ops.SnapshotStore.read(spark, storeDir, "variants")
-    val positions = graft.ops.SnapshotStore.read(spark, storeDir, "map_positions")
+    val variants = ClinvarStore.Variants.read(spark, storeDir)
+    val positions = ClinvarStore.MapPositions.read(spark, storeDir)
       .filter(col("assembly") === assembly)
-    val rsIds = graft.ops.SnapshotStore.read(spark, storeDir, "xdb_ids")
+    val rsIds = ClinvarStore.XdbIds.read(spark, storeDir)
       .filter(col("xdb_key") === 48)
       .groupBy(col("rgd_id")).agg(min(col("acc_id")).as("rs_id"))
 
@@ -49,13 +43,10 @@ object Clinvar2VcfMain {
       .join(rsIds, Seq("rgd_id"), "left")
       .withColumnRenamed("rgd_id", "variant_id")
 
-    val dbsnp = optParquet(s"$storeDir/dbsnp", StructType(Seq(
-      StructField("chr", StringType), StructField("pos", LongType),
-      StructField("ref", StringType), StructField("alt", StringType),
-      StructField("rs_id", StringType))))
-    val refBases = optParquet(s"$storeDir/ref_bases", StructType(Seq(
-      StructField("chr", StringType), StructField("pos", LongType),
-      StructField("base", StringType))))
+    def optional(table: String, ddl: String) =
+      graft.ops.SnapshotStore.readOrEmpty(spark, storeDir, table, StructType.fromDDL(ddl))
+    val dbsnp = optional("dbsnp", "chr STRING, pos BIGINT, ref STRING, alt STRING, rs_id STRING")
+    val refBases = optional("ref_bases", "chr STRING, pos BIGINT, base STRING")
 
     val lines = Clinvar2VcfPipeline.run(extract, dbsnp, refBases)
     lines.coalesce(1).write.mode("overwrite").text(outDir)

@@ -1,0 +1,109 @@
+package graft.pipelines
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+
+import graft.ops.{CacheScope, DiffSync, SnapshotStore}
+
+/** The ClinVar store layout — the Oracle tables of §1.1 that the
+  * reference's Dao.java reads and writes — and the one step that
+  * publishes a pass's diffs into it. LoadMain writes the first six
+  * entities, AnnotateMain `annotations`; every CLI reads them here.
+  */
+object ClinvarStore {
+
+  /** One store entity: its snapshot schema (as DDL, in column order)
+    * and natural key; every other column is content. The key columns
+    * come first, as the publish writes a snapshot: key, then content.
+    */
+  final case class Entity(name: String, ddl: String, keyCols: Seq[String]) {
+    val schema: StructType = StructType.fromDDL(ddl)
+    val contentCols: Seq[String] = schema.fieldNames.toSeq.diff(keyCols)
+
+    /** The current snapshot; an empty frame of [[schema]] on a fresh store. */
+    def read(spark: SparkSession, storeDir: String): DataFrame =
+      SnapshotStore.readOrEmpty(spark, storeDir, name, schema)
+
+    /** The 4-way CDC classification of `incoming` against `current`. */
+    def diff(incoming: DataFrame, current: DataFrame): DataFrame =
+      DiffSync(incoming, current, keyCols, contentCols)
+  }
+
+  // symbol/rcv_acc ride as content so the diff carries the full
+  // snapshot row (the write side rebuilds the store from it)
+  val Variants = Entity("variants",
+    "rgd_id BIGINT, symbol STRING, rcv_acc STRING, name STRING, object_type STRING, " +
+      "clinical_significance STRING, review_status STRING, method_type STRING, " +
+      "submitter STRING, trait_name STRING, notes STRING, ref_nuc STRING, var_nuc STRING, " +
+      "date_last_evaluated STRING",
+    Seq("rgd_id"))
+  val XdbIds = Entity("xdb_ids",
+    "rgd_id BIGINT, xdb_key INT, acc_id STRING", Seq("rgd_id", "xdb_key", "acc_id"))
+  val HgvsNames = Entity("hgvs_names",
+    "rgd_id BIGINT, hgvs_type STRING, name STRING", Seq("rgd_id", "hgvs_type", "name"))
+  // notes rides as content: the alias's RCV id (J7 scoping key)
+  val Aliases = Entity("aliases",
+    "rgd_id BIGINT, value STRING, notes STRING", Seq("rgd_id", "value"))
+  // variant_to_gene (J3)
+  val GeneAssociations = Entity("gene_associations",
+    "rgd_id BIGINT, gene_id STRING", Seq("rgd_id", "gene_id"))
+  // natural key = assembly+chr+coords (MapPositions.qc/sync:104-152, J5)
+  val MapPositions = Entity("map_positions",
+    "rgd_id BIGINT, assembly STRING, chromosome STRING, start_pos BIGINT, stop_pos BIGINT",
+    Seq("rgd_id", "assembly", "chromosome", "start_pos", "stop_pos"))
+  // the 5 columns the reference's exact-match probe looks up before
+  // deciding touch vs insert (VariantAnnotator.java:180-187
+  // getAnnotationKey; Dao.java:635-637); with_info is content
+  val Annotations = Entity("annotations",
+    "annotated_rgd_id BIGINT, term_acc STRING, aspect STRING, evidence STRING, " +
+      "xref_source STRING, with_info STRING",
+    Seq("annotated_rgd_id", "term_acc", "aspect", "evidence", "xref_source"))
+
+  /** Natural-key hash buckets per entity. 16 keeps fixture stores at a
+    * sane file count; at 100 TB, size it so one bucket ≈ one ~1 GB
+    * file (e.g. 4096 for a 4 TB entity) — the publish writes one file
+    * per CHANGED bucket either way.
+    */
+  val Buckets = 16
+
+  /** Write each diff as its audit table (K8), collect `counters` (K7),
+    * publish every entity's next snapshot, and release the caches.
+    * Returns the counters as (group, action) -> count.
+    *
+    * The counters are collected BEFORE the publish, whose GC deletes the
+    * store files the diffs were read from. All entities stage under one
+    * version dir, then ONE atomic manifest flip commits them together —
+    * the snapshot analog of the reference's Oracle transaction; entities
+    * not in `diffs` keep their pointers. Bucket-selective: only
+    * natural-key buckets holding an insert/update/delete are rewritten,
+    * unchanged ones carry by manifest reference, so a daily pass pays
+    * ~changed-fraction I/O — the analog of the reference's
+    * per-changed-row DML (Dao.java:218-248).
+    */
+  def publish(
+      storeDir: String,
+      diffs: Seq[(Entity, DataFrame)],
+      counters: DataFrame): Map[(String, String), Long] = {
+    diffs.foreach { case (e, d) =>
+      d.cache().write.mode("overwrite").parquet(s"$storeDir/audit/${e.name}")
+    }
+    val counts = counters.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    SnapshotStore.publishBucketed(
+      storeDir,
+      diffs.map { case (e, d) =>
+        e.name -> SnapshotStore.BucketedEntity(
+          snapshot = DiffSync.nextSnapshot(d, e.keyCols, e.contentCols),
+          changedKeys = d.filter(col(DiffSync.ActionCol).isin(DiffSync.Changed: _*)),
+          keyCols = e.keyCols,
+          numBuckets = Buckets)
+      })
+    // every write consumed the cached diffs; release them (and the
+    // pipeline-internal caches) so repeated passes in one session — the
+    // convergence loop, a daily batch job — don't accumulate blocks
+    diffs.foreach { case (_, d) => d.unpersist(blocking = false) }
+    CacheScope.releaseAll()
+    counts
+  }
+}

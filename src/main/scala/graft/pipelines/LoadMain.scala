@@ -1,11 +1,9 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.ingest.XmlIngest
-import graft.ops.DiffSync
 
 /** CLI for the full `--load` flow (SURVEY §3.1):
   * `runMain graft.pipelines.LoadMain <vcv-xml> <store-dir>`.
@@ -19,51 +17,6 @@ import graft.ops.DiffSync
   * semantics, Loader.java:42-49).
   */
 object LoadMain {
-
-  /** Natural-key hash buckets per entity. 16 keeps fixture stores at a
-    * sane file count; at 100 TB size this so one bucket ≈ one ~1 GB
-    * file (e.g. 4096 for a 4 TB entity) — the publish writes one file
-    * per CHANGED bucket either way.
-    */
-  val LoadBuckets = 16
-
-  private def emptyStore(spark: SparkSession): LoadPipeline.Store = {
-    def empty(schema: StructType): DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    LoadPipeline.Store(
-      variants = empty(StructType(
-        StructField("rgd_id", LongType) ::
-          StructField("symbol", StringType) :: StructField("rcv_acc", StringType) ::
-          LoadPipeline.VariantContentCols.map(StructField(_, StringType)).toList :::
-          StructField("date_last_evaluated", StringType) :: Nil)),
-      xdbIds = empty(StructType(Seq(
-        StructField("rgd_id", LongType), StructField("xdb_key", IntegerType),
-        StructField("acc_id", StringType)))),
-      hgvsNames = empty(StructType(Seq(
-        StructField("rgd_id", LongType), StructField("hgvs_type", StringType),
-        StructField("name", StringType)))),
-      aliases = empty(StructType(Seq(
-        StructField("rgd_id", LongType), StructField("value", StringType),
-        StructField("notes", StringType)))),
-      geneAssocs = empty(StructType(Seq(
-        StructField("rgd_id", LongType), StructField("gene_id", StringType)))),
-      mapPositions = empty(StructType(Seq(
-        StructField("rgd_id", LongType), StructField("assembly", StringType),
-        StructField("chromosome", StringType),
-        StructField("start_pos", LongType), StructField("stop_pos", LongType)))))
-  }
-
-  private def loadStore(spark: SparkSession, dir: String): LoadPipeline.Store = {
-    import graft.ops.SnapshotStore
-    if (!SnapshotStore.exists(dir, "variants")) emptyStore(spark)
-    else LoadPipeline.Store(
-      variants = SnapshotStore.read(spark, dir, "variants"),
-      xdbIds = SnapshotStore.read(spark, dir, "xdb_ids"),
-      hgvsNames = SnapshotStore.read(spark, dir, "hgvs_names"),
-      aliases = SnapshotStore.read(spark, dir, "aliases"),
-      geneAssocs = SnapshotStore.read(spark, dir, "gene_associations"),
-      mapPositions = SnapshotStore.read(spark, dir, "map_positions"))
-  }
 
   def main(args: Array[String]): Unit = {
     val spark = CliSession.local()
@@ -132,14 +85,6 @@ object LoadMain {
     * converge to matches (after the documented mergeCS rank-reorder
     * update on the first reload).
     */
-  /** Trailing versions kept readable after each publish
-    * (SnapshotStore retention; SPARK_GRAFT_RETAIN, default 1 = live
-    * only). >1 gives long-running concurrent readers their isolation
-    * lease and enables readAt time travel over the last N loads, at
-    * ~changed-fraction × N extra storage.
-    */
-  def retention: Int = sys.env.getOrElse("SPARK_GRAFT_RETAIN", "1").toInt
-
   def run(spark: SparkSession, xmlPath: String, storeDir: String): Map[(String, String), Long] = {
     val parsed = XmlIngest.parseRecords(XmlIngest.readRecords(spark, xmlPath)).cache()
     val vars = XmlIngest.variants(parsed).cache()
@@ -166,61 +111,14 @@ object LoadMain {
       .select(col("symbol"), col("assembly"), col("chromosome"),
         col("startPos").as("start_pos"), col("stopPos").as("stop_pos"))
 
-    val store = loadStore(spark, storeDir)
+    import ClinvarStore._
     val result = LoadPipeline.run(
       incomingVariants, incomingXdb, incomingHgvs, incomingAliases, incomingGenes,
-      incomingMapPos, store)
-
-    // audit (K8) + counters (K7)
-    val diffs = Seq(
-      "variants" -> result.variantsDiff, "xdb_ids" -> result.xdbDiff,
-      "hgvs_names" -> result.hgvsDiff, "aliases" -> result.aliasDiff,
-      "gene_associations" -> result.geneDiff,
-      "map_positions" -> result.mapPosDiff)
-    diffs.foreach { case (name, d) =>
-      d.cache().write.mode("overwrite").parquet(s"$storeDir/audit/$name")
-    }
-    val counters = result.counters.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-
-    // next snapshots (the write side of the merge, §2.6)
-    val contentOf = Map(
-      "variants" -> (Seq("rgd_id"),
-        Seq("symbol", "rcv_acc") ++ LoadPipeline.VariantContentCols :+ "date_last_evaluated"),
-      "xdb_ids" -> (Seq("rgd_id", "xdb_key", "acc_id"), Seq.empty[String]),
-      "hgvs_names" -> (Seq("rgd_id", "hgvs_type", "name"), Seq.empty[String]),
-      // notes rides as content: the alias's RCV id (J7 scoping key)
-      "aliases" -> (Seq("rgd_id", "value"), Seq("notes")),
-      "gene_associations" -> (Seq("rgd_id", "gene_id"), Seq.empty[String]),
-      "map_positions" -> (Seq("rgd_id", "assembly", "chromosome", "start_pos", "stop_pos"),
-        Seq.empty[String]))
-    // all six entities stage under one version dir, then ONE atomic
-    // manifest flip commits them together — the snapshot analog of the
-    // reference's Oracle transaction (a crash mid-write leaves readers
-    // on the previous fully-consistent state, never a mixed one).
-    // Bucket-selective: only natural-key hash buckets that contain an
-    // insert/update/delete this load are rewritten; unchanged buckets
-    // carry into the new version by manifest reference, so a daily load
-    // pays ~changed-fraction I/O, not a full rewrite — the snapshot
-    // analog of the reference's per-changed-row DML (Dao.java:218-248)
-    graft.ops.SnapshotStore.publishBucketed(
-      storeDir,
-      diffs.map { case (name, d) =>
-        val (keys, content) = contentOf(name)
-        name -> graft.ops.SnapshotStore.BucketedEntity(
-          snapshot = DiffSync.nextSnapshot(d, keys, content),
-          changedKeys = d.filter(
-            !col(DiffSync.ActionCol).isin(DiffSync.Match, "keep_stale")),
-          keyCols = keys,
-          numBuckets = LoadBuckets)
-      },
-      retain = retention)
-    // every write consumed the cached diffs; release them (and the
-    // pipeline-internal caches) so repeated loads in one session — the
-    // convergence loop, a daily-batch driver — don't accumulate blocks
-    diffs.foreach { case (_, d) => d.unpersist(blocking = false) }
-    graft.ops.CacheScope.releaseAll()
-    counters
+      incomingMapPos,
+      LoadPipeline.Store(
+        Variants.read(spark, storeDir), XdbIds.read(spark, storeDir),
+        HgvsNames.read(spark, storeDir), Aliases.read(spark, storeDir),
+        GeneAssociations.read(spark, storeDir), MapPositions.read(spark, storeDir)))
+    ClinvarStore.publish(storeDir, result.diffs, result.counters)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{AliasSync, DiffSync, FallbackJoin, RankedSetMerge, SetMerge}
+import ClinvarStore.{Aliases, GeneAssociations, HgvsNames, MapPositions, Variants, XdbIds}
 
 /** The `--load` dataflow (SURVEY §3.1; reference: Manager.run
   * Manager.java:100-137 → QC.run QC.java:29-94 → Loader.run
@@ -21,28 +22,27 @@ import graft.ops.{AliasSync, DiffSync, FallbackJoin, RankedSetMerge, SetMerge}
   */
 object LoadPipeline {
 
-  /** The persistent store snapshot (the Oracle tables of §1.1). */
+  /** The persistent store snapshot: the six load entities of
+    * [[ClinvarStore]], one field each, in their declared schemas.
+    */
   final case class Store(
-      variants: DataFrame,   // rgd_id, symbol, name, rcv_acc + content cols
-      xdbIds: DataFrame,     // rgd_id, xdb_key, acc_id
-      hgvsNames: DataFrame,  // rgd_id, hgvs_type, name
-      aliases: DataFrame,    // rgd_id, value, notes (the alias's RCV id, J7)
-      geneAssocs: DataFrame, // rgd_id, gene_id (variant_to_gene, J3)
-      mapPositions: DataFrame) // rgd_id, assembly, chromosome, start_pos, stop_pos (J5)
+      variants: DataFrame,
+      xdbIds: DataFrame,
+      hgvsNames: DataFrame,
+      aliases: DataFrame,
+      geneAssocs: DataFrame,
+      mapPositions: DataFrame)
 
-  final case class Result(
-      variantsDiff: DataFrame,
-      xdbDiff: DataFrame,
-      hgvsDiff: DataFrame,
-      aliasDiff: DataFrame,
-      geneDiff: DataFrame,
-      mapPosDiff: DataFrame,
-      counters: DataFrame)
+  /** The classified diff of each load entity, in [[ClinvarStore]] order. */
+  final case class Result(diffs: Seq[(ClinvarStore.Entity, DataFrame)]) {
+    def diff(e: ClinvarStore.Entity): DataFrame = diffs.collectFirst { case (`e`, d) => d }.get
 
-  /** Content columns merged/compared on the variant core. */
-  val VariantContentCols: Seq[String] = Seq(
-    "name", "object_type", "clinical_significance", "review_status",
-    "method_type", "submitter", "trait_name", "notes", "ref_nuc", "var_nuc")
+    /** entity, action, count */
+    def counters: DataFrame = diffs
+      .map { case (e, d) => d.groupBy(col("action")).count().withColumn("entity", lit(e.name)) }
+      .reduce(_.unionByName(_))
+      .select("entity", "action", "count")
+  }
 
   /** Identity-match incoming records against the store: by RCV
     * accession, else symbol, else name; multi-match = no-match
@@ -157,7 +157,7 @@ object LoadPipeline {
     * `symbol`; they are re-keyed to rgd ids through the identity match.
     */
   def run(
-      incomingVariants: DataFrame, // symbol, rcv_acc + VariantContentCols + date_last_evaluated
+      incomingVariants: DataFrame, // symbol + the variants content columns
       incomingXdb: DataFrame,      // symbol, xdb_key, acc_id
       incomingHgvs: DataFrame,     // symbol, hgvs_type, name
       incomingAliases: DataFrame,  // symbol, value
@@ -173,13 +173,7 @@ object LoadPipeline {
     val identified = graft.ops.CacheScope.persisted(matchIdentity(incomingVariants, store))
     val merged = mergeFields(identified, store)
 
-    // symbol/rcv_acc ride along as content so the diff frame carries the
-    // full snapshot row (the write side rebuilds the store from it)
-    val variantsDiff = DiffSync(
-      merged,
-      store.variants,
-      Seq("rgd_id"),
-      Seq("symbol", "rcv_acc") ++ VariantContentCols :+ "date_last_evaluated")
+    val variantsDiff = Variants.diff(merged, store.variants)
 
     val keyMap = identified.select(col("symbol").as("_sym"), col("rgd_id"))
 
@@ -187,11 +181,8 @@ object LoadPipeline {
       child.join(keyMap, child("symbol") === col("_sym")).drop("_sym", "symbol")
 
     val xdbDiff = DiffSync.guardDeletes(
-      DiffSync(rekey(incomingXdb), store.xdbIds,
-        Seq("rgd_id", "xdb_key", "acc_id"), Seq.empty),
-      maxXdbDeleteFraction)
-    val hgvsDiff = DiffSync(rekey(incomingHgvs), store.hgvsNames,
-      Seq("rgd_id", "hgvs_type", "name"), Seq.empty)
+      XdbIds.diff(rekey(incomingXdb), store.xdbIds), maxXdbDeleteFraction)
+    val hgvsDiff = HgvsNames.diff(rekey(incomingHgvs), store.hgvsNames)
     // alias diff (J7): case-insensitive value match, deletes scoped to
     // the record's RCV set (Aliases.qc, Aliases.java:51-90) — NOT plain
     // key equality. The valid RCV set = ClinVar xdb accessions (key 52)
@@ -211,12 +202,10 @@ object LoadPipeline {
     val aliasDiff = AliasSync(incomingAliasesKeyed, store.aliases, rcvSets)
     // association diff (GeneAssociations.sync:78-109): retain/remove set
     // algebra = the same full-outer classification on (rgd_id, gene_id)
-    val geneDiff = DiffSync(rekey(incomingGenes), store.geneAssocs,
-      Seq("rgd_id", "gene_id"), Seq.empty)
-    // map-position diff: natural key = assembly+chr+coords
-    // (MapPositions.qc/sync:104-152, rgdcore MapDataSyncer semantics)
-    val mapPosDiff = DiffSync(rekey(incomingMapPos), store.mapPositions,
-      Seq("rgd_id", "assembly", "chromosome", "start_pos", "stop_pos"), Seq.empty)
+    val geneDiff = GeneAssociations.diff(rekey(incomingGenes), store.geneAssocs)
+    // map-position diff (MapPositions.qc/sync:104-152, rgdcore
+    // MapDataSyncer semantics)
+    val mapPosDiff = MapPositions.diff(rekey(incomingMapPos), store.mapPositions)
 
     // last-modified cascade (Loader.java:56-78): any child-table change
     // for a processed variant touches the parent's last-modified date —
@@ -224,7 +213,7 @@ object LoadPipeline {
     // stale-GC cutoff. Surfaced as a `touched` flag the write side must
     // stamp; delete-action (stale) variants are never touched.
     val childTouch = Seq(xdbDiff, hgvsDiff, aliasDiff, geneDiff, mapPosDiff)
-      .map(_.filter(col("action").isin("insert", "update", "delete")).select("rgd_id"))
+      .map(_.filter(col("action").isin(DiffSync.Changed: _*)).select("rgd_id"))
       .reduce(_.unionByName(_))
       .distinct()
       .withColumn("_child_touch", lit(true))
@@ -237,16 +226,8 @@ object LoadPipeline {
             col("action").isin("insert", "update")))
       .drop("_child_touch")
 
-    val counters = Seq(
-      ("variants", variantsDiff), ("xdb_ids", xdbDiff),
-      ("hgvs_names", hgvsDiff), ("aliases", aliasDiff),
-      ("gene_associations", geneDiff), ("map_positions", mapPosDiff))
-      .map { case (entity, d) =>
-        d.groupBy(col("action")).count().withColumn("entity", lit(entity))
-      }
-      .reduce(_.unionByName(_))
-      .select("entity", "action", "count")
-
-    Result(variantsTouched, xdbDiff, hgvsDiff, aliasDiff, geneDiff, mapPosDiff, counters)
+    Result(Seq(
+      Variants -> variantsTouched, XdbIds -> xdbDiff, HgvsNames -> hgvsDiff,
+      Aliases -> aliasDiff, GeneAssociations -> geneDiff, MapPositions -> mapPosDiff))
   }
 }

@@ -13,7 +13,7 @@ object VariantRsIdMain {
     // the store keeps dbSNP accessions raw (parser F8); the DB link
     // text the reference filters on (X7) is "rs" + acc
     val updates = VariantRsIdPipeline.run(
-      graft.ops.SnapshotStore.read(spark, storeDir, "xdb_ids")
+      ClinvarStore.XdbIds.read(spark, storeDir)
         .withColumn("link_text", concat(lit("rs"), col("acc_id"))),
       spark.read.parquet(variantMapPath))
     updates.cache().write.mode("overwrite").parquet(s"$storeDir/audit/rs_id_updates")

@@ -85,6 +85,24 @@ class ParserCoverageSpec extends graft.SparkSpec {
     assert(res.counters("HGVS_NAME_SKIPPED_LONGER_THAN_4000") === 1L)
   }
 
+  test("a DOCTYPE with an external entity is a PARSE_ERROR and reads nothing") {
+    val secret = java.nio.file.Files.createTempFile("xxe", ".txt")
+    secret.toFile.deleteOnExit()
+    val marker = "XXE-MARKER-7f3a"
+    java.nio.file.Files.writeString(secret, marker)
+    val xml =
+      s"""<?xml version="1.0"?>
+         |<!DOCTYPE VariationArchive [<!ENTITY leak SYSTEM "${secret.toUri}">]>
+         |<VariationArchive VariationID="1">
+         |  <ClassifiedRecord>
+         |    <SimpleAllele AlleleID="1" VariationID="1"><Name>&leak;</Name></SimpleAllele>
+         |  </ClassifiedRecord>
+         |</VariationArchive>""".stripMargin
+    val res = VcvParser.parse(xml)
+    assert(res.status === ParseResult.ParseError)
+    assert(!res.toString.contains(marker))
+  }
+
   test("record with no ClassifiedRecord / no allele reports NO_SIMPLE_ALLELE") {
     assert(VcvParser.parse("<VariationArchive VariationID=\"1\"/>").status
       === ParseResult.NoSimpleAllele)

@@ -39,8 +39,11 @@ class AnnotateMainIntegrationSpec extends SparkSpec {
     val r1 = AnnotateMain.run(spark, store, dims)
     assert(r1.getOrElse(("D", "insert"), 0L) >= 2L, s"r1=$r1")
     assert(graft.ops.SnapshotStore.bucketCount(store, "annotations")
-      === Some(LoadMain.LoadBuckets))
+      === Some(ClinvarStore.Buckets))
     val annots = graft.ops.SnapshotStore.read(spark, store, "annotations")
+    // the published snapshot has exactly its declared schema (names,
+    // types, column order)
+    assert(annots.schema === ClinvarStore.Annotations.schema)
     assert(annots.count() >= 2)
     assert(annots.filter(annots("evidence") === "ISO").count() >= 1)
 
@@ -52,5 +55,7 @@ class AnnotateMainIntegrationSpec extends SparkSpec {
     assert(r2.keys.forall(_._2 == "match"), s"r2=$r2")
     assert(graft.ops.SnapshotStore.readManifest(store) === manifestBefore,
       "an all-match annotate pass rewrote buckets")
+    assert(graft.ops.SnapshotStore.read(spark, store, "annotations").schema
+      === ClinvarStore.Annotations.schema)
   }
 }

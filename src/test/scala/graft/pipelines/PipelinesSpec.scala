@@ -50,7 +50,7 @@ class LoadPipelineSpec extends SparkSpec {
   }
 
   test("field merges: ranked clinsig union, newest-wins date (A2/A3)") {
-    val diff = result.variantsDiff
+    val diff = result.diff(ClinvarStore.Variants)
     val cv1 = diff.filter($"rgd_id" === 10L)
       .select("clinical_significance", "date_last_evaluated", "action")
       .as[(String, String, String)].head()
@@ -138,7 +138,7 @@ class LoadPipelineSpec extends SparkSpec {
         .withColumn("chromosome", lit("")).withColumn("start_pos", lit(0L))
         .withColumn("stop_pos", lit(0L)).limit(0),
       store, maxXdbDeleteFraction = 0.05)
-    val actions = guarded.xdbDiff.groupBy("action").count()
+    val actions = guarded.diff(ClinvarStore.XdbIds).groupBy("action").count()
       .as[(String, Long)].collect().toMap
     assert(actions.getOrElse("keep_stale", 0L) === 2L) // 48/111 + RCV002
     assert(actions.getOrElse("delete", 0L) === 0L)
@@ -160,7 +160,7 @@ class LoadPipelineSpec extends SparkSpec {
       Seq(("CV1", "9907")).toDF("symbol", "gene_id"),
       Seq(("CV1", "GRCh38", "7", 100L, 101L)).toDF("symbol", "assembly", "chromosome", "start_pos", "stop_pos"),
       store, maxXdbDeleteFraction = 0.99)
-    val rows = r.variantsDiff.select("rgd_id", "action", "touched")
+    val rows = r.diff(ClinvarStore.Variants).select("rgd_id", "action", "touched")
       .as[(Long, String, Boolean)].collect().map(x => x._1 -> ((x._2, x._3))).toMap
     assert(rows(10L) === (("match", true)))   // unchanged row, child insert -> touched
     assert(rows(11L) === (("delete", false))) // stale CV2: never touched
