@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -65,7 +64,7 @@ case class CmsSketchAgg(
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val base = CmsSketch.md5Base48(v.asInstanceOf[UTF8String].getBytes)
+      val base = Md5PrefixLong.hash(v.asInstanceOf[UTF8String].getBytes, 6)
       var j = 0
       while (j < depth) {
         buf(j * width + ((base >>> (bits * j)) & (width - 1)).toInt) += 1L
@@ -104,23 +103,6 @@ case class CmsSketchAgg(
 }
 
 object CmsSketch {
-
-  // MessageDigest is stateful and not thread-safe; getInstance per row
-  // would dominate the update hot loop, so each task thread reuses one
-  private val Md5 = ThreadLocal.withInitial[MessageDigest](() =>
-    MessageDigest.getInstance("MD5"))
-
-  /** First 48 bits of md5(bytes) as a non-negative long — identical to
-    * SQL `conv(substring(md5(x), 1, 12), 16, 10)` and DuckDB
-    * `('0x' || substr(md5(x), 1, 12))::BIGINT`.
-    */
-  def md5Base48(bytes: Array[Byte]): Long = {
-    val md = Md5.get()
-    md.reset()
-    val d = md.digest(bytes)
-    ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) | ((d(2) & 0xffL) << 24) |
-      ((d(3) & 0xffL) << 16) | ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
-  }
 
   def apply(c: Column, depth: Int, width: Int): Column =
     ColumnBridge.column(

@@ -30,9 +30,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * [[nullSafeEval]] on the same kernel).
   *
   * MessageDigest is stateful and not thread-safe; getInstance per row
-  * would dominate the loop, so each task thread reuses one (the
-  * [[CmsSketch]] discipline — its fixed-width [[CmsSketch.md5Base48]]
-  * is this kernel at prefixBytes = 6).
+  * would dominate the loop, so each task thread reuses one. [[hash]] is
+  * also the JVM-side kernel of [[CmsSketchAgg]]'s update and of
+  * [[MinhashSignature]].
   */
 case class Md5PrefixLong(child: Expression, prefixBytes: Int)
     extends UnaryExpression {

@@ -86,8 +86,10 @@ object LoadMain {
     * update on the first reload).
     */
   def run(spark: SparkSession, xmlPath: String, storeDir: String): Map[(String, String), Long] = {
-    val parsed = XmlIngest.parseRecords(XmlIngest.readRecords(spark, xmlPath)).cache()
-    val vars = XmlIngest.variants(parsed).cache()
+    // the one cache of the parse: every incoming entity below reads it,
+    // and the publish step's releaseAll drops it
+    val vars = graft.ops.CacheScope.persisted(
+      XmlIngest.variants(XmlIngest.parseRecords(XmlIngest.readRecords(spark, xmlPath))))
 
     val incomingVariants = vars.select(
       col("symbol"), col("rcvAcc").as("rcv_acc"), col("name"),

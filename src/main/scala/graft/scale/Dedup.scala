@@ -66,23 +66,6 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     graft.functions.WordShingles(split(trim(text), "\\s+"), n)
 
-  /** MinHash signature: for each of `numHashes` seeds, the minimum
-    * xxhash64(seed, shingle) over the shingle set. Seeds are static, so
-    * this is a fixed-size array column computed map-side.
-    */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shinglesCol, s => xxhash64(lit(seed), s)))
-    }: _*)
-
-  /** LSH band keys: hash each of `bands` contiguous signature slices
-    * (rows-per-band = |sig| / bands) together with the band index.
-    */
-  def lshBandKeys(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      xxhash64(lit(b), array_join(slice(sigCol, b * rowsPerBand + 1, rowsPerBand), ","))
-    }: _*)
-
   /** Per-band member lists under a hard bucket cap — the LSH skew
     * guard. Buckets that exceed `maxBucket` members (degenerate or
     * boilerplate content funneling into one band key, the condition
@@ -109,68 +92,19 @@ object Dedup {
         .agg(graft.functions.BoundedCollectList(member, maxBucket).as(out))
         .filter(col(out).isNotNull)
 
-  /** Candidate near-duplicate pairs via MinHash+LSH, verified with true
-    * shingle-set Jaccard >= `threshold`. Returns (id_a, id_b, jaccard)
-    * with id_a < id_b, distinct.
+  /** MinHash+LSH near-dup pairs; every stage is codegen'd work:
     *
-    * Scale notes: buckets are exploded band keys; pair generation happens
-    * inside each bucket (collect_list per bucket then pairwise explode),
-    * so the cost is sum(bucket^2), not N^2. Oversized buckets (degenerate
-    * content) are capped via `maxBucket`.
-    */
-  def minhashCandidatePairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5,
-      maxBucket: Int = 1000): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val withSig = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .withColumn("band", explode(lshBandKeys(minhashSignature(col("sh"), numHashes), bands, rowsPerBand)))
-
-    val buckets = bucketMembers(
-      withSig, struct(col("id"), col("sh")), maxBucket, "members")
-
-    val pairs = buckets
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(
-        col("a"),
-        explode(filter(col("members"), m => m("id") > col("a.id"))).as("b"))
-
-    pairs
-      .select(
-        col("a.id").as("id_a"),
-        col("b.id").as("id_b"),
-        jaccard(col("a.sh"), col("b.sh")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .distinct()
-  }
-
-  /** MinHash+LSH near-dup pairs, explode/hash-agg formulation.
-    *
-    * Unlike [[minhashCandidatePairs]] (array-typed signatures built with
-    * higher-order functions, which are CodegenFallback/interpreted),
-    * every stage here is codegen'd relational work:
-    *
-    *   1. explode shingles → (id, shingle) rows;
-    *   2. signature = groupBy(id) with `numHashes` min(md5(seed:sh))
-    *      aggs — hash-agg with map-side partial merge, so the shuffle
-    *      carries one row per doc;
-    *   3. band keys = md5 over signature slices, exploded → bucket
+    *   1. signature = [[minhashSignatures]], one codegen'd kernel per
+    *      doc row (no shingle explode, no shuffle);
+    *   2. band keys = md5 over signature slices, exploded → bucket
     *      groupBy on the band key (shuffled payload is (band, id) only —
     *      never the shingle sets);
-    *   4. candidate pairs verified with EXACT Jaccard: the per-doc
-    *      shingle sets ride along in the signature row, so |A∩B| is an
-    *      array intersect over candidate pairs only,
-    *      |A∪B| = nA + nB − |A∩B|.
+    *   3. candidate pairs verified with EXACT Jaccard: shingle sets are
+    *      recomputed for candidate ids only, so |A∩B| is an array
+    *      intersect over candidate pairs, |A∪B| = nA + nB − |A∩B|.
     *
     * md5 (not xxhash64) so the DuckDB oracle can reproduce the exact
-    * min-hash selections — and md5 is codegen'd too, so the scan stays
-    * in whole-stage codegen.
+    * min-hash selections.
     */
   def minhashPairsExact(
       docs: DataFrame,
@@ -335,6 +269,12 @@ object Dedup {
     * c_i < 2^15 keeps c_i·h < 2^63: no overflow in Spark OR in the
     * DuckDB oracle's strict BIGINT arithmetic. md5 (not xxhash64) so
     * the oracle reproduces the selections bit-for-bit.
+    *
+    * Row-local: each doc's signature is one
+    * [[graft.functions.MinhashSignature]] call over its own shingle set,
+    * so there is no shingle explode and no shuffle. PRECONDITION: `idCol`
+    * is a key of `docs` (every caller passes `doc_id` or a packed
+    * `chunk_id`); rows sharing an id are NOT merged into one signature.
     */
   def minhashSignatures(
       docs: DataFrame,
@@ -342,25 +282,17 @@ object Dedup {
       textCol: String,
       shingleSize: Int,
       numHashes: Int): DataFrame = {
-    // ONE groupBy(id) produces the whole signature and the shingle
-    // count — the only shuffle of shingle data in the plan (map-side
-    // partials; everything downstream is per-doc rows)
-    val groups = (numHashes + 15) / 16
-    val sh0 = docs
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), shingleSize)).as("sh"))
-    // 48-bit md5 prefix via the codegen'd digest kernel (r21): the old
-    // conv(substring(md5(...)))::long composite paid a hex encode + a
-    // NumberConverter hex→decimal-string conversion PER SHINGLE — the
-    // dedup family's hottest loop; same value bit-for-bit (oracle SQL
-    // unchanged)
-    val sh = (0 until groups).foldLeft(sh0) { (df, g) =>
-      df.withColumn(s"hg$g",
-        graft.functions.Md5PrefixLong(concat(lit(s"$g:"), col("sh")), 6))
-    }
-    val sigAggs = (0 until numHashes).map { s =>
-      min((lit(MinhashMultipliers(s % 16)) * col(s"hg${s / 16}")) % lit(MinhashMod)).as(s"h$s")
-    } :+ count(lit(1)).as("n")
-    sh.groupBy("id").agg(sigAggs.head, sigAggs.tail: _*)
+    // shingle-less docs are exactly the null-text ones (a split yields
+    // at least one word, so non-null text has at least one shingle);
+    // filtering on the text keeps the shingle loop out of the pushed-down
+    // scan filter, so it runs once per doc
+    val sig = docs
+      .filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
+      .select(col("id"),
+        graft.functions.MinhashSignature(col("sh"), numHashes).as("sig"),
+        size(col("sh")).cast("long").as("n"))
+    sig.select(col("id") +: (0 until numHashes).map(s => col("sig")(s).as(s"h$s")) :+ col("n"): _*)
   }
 
   /** 16 odd (prime) multipliers < 2^15 for the per-block MinHash
@@ -374,17 +306,20 @@ object Dedup {
   /** 2^48 — the bijection modulus matching the 12-hex-char base hash. */
   private[graft] val MinhashMod: Long = 1L << 48
 
-  /** Exploded (id, band-key) rows from a signature frame — the single
+  /** The `bands` LSH band keys of one signature (hash s read by `h`):
+    * md5 of the band index and its `rowsPerBand`-long slice — the single
     * source of the band md5 construction for the self-join, the
-    * incremental probe, and the oracle generators.
+    * incremental probe and the stream-side probe.
     */
-  private def bandKeysOf(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val keys = (0 until bands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
+  private[graft] def bandKeys(h: Int => Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      val slice = (0 until rowsPerBand).map(r => h(b * rowsPerBand + r))
       md5(concat(lit(s"$b:"), concat_ws(",", slice: _*)).cast("binary"))
-    }
-    sig.select(col("id"), explode(array(keys: _*)).as("band"))
-  }
+    }: _*)
+
+  /** Exploded (id, band-key) rows from a signature frame. */
+  private def bandKeysOf(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sig.select(col("id"), explode(bandKeys(s => col(s"h$s"), bands, rowsPerBand)).as("band"))
 
   /** Incremental near-dup filter: drop NEW documents that near-duplicate
     * anything in the EXISTING corpus — the production dedup shape (a
@@ -436,13 +371,10 @@ object Dedup {
       bands: Int = 8,
       maxBucket: Int = 1000): DataFrame = {
     val rowsPerBand = numHashes / bands
-    val keys = (0 until bands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      md5(concat(lit(s"$b:"), concat_ws(",", slice: _*)).cast("binary"))
-    }
     bucketMembers(
       bandKeysOf(sig, bands, rowsPerBand)
-        .join(sig.select(col("id"), array(keys: _*).as("bkeys")), Seq("id")),
+        .join(sig.select(col("id"),
+          bandKeys(s => col(s"h$s"), bands, rowsPerBand).as("bkeys")), Seq("id")),
       struct(col("id"), col("bkeys")), maxBucket, "members")
   }
 
@@ -475,10 +407,13 @@ object Dedup {
       bandKeysOf(sigCorp, bands, rowsPerBand), col("id"), maxBucket, "ids")
     // persisted: the candidate list feeds both verify-side semi-joins
     // and the final pair join — LSH-bounded, tiny next to the corpus;
-    // CacheScope-registered so the query driver can release it
+    // CacheScope-registered so the query driver can release it.
+    // Hash-partitioned on new_id, so the new-side id distinct and the
+    // surviving-id distinct below reuse this one slim shuffle
     val candidates = graft.ops.CacheScope.persisted(bandKeysOf(sigNew, bands, rowsPerBand)
       .join(corpBuckets, Seq("band"))
       .select(col("id").as("new_id"), explode(col("ids")).as("corp_id"))
+      .repartition(col("new_id"))
       .distinct())
     val dupNewIds = candidates
       .join(candidateShingleSets(newDocs, idCol, textCol, shingleSize,
@@ -743,26 +678,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol))
       .select(idCol)
     docs.join(keep, Seq(idCol), "left_semi")
-  }
-
-  /** SimHash near-dup candidate groups: documents sharing the same
-    * simhash band (4 x 16-bit bands => hamming distance <= 3 candidates
-    * land in at least one common band with high probability).
-    */
-  def simhashCandidates(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sh = TextStats.simhash64(col(textCol))
-    val bandedDocs = docs
-      .select(col(idCol).as("id"), sh.as("simhash"))
-      .withColumn(
-        "band",
-        explode(array((0 until 4).map { b =>
-          struct(lit(b).as("band_idx"),
-            shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL)).as("band_val"))
-        }: _*)))
-    bandedDocs
-      .groupBy("band")
-      .agg(array_sort(collect_set(col("id"))).as("ids"), count(lit(1)).as("n"))
-      .filter(col("n") > 1)
   }
 
   /** Benchmark decontamination — the training-data hygiene staple: flag
@@ -1038,7 +953,7 @@ object Dedup {
     * sample present in both corpora estimates gram-level Jaccard.
     *
     * Hashes are the 48-bit md5 prefix (`conv(substr(md5, 1, 12))` —
-    * the [[graft.functions.CmsSketch.md5Base48]] idiom), so the DuckDB
+    * the [[graft.functions.Md5PrefixLong]] idiom), so the DuckDB
     * oracle reproduces the exact sample and the report is
     * deterministic, not probabilistic-in-the-engine (the ESTIMATE's
     * error is statistical in k, but both engines compute the identical

@@ -92,9 +92,8 @@ object TextStats {
     *
     * Shape: explode tokens → md5 once per token → groupBy(id) with 64
     * conditional-sum vote aggs (all codegen'd hash-agg with map-side
-    * partials; the xxhash64 [[simhash64]] variant is a single-pass
-    * higher-order fold, which is interpreted) → sign of each vote is a
-    * bit, packed as 16 hex chars (most-significant nibble first).
+    * partials) → sign of each vote is a bit, packed as 16 hex chars
+    * (most-significant nibble first).
     * Bit b of a token = bit (b mod 4) of md5 hex digit (b div 4).
     */
   def simhashMd5(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -138,27 +137,6 @@ object TextStats {
        |    $votes
        |  FROM tok GROUP BY id)
        |SELECT id AS $idCol, $nibbles AS simhash FROM voted""".stripMargin
-  }
-
-  /** 64-bit SimHash over whitespace tokens: per bit, sum +1/-1 votes of
-    * each token's xxhash64 bit, take the sign. Pure built-ins: a
-    * transform over 64 bit positions aggregating over the token array.
-    */
-  def simhash64(text: Column): Column = {
-    val masks = typedlit((0 until 64).map(i => 1L << i))
-    val tokens = split(trim(text), "\\s+")
-    val hashes = transform(tokens, t => xxhash64(t))
-    // single pass: 64 vote counters updated per token hash
-    val votes = aggregate(
-      hashes,
-      typedlit(Seq.fill(64)(0L)),
-      (acc, h) =>
-        zip_with(acc, masks, (a, m) =>
-          a + when(h.bitwiseAND(m) =!= 0L, lit(1L)).otherwise(lit(-1L))))
-    aggregate(
-      zip_with(votes, masks, (v, m) => when(v > 0, m).otherwise(lit(0L))),
-      lit(0L),
-      (acc, x) => acc.bitwiseOR(x))
   }
 
   // === PII scrubbing ==========================================================
@@ -570,7 +548,7 @@ object TextStats {
     * [[graft.functions.CmsSketch]] array column: min over the `depth`
     * counter rows at this value's md5-window buckets. Pure `functions._`
     * composite — the same 48-bit md5 base and bit windows as the
-    * aggregate's update path ([[graft.functions.CmsSketch.md5Base48]]).
+    * aggregate's update path ([[graft.functions.Md5PrefixLong.hash]]).
     */
   def cmsEstimate(sketch: Column, value: Column, depth: Int, width: Int): Column = {
     val bits = Integer.numberOfTrailingZeros(width)

@@ -1073,10 +1073,10 @@ object StreamingOps {
     *
     * STATELESS: no watermark, no state store, no stream-side
     * aggregation. Per arriving row, the md5-bijection MinHash
-    * signature and band keys compute as column expressions (mirroring
-    * [[graft.scale.Dedup.minhashSignatures]] bit-for-bit — the spec
-    * pins stream == batch), then TWO stream-static equi-joins: the
-    * exploded band keys probe `index`
+    * signature ([[graft.functions.MinhashSignature]], the kernel of
+    * [[graft.scale.Dedup.minhashSignatures]] — the spec pins stream ==
+    * batch) and band keys compute per row, then TWO stream-static
+    * equi-joins: the exploded band keys probe `index`
     * ([[graft.scale.Dedup.signatureBandIndex]] — capped buckets whose
     * members carry their signatures), and verified candidates fetch
     * the corpus shingle set by id for the exact-Jaccard check. A
@@ -1086,9 +1086,9 @@ object StreamingOps {
     * the FIRST shared band (the RangeJoin emit-once-cell rule applied
     * to LSH bands).
     *
-    * Scale — the SERVING RECIPE (century-measured, `Profile
-    * incrstream`): both static sides must be PERSISTED by the caller
-    * pre-partitioned AND sorted on their join keys —
+    * Scale — the SERVING RECIPE (century-measured by a since-deleted
+    * `Profile incrstream` mode): both static sides must be PERSISTED by
+    * the caller pre-partitioned AND sorted on their join keys —
     * `index.repartition(col("band")).sortWithinPartitions("band")` and
     * `corpusShingles.repartition(col("corp_id"))
     * .sortWithinPartitions("corp_id")` — because a stream-static join
@@ -1120,34 +1120,17 @@ object StreamingOps {
     val rowsPerBand = numHashes / bands
     require(rowsPerBand * bands == numHashes,
       s"bands $bands must divide numHashes $numHashes")
-    val groups = (numHashes + 15) / 16
-    // per-row signature: the exact minhashSignatures arithmetic as
-    // column expressions (48-bit md5 prefix per hash group, odd-
-    // multiplier bijections, min over the shingle set)
-    // drop shingle-less docs on the CHEAP predicate before any minhash
-    // arithmetic exists in the plan: a later h0-isNotNull filter gets
-    // pushed to the scan with its full expression tree re-expanded —
-    // measured at the century as ~17 word_shingles evaluations PER ROW
-    // in the scan filter (the r14 incrstream finding)
-    val sh0 = docs.select(
+    // drop shingle-less docs on the CHEAP predicate before the signature
+    // exists in the plan: a later h0-isNotNull filter gets pushed to the
+    // scan with its full expression tree re-expanded — measured at the
+    // century as ~17 word_shingles evaluations PER ROW in the scan
+    // filter (the r14 incrstream finding)
+    val probes = docs.select(
       col(idCol), Dedup.shingles(col(textCol), shingleSize).as("sha"))
       .filter(size(col("sha")) > 0)
-    val withHg = (0 until groups).foldLeft(sh0) { (df, g) =>
-      df.withColumn(s"hg$g",
-        transform(col("sha"), s =>
-          graft.functions.Md5PrefixLong(concat(lit(s"$g:"), s), 6)))
-    }
-    val withH = (0 until numHashes).foldLeft(withHg) { (df, s) =>
-      df.withColumn(s"h$s",
-        array_min(transform(col(s"hg${s / 16}"),
-          h => (lit(Dedup.MinhashMultipliers(s % 16)) * h) % lit(Dedup.MinhashMod))))
-    }
-    def bandKeysFrom(h: Int => Column): Column = array((0 until bands).map { b =>
-      val slice = (0 until rowsPerBand).map(r => h(b * rowsPerBand + r))
-      md5(concat(lit(s"$b:"), concat_ws(",", slice: _*)).cast("binary"))
-    }: _*)
-    val probes = withH
-      .withColumn("bkeys", bandKeysFrom(s => col(s"h$s")))
+      // the batch signature kernel, so stream == batch by construction
+      .withColumn("sig", graft.functions.MinhashSignature(col("sha"), numHashes))
+      .withColumn("bkeys", Dedup.bandKeys(s => col("sig")(s), bands, rowsPerBand))
       // explode a FOLDABLE band-index sequence, not the bkeys array:
       // exploding bkeys makes the optimizer infer a size(bkeys) > 0
       // scan filter whose pushed-down form re-expands the whole 8-md5

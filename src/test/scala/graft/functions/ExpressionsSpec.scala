@@ -111,8 +111,8 @@ class ExpressionsSpec extends SparkSpec {
       assert(f48 === r48); assert(f32 === r32)
       assert(f48 >= 0L && f32 >= 0L)
     }
-    // inside a transform lambda (the streaming minhash shape): the
-    // interpreted eval path must agree with the codegen path above
+    // inside a transform lambda: the interpreted eval path must agree
+    // with the codegen path above
     val arr = Seq(Seq("a", "b", "c")).toDF("sha")
     val lam = arr.select(
       transform($"sha", s => Md5PrefixLong(concat(lit("2:"), s), 6)).as("fast"),
@@ -120,5 +120,42 @@ class ExpressionsSpec extends SparkSpec {
         conv(substring(md5(concat(lit("2:"), s).cast("binary")), 1, 12), 16, 10)
           .cast("long")).as("ref")).as[(Seq[Long], Seq[Long])]
     lam.collect().foreach { case (f, r) => assert(f === r) }
+  }
+
+  test("MinhashSignature matches the explode/groupBy signature it replaced") {
+    import graft.scale.Dedup
+    // the reference: the signature as a relational min per hash over the
+    // exploded shingles, grouped by id — the formulation the DuckDB
+    // oracles reproduce, one md5 per shingle per block of 16 hashes
+    def reference(docs: org.apache.spark.sql.DataFrame, numHashes: Int) = {
+      val sh0 = docs.select($"doc_id".as("id"), explode(Dedup.shingles($"text", 3)).as("sh"))
+      val sh = (0 until (numHashes + 15) / 16).foldLeft(sh0) { (df, g) =>
+        df.withColumn(s"hg$g", Md5PrefixLong(concat(lit(s"$g:"), $"sh"), 6))
+      }
+      val aggs = (0 until numHashes).map { s =>
+        min((lit(Dedup.MinhashMultipliers(s % 16)) * col(s"hg${s / 16}")) %
+          lit(Dedup.MinhashMod)).as(s"h$s")
+      } :+ count(lit(1)).as("n")
+      sh.groupBy("id").agg(aggs.head, aggs.tail: _*)
+    }
+    val local = Seq[(Long, String)](
+      1L -> "the quick brown fox jumps over the lazy dog the quick brown fox",
+      2L -> "single", // one shingle
+      3L -> "\u00fcn\u00efc\u00f6d\u00e9 \u4e2d\u6587 \u6587\u672c \u30c6\u30ad\u30b9\u30c8 donn\u00e9es", // non-ASCII
+      4L -> null) // no shingles: no signature row
+      .toDF("doc_id", "text")
+    // a local relation evaluates the kernel interpreted; repartitioned,
+    // it runs inside whole-stage codegen
+    for (docs <- Seq(local, local.repartition(2)); k <- Seq(16, 32)) {
+      val fast = Dedup.minhashSignatures(docs, "doc_id", "text", 3, k)
+      val ref = reference(docs, k)
+      assert(fast.schema.map(f => (f.name, f.dataType)) === ref.schema.map(f => (f.name, f.dataType)))
+      assert(rowSeqs(fast) === rowSeqs(ref), s"numHashes=$k")
+      assert(fast.count() === 3L)
+    }
+    // the kernel alone: an empty shingle set has no signature
+    val empty = Seq(Seq.empty[String], Seq("a b c")).toDF("sh").repartition(1)
+      .select(MinhashSignature($"sh", 16).as("sig")).as[Option[Seq[Long]]].collect()
+    assert(empty.count(_.isEmpty) === 1 && empty.flatten.map(_.size) === Seq(16))
   }
 }

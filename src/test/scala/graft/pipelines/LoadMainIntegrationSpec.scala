@@ -56,6 +56,17 @@ class LoadMainIntegrationSpec extends SparkSpec {
     assertLayout(store)
   }
 
+  test("a load pass leaves no cached RDD behind in its session") {
+    val store = java.nio.file.Files.createTempDirectory("cachestore").toFile.getAbsolutePath
+    val xml = graft.SparkEntry.fixturePath("data/fixtures/vcv_sample.xml")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    LoadMain.run(spark, xml, store) // bootstrap
+    assert(sc.getPersistentRDDs.size === before, "the bootstrap pass left cached RDDs")
+    LoadMain.run(spark, xml, store) // reload against the published store
+    assert(sc.getPersistentRDDs.size === before, "the reload pass left cached RDDs")
+  }
+
   test("publish: an aliases diff whose only non-match rows are `keep` rewrites no bucket") {
     val store = java.nio.file.Files.createTempDirectory("keepstore").toFile.getAbsolutePath
     def aliasDiff(actions: String*) = actions.zipWithIndex

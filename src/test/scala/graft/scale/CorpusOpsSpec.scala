@@ -1732,6 +1732,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(math.abs(merged - 700L) < 35L, s"estimate $merged far from 700")
   }
 
+  // md5Base48: the 48-bit md5 prefix key, computed by Md5PrefixLong.hash(_, 6).
   test("md5Base48 matches the SQL conv(substring(md5, 1, 12)) formulation") {
     val vals = Seq("alpha beta", "x", "", "the quick brown fox")
     val fromSql = vals.toDF("v")
@@ -1739,7 +1740,7 @@ class CorpusOpsSpec extends SparkSpec {
         .cast("long").as("b"))
       .collect().map(_.getLong(0))
     val fromJvm = vals.map(v =>
-      graft.functions.CmsSketch.md5Base48(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      graft.functions.Md5PrefixLong.hash(v.getBytes(java.nio.charset.StandardCharsets.UTF_8), 6))
     assert(fromSql.toSeq === fromJvm)
   }
 }

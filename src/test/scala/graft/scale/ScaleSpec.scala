@@ -651,7 +651,6 @@ class ScaleSpec extends SparkSpec {
       val sigCorp = Dedup.minhashSignatures(docs, "doc_id", "text", 3, 16)
       val frames = Seq(
         Dedup.minhashPairsExact(docs, "doc_id", "text"),
-        Dedup.minhashCandidatePairs(docs, "doc_id", "text"),
         Dedup.nearDupAgainstSignatures(docs, docs, sigNew, sigCorp, "doc_id", "text"))
       assert(frames.forall(_.columns.nonEmpty)) // constructed, never executed
       spark.range(1).collect() // sentinel 2
