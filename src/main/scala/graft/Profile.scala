@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Profiling harness (not part of the library surface). Runs on the
   * shipped session (`Bench.session`) with `$SPARK_GRAFT_CPUS` cores
@@ -151,18 +154,25 @@ object Profile {
     }
   }
 
-  /** AQE off so the plan shape is deterministic. */
+  /** Exchanges inside the caches a plan scans (nested ones too), which `foreach` skips. */
+  private def cachedExchanges(plan: SparkPlan): Int = plan.collect { case s: InMemoryTableScanExec =>
+    s.relation.cachedPlan.collect { case e: Exchange => e }.size + cachedExchanges(s.relation.cachedPlan)
+  }.sum
+
+  /** AQE off so the plan shape is deterministic. `exchanges=` counts the
+    * plan's own shuffles, `cached_exchanges=` those inside its caches.
+    */
   private def plancounts(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
       val p = SparkEntry.queries(q)(spark, WarmDir).queryExecution.executedPlan
       var ex = 0; var bnlj = 0
       p.foreach { n =>
-        if (n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) ex += 1
+        if (n.isInstanceOf[Exchange]) ex += 1
         if (n.nodeName.contains("BroadcastNestedLoop") ||
           n.nodeName.contains("CartesianProduct")) bnlj += 1
       }
-      println(s"[plan] $q exchanges=$ex bnlj=$bnlj")
+      println(s"[plan] $q exchanges=$ex bnlj=$bnlj cached_exchanges=${cachedExchanges(p)}")
     }
   }
 }

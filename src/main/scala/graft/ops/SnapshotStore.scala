@@ -118,7 +118,20 @@ object SnapshotStore {
       entity: String,
       schema: StructType): DataFrame =
     if (exists(storeDir, entity)) read(spark, storeDir, entity)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    // a LocalRelation, so the optimizer prunes the joins against it
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
+
+  /** `f` over `xs`, one driver thread per element: the entities of one
+    * publish write concurrently. Waits for every call to finish, then
+    * rethrows the first failure.
+    */
+  private[graft] def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(xs.size, 1))
+    try {
+      val pending = xs.map(x => pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
+      pending.map(p => scala.util.Try(p.get())).map(_.fold(e => throw Option(e.getCause).getOrElse(e), identity))
+    } finally pool.shutdown()
+  }
 
   private val VersionDir = "^v(\\d+)$".r
 
@@ -278,8 +291,9 @@ object SnapshotStore {
     new File(storeDir).mkdirs()
     val prior = readManifest(storeDir)
     val v = nextVersion(storeDir)
-    var entries = prior
-    frames.foreach { case (entity, be) =>
+    // every entity stages concurrently under its own dir of v<N>; the
+    // manifest is built and flipped once, after every write succeeded
+    val staged = inParallel(frames) { case (entity, be) =>
       val pre = bucketKeyPrefix(entity)
       // first bucketed publish of this entity — or a numBuckets change —
       // rewrites all buckets (rows move between buckets otherwise)
@@ -299,7 +313,7 @@ object SnapshotStore {
           .write.partitionBy("bucket").mode("overwrite")
           .parquet(s"$storeDir/v$v/$entity")
       }
-      var next = (0 until be.numBuckets).flatMap { k =>
+      val next = (0 until be.numBuckets).flatMap { k =>
         if (changed(k)) {
           val rel = s"v$v/$entity/bucket=$k"
           // a changed bucket with zero surviving rows stages no dir —
@@ -307,17 +321,19 @@ object SnapshotStore {
           if (new File(s"$storeDir/$rel").exists()) Some(s"$pre$k" -> rel) else None
         } else prior.get(s"$pre$k").map(rel => s"$pre$k" -> rel)
       }
-      if (next.isEmpty) {
+      if (next.nonEmpty) next :+ (bucketCountKey(entity) -> be.numBuckets.toString)
+      else {
         // entity emptied out entirely: stage a zero-row parquet (schema
         // preserved) so readers still resolve — without it, paths()
         // would fall back to the nonexistent legacy flat dir and fail
         val rel = s"v$v/$entity/bucket=0"
         be.snapshot.limit(0).write.mode("overwrite").parquet(s"$storeDir/$rel")
-        next = IndexedSeq(s"${pre}0" -> rel)
+        Seq(s"${pre}0" -> rel, bucketCountKey(entity) -> be.numBuckets.toString)
       }
-      entries = entries.removedAll(
-        prior.keys.filter(k => k == entity || k.startsWith(pre) || k == bucketCountKey(entity))) ++
-        next + (bucketCountKey(entity) -> be.numBuckets.toString)
+    }
+    val entries = frames.map(_._1).zip(staged).foldLeft(prior) { case (m, (entity, next)) =>
+      m.removedAll(prior.keys.filter(k =>
+        k == entity || k.startsWith(bucketKeyPrefix(entity)) || k == bucketCountKey(entity))) ++ next
     }
     commitManifest(storeDir, v, entries)
     gc(storeDir, entries, retain)

@@ -61,12 +61,13 @@ object AnnotateMain {
       else termIndex.limit(0)
     val orthologs = spark.read.parquet(s"$dimsDir/orthologs.parquet")
 
-    val result = AnnotatePipeline.run(
+    val diff = AnnotatePipeline.run(
       variants, variantXdb, variantGene, conceptMap, rdoSynonyms,
       termIndex, hpoTermIndex, orthologs, ClinvarStore.Annotations.read(spark, storeDir))
     // subset publish: only `annotations` moves to the new version; the
     // load entities keep their manifest pointers in the same atomic flip
     ClinvarStore.publish(
-      storeDir, Seq(ClinvarStore.Annotations -> result.annotDiff), result.counters)
+      storeDir, ClinvarStore.audit(storeDir, Seq(ClinvarStore.Annotations -> diff)),
+      _ => col("aspect"))
   }
 }

@@ -161,8 +161,6 @@ object AnnotatePipeline {
       maxLen = withInfoMax)
   }
 
-  final case class Result(annotDiff: DataFrame, counters: DataFrame)
-
   /** J11: the annotation exact-match probe (on the
     * [[ClinvarStore.Annotations]] natural key) + stale-delete guard.
     * Matching rows are the reference's "touch" (update last-modified
@@ -187,7 +185,8 @@ object AnnotatePipeline {
 
   /** Full annotate pass: filter → term resolution (chain + name
     * fallback) → ortholog fan-out → merge/split → DiffSync vs store
-    * with the per-aspect 5% delete guard (Dao.java:690-729).
+    * with the per-aspect 5% delete guard (Dao.java:690-729). Returns
+    * the classified annotation diff.
     */
   def run(
       variants: DataFrame,
@@ -201,7 +200,7 @@ object AnnotatePipeline {
       orthologs: DataFrame,
       currentAnnots: DataFrame,  // annotated_rgd_id, term_acc, xref_source, with_info
       excludedConditions: Seq[String] = ExcludedConditionNames,
-      maxDeleteFraction: Double = 0.05): Result = {
+      maxDeleteFraction: Double = 0.05): DataFrame = {
 
     val compliant = carpeCompliant(variants).select(col("rgd_id"), col("trait_name"))
 
@@ -256,8 +255,6 @@ object AnnotatePipeline {
     val merged = mergeAnnotations(direct.unionByName(viaOrthologs))
 
     // PER-ASPECT 5% delete ceiling (Dao.deleteObsoleteAnnotations:690-729)
-    val diff = annotDiff(merged, currentAnnots, maxDeleteFraction)
-
-    Result(diff, diff.groupBy("aspect", "action").count())
+    annotDiff(merged, currentAnnots, maxDeleteFraction)
   }
 }

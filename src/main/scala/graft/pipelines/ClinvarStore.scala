@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -67,42 +67,51 @@ object ClinvarStore {
     */
   val Buckets = 16
 
-  /** Write each diff as its audit table (K8), collect `counters` (K7),
-    * publish every entity's next snapshot, and release the caches.
-    * Returns the counters as (group, action) -> count.
-    *
-    * The counters are collected BEFORE the publish, whose GC deletes the
-    * store files the diffs were read from. All entities stage under one
-    * version dir, then ONE atomic manifest flip commits them together —
-    * the snapshot analog of the reference's Oracle transaction; entities
-    * not in `diffs` keep their pointers. Bucket-selective: only
-    * natural-key buckets holding an insert/update/delete are rewritten,
-    * unchanged ones carry by manifest reference, so a daily pass pays
-    * ~changed-fraction I/O — the analog of the reference's
-    * per-changed-row DML (Dao.java:218-248).
+  /** Write each diff as its audit table (K8), the entities concurrently,
+    * and return each one read back from what was written. Every later
+    * step of the pass plans against that leaf scan, so each diff is
+    * computed exactly once, by its own audit write.
+    */
+  def audit(storeDir: String, diffs: Seq[(Entity, DataFrame)]): Seq[(Entity, DataFrame)] =
+    SnapshotStore.inParallel(diffs) { case (e, d) =>
+      val path = s"$storeDir/audit/${e.name}"
+      d.write.mode("overwrite").parquet(path)
+      e -> d.sparkSession.read.parquet(path)
+    }
+
+  /** The (group, action) -> count counters (K7) of `diffs`, in one job;
+    * `group` names each entity's counter group (a literal, or a column
+    * such as annotate's `aspect`).
+    */
+  def counters(diffs: Seq[(Entity, DataFrame)], group: Entity => Column): Map[(String, String), Long] =
+    diffs.map { case (e, d) => d.select(group(e).as("group"), col(DiffSync.ActionCol)) }
+      .reduce(_.unionByName(_))
+      .groupBy("group", DiffSync.ActionCol).count()
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  /** Publish a pass from its [[audit]] tables: collect their counters,
+    * write every entity's next snapshot through ONE bucket-selective
+    * manifest flip ([[SnapshotStore.publishBucketed]], the analog of the
+    * reference's Oracle transaction and per-changed-row DML,
+    * Dao.java:218-248), and release the pass's caches. Entities not in
+    * `audits` keep their pointers. Returns (group, action) -> count.
     */
   def publish(
       storeDir: String,
-      diffs: Seq[(Entity, DataFrame)],
-      counters: DataFrame): Map[(String, String), Long] = {
-    diffs.foreach { case (e, d) =>
-      d.cache().write.mode("overwrite").parquet(s"$storeDir/audit/${e.name}")
-    }
-    val counts = counters.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      audits: Seq[(Entity, DataFrame)],
+      group: Entity => Column): Map[(String, String), Long] = {
+    val counts = counters(audits, group)
     SnapshotStore.publishBucketed(
       storeDir,
-      diffs.map { case (e, d) =>
+      audits.map { case (e, d) =>
         e.name -> SnapshotStore.BucketedEntity(
           snapshot = DiffSync.nextSnapshot(d, e.keyCols, e.contentCols),
           changedKeys = d.filter(col(DiffSync.ActionCol).isin(DiffSync.Changed: _*)),
           keyCols = e.keyCols,
           numBuckets = Buckets)
       })
-    // every write consumed the cached diffs; release them (and the
-    // pipeline-internal caches) so repeated passes in one session — the
-    // convergence loop, a daily batch job — don't accumulate blocks
-    diffs.foreach { case (_, d) => d.unpersist(blocking = false) }
+    // repeated passes in one session (the convergence loop, a daily
+    // batch job) must not accumulate the pipeline-internal caches
     CacheScope.releaseAll()
     counts
   }

@@ -121,6 +121,9 @@ object LoadMain {
         Variants.read(spark, storeDir), XdbIds.read(spark, storeDir),
         HgvsNames.read(spark, storeDir), Aliases.read(spark, storeDir),
         GeneAssociations.read(spark, storeDir), MapPositions.read(spark, storeDir)))
-    ClinvarStore.publish(storeDir, result.diffs, result.counters)
+    // children first: the variants touch reads their written audits
+    val children = audit(storeDir, result.children)
+    val variants = audit(storeDir, Seq(Variants -> result.touched(children.map(_._2))))
+    publish(storeDir, variants ++ children, e => lit(e.name))
   }
 }

@@ -13,7 +13,7 @@ import ClinvarStore.{Aliases, GeneAssociations, HgvsNames, MapPositions, Variant
   *   ingest variants → 3-stage fallback identity match (J1) →
   *   per-field merges vs the matched store row (A1/A2/A3) →
   *   4-way DiffSync per entity (§2.6) → guarded stale deletes →
-  *   next snapshots + audit frames + counters.
+  *   the parent's last-modified touch, cascaded from the child diffs.
   *
   * The reference runs QC/Loader per record with JDBC point lookups;
   * here every step is one distributed join/agg over the whole batch.
@@ -33,15 +33,36 @@ object LoadPipeline {
       geneAssocs: DataFrame,
       mapPositions: DataFrame)
 
-  /** The classified diff of each load entity, in [[ClinvarStore]] order. */
-  final case class Result(diffs: Seq[(ClinvarStore.Entity, DataFrame)]) {
-    def diff(e: ClinvarStore.Entity): DataFrame = diffs.collectFirst { case (`e`, d) => d }.get
+  /** A load's classified diffs: the five child entities, and the
+    * variants diff before the last-modified touch cascaded from them.
+    */
+  final case class Result(variants: DataFrame, children: Seq[(ClinvarStore.Entity, DataFrame)]) {
+    /** The variants diff with its `touched` flag, cascaded from
+      * `childDiffs` (the lazy [[children]], or their written audits).
+      * Loader.java:56-78: any child-table change for a processed variant
+      * touches the parent's last-modified date, which protects
+      * child-churn-only variants from the stale-GC cutoff; delete-action
+      * (stale) variants are never touched.
+      */
+    def touched(childDiffs: Seq[DataFrame]): DataFrame = {
+      val childTouch = childDiffs
+        .map(_.filter(col("action").isin(DiffSync.Changed: _*)).select("rgd_id"))
+        .reduce(_.unionByName(_))
+        .distinct()
+        .withColumn("_child_touch", lit(true))
+      variants
+        .join(childTouch, Seq("rgd_id"), "left")
+        .withColumn(
+          "touched",
+          col("action") =!= "delete" &&
+            (coalesce(col("_child_touch"), lit(false)) ||
+              col("action").isin("insert", "update")))
+        .drop("_child_touch")
+    }
 
-    /** entity, action, count */
-    def counters: DataFrame = diffs
-      .map { case (e, d) => d.groupBy(col("action")).count().withColumn("entity", lit(e.name)) }
-      .reduce(_.unionByName(_))
-      .select("entity", "action", "count")
+    def diff(e: ClinvarStore.Entity): DataFrame =
+      if (e == Variants) touched(children.map(_._2))
+      else children.collectFirst { case (`e`, d) => d }.get
   }
 
   /** Identity-match incoming records against the store: by RCV
@@ -166,8 +187,8 @@ object LoadPipeline {
       store: Store,
       maxXdbDeleteFraction: Double = 0.08): Result = {
 
-    // persisted: ~8 consumers below (variant diff, key maps, RCV sets,
-    // child rekeys, counters) would otherwise each re-run the 3-stage
+    // persisted: ~7 consumers below (variant diff, key maps, RCV sets,
+    // child rekeys) would otherwise each re-run the 3-stage
     // match and the insert-path range sort from scratch; CacheScope-
     // registered so batch drivers release it between loads
     val identified = graft.ops.CacheScope.persisted(matchIdentity(incomingVariants, store))
@@ -207,27 +228,8 @@ object LoadPipeline {
     // MapDataSyncer semantics)
     val mapPosDiff = MapPositions.diff(rekey(incomingMapPos), store.mapPositions)
 
-    // last-modified cascade (Loader.java:56-78): any child-table change
-    // for a processed variant touches the parent's last-modified date —
-    // the touch is what protects child-churn-only variants from the
-    // stale-GC cutoff. Surfaced as a `touched` flag the write side must
-    // stamp; delete-action (stale) variants are never touched.
-    val childTouch = Seq(xdbDiff, hgvsDiff, aliasDiff, geneDiff, mapPosDiff)
-      .map(_.filter(col("action").isin(DiffSync.Changed: _*)).select("rgd_id"))
-      .reduce(_.unionByName(_))
-      .distinct()
-      .withColumn("_child_touch", lit(true))
-    val variantsTouched = variantsDiff
-      .join(childTouch, Seq("rgd_id"), "left")
-      .withColumn(
-        "touched",
-        col("action") =!= "delete" &&
-          (coalesce(col("_child_touch"), lit(false)) ||
-            col("action").isin("insert", "update")))
-      .drop("_child_touch")
-
-    Result(Seq(
-      Variants -> variantsTouched, XdbIds -> xdbDiff, HgvsNames -> hgvsDiff,
-      Aliases -> aliasDiff, GeneAssociations -> geneDiff, MapPositions -> mapPosDiff))
+    Result(variantsDiff, Seq(
+      XdbIds -> xdbDiff, HgvsNames -> hgvsDiff, Aliases -> aliasDiff,
+      GeneAssociations -> geneDiff, MapPositions -> mapPosDiff))
   }
 }

@@ -175,38 +175,12 @@ object Dedup {
     when(uni === 0d, lit(1d)).otherwise(inter / uni)
   }
 
-  /** N-gram Jaccard near-dup pairs within explicit blocking keys (e.g.
-    * language + length bucket): cheaper than LSH when a natural blocking
-    * key exists; exact Jaccard inside each block.
-    */
-  def ngramJaccardPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      blockCols: Seq[Column],
-      shingleSize: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
-    val d = docs.select(
-      struct(blockCols: _*).as("block"),
-      col(idCol).as("id"),
-      shingles(col(textCol), shingleSize).as("sh"))
-    val buckets = d.groupBy("block").agg(collect_list(struct(col("id"), col("sh"))).as("members"))
-    buckets
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(col("a"), explode(filter(col("members"), m => m("id") > col("a.id"))).as("b"))
-      .select(
-        col("a.id").as("id_a"),
-        col("b.id").as("id_b"),
-        jaccard(col("a.sh"), col("b.sh")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** Blocked exact n-gram Jaccard pairs, relational formulation: the
     * shingle self-equi-join restricted to a blocking key (e.g. language
     * + length bucket) computes |A∩B| directly; |A∪B| = nA + nB − |A∩B|.
     * Cheaper than LSH when a natural blocking key exists, and fully
-    * codegen'd (vs the array-typed [[ngramJaccardPairs]]). Pair cost is
-    * sum over blocks of (shingle-match count), never |N|².
+    * codegen'd. Pair cost is sum over blocks of (shingle-match count),
+    * never |N|².
     */
   def ngramJaccardJoin(
       docs: DataFrame,

@@ -1120,14 +1120,14 @@ object StreamingOps {
     val rowsPerBand = numHashes / bands
     require(rowsPerBand * bands == numHashes,
       s"bands $bands must divide numHashes $numHashes")
-    // drop shingle-less docs on the CHEAP predicate before the signature
-    // exists in the plan: a later h0-isNotNull filter gets pushed to the
-    // scan with its full expression tree re-expanded — measured at the
-    // century as ~17 word_shingles evaluations PER ROW in the scan
-    // filter (the r14 incrstream finding)
-    val probes = docs.select(
-      col(idCol), Dedup.shingles(col(textCol), shingleSize).as("sha"))
-      .filter(size(col("sha")) > 0)
+    // drop shingle-less docs on the text, before any shingle exists in
+    // the plan: they are exactly the null-text ones (a split yields at
+    // least one word), and a filter on the shingles or the signature is
+    // pushed into the scan with word_shingles re-expanded, so the
+    // shingle loop would run twice or more per row (as in
+    // Dedup.minhashSignatures)
+    val probes = docs.filter(col(textCol).isNotNull)
+      .select(col(idCol), Dedup.shingles(col(textCol), shingleSize).as("sha"))
       // the batch signature kernel, so stream == batch by construction
       .withColumn("sig", graft.functions.MinhashSignature(col("sha"), numHashes))
       .withColumn("bkeys", Dedup.bandKeys(s => col("sig")(s), bands, rowsPerBand))
@@ -1203,20 +1203,4 @@ object StreamingOps {
             graft.scale.TextStats.hashBucket(t, buckets)))
           .as("score_milli"))
   }
-
-  /** Required output mode per operator (documented contract for sinks). */
-  val OutputModes: Map[String, OutputMode] = Map(
-    "windowedCounts" -> OutputMode.Append(), // closed windows only
-    "userRunningTotals" -> OutputMode.Update(),
-    "dedupStream" -> OutputMode.Append(),
-    "latestPerUser" -> OutputMode.Update(),
-    "decontaminateStream" -> OutputMode.Append(), // stateless
-    "retrieveStream" -> OutputMode.Append(), // stateless
-    "nearDupMatchesStream" -> OutputMode.Append(), // stateless
-    "dsirScoreStream" -> OutputMode.Append(), // stateless
-    "preferencePairsFinalStream" -> OutputMode.Append(), // eviction
-    "feedbackClassCountsFinalStream" -> OutputMode.Append(), // eviction
-    "trajectorySignalFinalStream" -> OutputMode.Append(), // eviction
-    "driftBucketCountsFinalStream" -> OutputMode.Append(), // eviction
-    "cmsSketchStream" -> OutputMode.Complete())
 }

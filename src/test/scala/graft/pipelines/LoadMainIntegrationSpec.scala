@@ -1,6 +1,8 @@
 package graft.pipelines
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, udf}
 
 /** End-to-end `--load` convergence over the real fixture XML and a real
   * on-disk store — the integration surface unit specs miss (this round
@@ -72,17 +74,62 @@ class LoadMainIntegrationSpec extends SparkSpec {
     def aliasDiff(actions: String*) = actions.zipWithIndex
       .map { case (a, i) => (i.toLong, s"alias$i", "RCV000001", a) }
       .toDF("rgd_id", "value", "notes", "action")
-    val noCounters = Seq.empty[(String, String, Long)].toDF("entity", "action", "count")
-    ClinvarStore.publish(store,
-      Seq(ClinvarStore.Aliases -> aliasDiff("insert", "insert", "insert", "insert")), noCounters)
+    def publish(diff: DataFrame) = ClinvarStore.publish(store,
+      ClinvarStore.audit(store, Seq(ClinvarStore.Aliases -> diff)), e => lit(e.name))
+    publish(aliasDiff("insert", "insert", "insert", "insert"))
     val manifestBefore = graft.ops.SnapshotStore.readManifest(store)
 
     // AliasSync's `keep`: a stored alias left alone — no stored row changes
-    ClinvarStore.publish(store,
-      Seq(ClinvarStore.Aliases -> aliasDiff("match", "keep", "keep", "match")), noCounters)
+    publish(aliasDiff("match", "keep", "keep", "match"))
     assert(graft.ops.SnapshotStore.readManifest(store) === manifestBefore,
       "a keep-only aliases diff rewrote buckets")
     assert(graft.ops.SnapshotStore.read(spark, store, "aliases").count() === 4L)
+  }
+
+  test("publish: one entity's failed write fails the publish with no manifest flip") {
+    import java.nio.file.{Files, Paths}
+    val store = Files.createTempDirectory("failstore").toFile.getAbsolutePath
+    def genes(ids: Long*) = ids.map(i => (i, s"g$i", "insert")).toDF("rgd_id", "gene_id", "action")
+    def aliases(notes: String) = Seq((1L, "a1", notes, "insert"), (2L, "a2", notes, "insert"))
+      .toDF("rgd_id", "value", "notes", "action")
+    ClinvarStore.publish(store, Seq(
+      ClinvarStore.GeneAssociations -> genes(1L, 2L),
+      ClinvarStore.Aliases -> aliases("RCV1")), e => lit(e.name))
+    val manifest = Files.readAllBytes(Paths.get(store, graft.ops.SnapshotStore.ManifestName))
+    def snapshot(e: ClinvarStore.Entity) = e.read(spark, store).collect().map(_.toString).sorted.toSeq
+    val before = Seq(ClinvarStore.GeneAssociations, ClinvarStore.Aliases).map(snapshot)
+
+    // the aliases snapshot write throws while the genes write, running
+    // beside it, succeeds
+    val boom = udf((v: String) => { if (v != null) throw new IllegalStateException("injected"); v })
+    intercept[Exception] {
+      ClinvarStore.publish(store, Seq(
+        ClinvarStore.GeneAssociations -> genes(3L, 4L, 5L),
+        ClinvarStore.Aliases -> aliases("RCV2").withColumn("notes", boom(col("notes")))),
+        e => lit(e.name))
+    }
+    assert(Files.readAllBytes(Paths.get(store, graft.ops.SnapshotStore.ManifestName)) === manifest,
+      "a failed publish flipped the manifest")
+    assert(Seq(ClinvarStore.GeneAssociations, ClinvarStore.Aliases).map(snapshot) === before)
+  }
+
+  test("a missing entity reads as an empty relation: its diff plans no join and is all-insert") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val store = java.nio.file.Files.createTempDirectory("freshstore").toFile.getAbsolutePath
+    val e = ClinvarStore.XdbIds
+    val incoming = Seq((1L, 52, "RCV1"), (2L, 48, "111"), (2L, 52, "RCV2"))
+      .toDF("rgd_id", "xdb_key", "acc_id")
+    val diff = e.diff(incoming, e.read(spark, store))
+    assert(diff.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty,
+      diff.queryExecution.optimizedPlan.treeString)
+    // the same diff against an opaque empty leaf keeps its full-outer join
+    val opaque = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], e.schema)
+    val allInsert = e.diff(incoming, opaque)
+    assert(allInsert.queryExecution.optimizedPlan.collect { case j: Join => j }.nonEmpty)
+    assert(diff.schema === allInsert.schema)
+    assert(diff.collect().map(_.toString).sorted === allInsert.collect().map(_.toString).sorted)
+    assert(diff.select("action").distinct().as[String].collect().toSeq === Seq("insert"))
   }
 
   test("--landing mode: loads the newest dated dir once; re-run without a new dir is a no-op") {

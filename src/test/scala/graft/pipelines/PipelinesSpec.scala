@@ -112,8 +112,9 @@ class LoadPipelineSpec extends SparkSpec {
   }
 
   test("per-entity diff classification + counters (§2.6/K7)") {
-    val c = result.counters.as[(String, String, Long)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
+    val r = result
+    val c = ClinvarStore.counters(
+      (ClinvarStore.Variants -> r.diff(ClinvarStore.Variants)) +: r.children, e => lit(e.name))
     assert(c(("variants", "update")) === 1L) // CV1 merged
     assert(c(("variants", "insert")) === 1L) // CV3
     assert(c(("variants", "delete")) === 1L) // CV2 stale
@@ -229,7 +230,7 @@ class AnnotatePipelineSpec extends SparkSpec {
   }
 
   test("concept chain resolves variant 1; name fallback resolves variant 4 (J8/J9)") {
-    val annots = result.annotDiff.filter($"action" === "insert")
+    val annots = result.filter($"action" === "insert")
       .select("annotated_rgd_id", "term_acc", "aspect", "evidence", "xref_source")
       .as[(Long, String, String, String, String)].collect().toSet
     // direct annots carry IAGP + the variant's PMID list as xref (A12)
@@ -252,7 +253,7 @@ class AnnotatePipelineSpec extends SparkSpec {
     val guarded = AnnotatePipeline.run(
       variants, variantXdb, variantGene, conceptMap, rdoSynonyms, termIndex,
       hpoTermIndex, orthologs, currentAnnots = cur)
-    val byAspect = guarded.annotDiff.groupBy("aspect", "action").count()
+    val byAspect = guarded.groupBy("aspect", "action").count()
       .as[(String, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     // H: 20/21 would be deleted -> way over 5% -> all kept stale
     assert(byAspect.getOrElse(("H", "keep_stale"), 0L) === 20L)
@@ -260,7 +261,7 @@ class AnnotatePipelineSpec extends SparkSpec {
   }
 
   test("ISO with_info records the propagation source variant") {
-    val wi = result.annotDiff.filter($"evidence" === "ISO")
+    val wi = result.filter($"evidence" === "ISO")
       .select("with_info").as[String].collect().toSet
     assert(wi === Set("RGD:1"))
   }

@@ -433,6 +433,32 @@ class StreamingOpsSpec extends SparkSpec {
     }
   }
 
+  test("nearDupMatchesStream: empty and blank docs keep their matches; no shingle filter in the scan") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.WordShingles
+    import graft.scale.Dedup
+    val corpus = Seq((1L, "the quick brown fox jumps over"), (2L, ""))
+      .toDF("doc_id", "text")
+    val index = Dedup.signatureBandIndex(Dedup.minhashSignatures(corpus, "doc_id", "text", 3, 16))
+    val corpSh = corpus.select(col("doc_id").as("corp_id"), Dedup.shingles(col("text"), 3).as("shb"))
+    // parquet-backed, so the docs side is a scan the filters push into
+    val path = java.nio.file.Files.createTempDirectory("probes").toFile.getAbsolutePath + "/docs"
+    Seq[(Long, String)]((10L, "the quick brown fox jumps over"), (11L, ""), (12L, "   "),
+      (13L, null), (14L, "completely different words in here"))
+      .toDF("doc_id", "text").write.parquet(path)
+    val probe = StreamingOps.nearDupMatchesStream(
+      spark.read.parquet(path), corpSh, index, "doc_id", "text", threshold = 0.2)
+    // an empty or blank text is ONE shingle, "", as for the corpus's
+    // empty doc; only the null text has none
+    assert(probe.as[(Long, Long, Double)].collect().sortBy(_._1).toSeq ===
+      Seq((10L, 1L, 1.0), (11L, 2L, 1.0), (12L, 2L, 1.0)))
+    val shingleFilters = probe.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+          if f.condition.exists(_.isInstanceOf[WordShingles]) => f.condition.sql
+    }
+    assert(shingleFilters.isEmpty, s"word_shingles in a filter: $shingleFilters")
+  }
+
   test("driftBucketCountsStream + batch tail == the batch drift monitor at every prefix") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, lit}
