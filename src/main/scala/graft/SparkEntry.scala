@@ -378,8 +378,7 @@ object SparkEntry {
         .mergeThenSplit(
           li,
           keyCols = Seq("l_suppkey"),
-          mergeCols = Map("xrefs" -> (col("xref"), "[|]", "|")),
-          splitCol = "xrefs",
+          out = "xrefs", src = col("xref"), splitRegex = "[|]",
           maxLen = 120)
         .select(col("l_suppkey"), col("xrefs"))
     }),

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * unprocessed variants are out of the diff (the reference runs qc per
   * processed record; stale variants are handled by the GC cutoff, not
   * here). All joins key on (rgd_id[, lower(value)]) — high-cardinality
-  * shuffle keys, no per-record loops.
+  * shuffle keys, no per-record loops. Semi/anti join right sides are not
+  * deduplicated: their duplicates cannot change the result.
   */
 object AliasSync {
 
@@ -28,10 +29,11 @@ object AliasSync {
     * @return rgd_id, value, notes, action in insert|match|delete|keep
     */
   def apply(incoming: DataFrame, current: DataFrame, rcvSets: DataFrame): DataFrame = {
-    val processed = incoming.select("rgd_id").distinct()
+    val processed = incoming.select("rgd_id")
     val cur = current.join(processed, Seq("rgd_id"), "left_semi")
 
-    // 1) RCV-scope filter (Aliases.java:55-65)
+    // 1) RCV-scope filter (Aliases.java:55-65); rcvSets is deduplicated:
+    //    a repeated RCV would repeat the stored alias in the LEFT join
     val inScope = cur.join(
       rcvSets.select(col("rgd_id"), col("rcv").as("notes")).distinct()
         .withColumn("_in_set", lit(true)),
@@ -47,7 +49,7 @@ object AliasSync {
 
     // 2) case-insensitive value match (Aliases.detach, Aliases.java:94-106)
     val incLv = incoming
-      .select(col("rgd_id"), lower(col("value")).as("_lv")).distinct()
+      .select(col("rgd_id"), lower(col("value")).as("_lv"))
     val matched = candidates
       .join(incLv, Seq("rgd_id", "_lv"), "left_semi")
       .select("rgd_id", "value", "notes")
@@ -66,7 +68,7 @@ object AliasSync {
       .select("rgd_id", "value", "notes", "action")
 
     // 4) incoming with no CI match among in-scope stored aliases: insert
-    val curLv = candidates.select("rgd_id", "_lv").distinct()
+    val curLv = candidates.select("rgd_id", "_lv")
     val inserts = incoming
       .withColumn("_lv", lower(col("value")))
       .join(curLv, Seq("rgd_id", "_lv"), "left_anti")

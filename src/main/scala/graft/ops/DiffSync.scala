@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * scales linearly, and AQE handles skewed keys.
   *
   * Output schema: natural-key columns, each content column (incoming
-  * value, null for deletes), each content column with `_old` suffix
+  * value, null for deletes), each content column with the [[OldSuffix]]
   * (current-store value, null for inserts), and `action`.
   *
   * The classified frame doubles as the reference's per-entity audit logs
@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
 object DiffSync {
 
   val ActionCol = "action"
+
+  /** Suffix of a content column's current-store copy in a diff. */
+  val OldSuffix = "_old"
 
   val Insert = "insert"
   val Update = "update"
@@ -45,17 +48,16 @@ object DiffSync {
       incoming: DataFrame,
       current: DataFrame,
       keyCols: Seq[String],
-      contentCols: Seq[String],
-      oldSuffix: String = "_old"): DataFrame = {
+      contentCols: Seq[String]): DataFrame = {
     val inc = incoming
       .select((keyCols ++ contentCols).map(col): _*)
       .withColumn("_g_inc", lit(true))
     val cur = current
-      .select(keyCols.map(col) ++ contentCols.map(c => col(c).as(c + oldSuffix)): _*)
+      .select(keyCols.map(col) ++ contentCols.map(c => col(c).as(c + OldSuffix)): _*)
       .withColumn("_g_cur", lit(true))
     val joined = inc.join(cur, keyCols, "full_outer")
     val changed = contentCols
-      .map(c => !(col(c) <=> col(c + oldSuffix)))
+      .map(c => !(col(c) <=> col(c + OldSuffix)))
       .reduceOption(_ || _)
       .getOrElse(lit(false))
     joined
@@ -142,14 +144,13 @@ object DiffSync {
   def nextSnapshot(
       diff: DataFrame,
       keyCols: Seq[String],
-      contentCols: Seq[String],
-      oldSuffix: String = "_old"): DataFrame = {
+      contentCols: Seq[String]): DataFrame = {
     val keep = diff.filter(col(ActionCol) =!= Delete)
     val picked = contentCols.map { c =>
       // diffs from operators without an old-side copy (e.g. AliasSync)
       // carry no *_old columns — the current value is the value
-      if (diff.columns.contains(c + oldSuffix))
-        when(col(ActionCol) === KeepStale, col(c + oldSuffix))
+      if (diff.columns.contains(c + OldSuffix))
+        when(col(ActionCol) === KeepStale, col(c + OldSuffix))
           .otherwise(col(c))
           .as(c)
       else col(c)

@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
   * (reference: AnnotCache.mergeIncomingAnnots1/2, AnnotCache.java:92-134 /
   * 169-211; splitAnnots/splitAnnots2, AnnotCache.java:136-167 / 213-244).
   *
-  * Phase 1 groups annotations on a 9-part natural key and set-merges
-  * XREF_SOURCE (split on `[|,;]`) and NOTES (split on ` | `); rows whose
-  * merged XREF_SOURCE exceeds 4000 chars are split back into multiple
-  * rows at the last `|` before the limit. Phase 2 repeats with the key
-  * including xref_source and WITH_INFO merged (1700-char limit).
+  * Annotate's phase 1 groups on the annotation key with WITH_INFO and
+  * set-merges XREF_SOURCE; merged values over 4000 chars split back into
+  * rows at the last `|` before the limit. Phase 2 groups on the store's
+  * natural key (with XREF_SOURCE) and merges WITH_INFO (1700 chars).
   *
   * Spark shape: groupBy().agg(set-merge) then explode(chunked) — the
   * chunker is a scalar function producing an array, exploded by the
@@ -48,59 +47,43 @@ object MergeSplit {
 
   def chunkUdf = udf(chunkBySeparator _)
 
-  def chunked(c: Column, maxLen: Int, sep: String = "|"): Column =
-    chunkUdf(c, lit(maxLen), lit(sep))
+  def chunked(c: Column, maxLen: Int): Column =
+    chunkUdf(c, lit(maxLen), lit("|"))
 
-  /** groupBy(key).agg(set-merge of mergeCols) then explode oversize
-    * `splitCol` into chunks — one call = one reference merge+split phase.
+  /** groupBy(key).agg(set-merge of `src` as `out`, `|`-joined) then
+    * explode oversize `out` into chunks — one reference merge+split phase.
     *
-    * Scale shape: each merge column is exploded to scalar (key, token)
-    * rows and deduped BEFORE the collect, so the shuffles carry distinct
-    * scalars with map-side partial aggregation — never whole merged
-    * arrays (the array-carrying formulation was the bench's worst
-    * regression: per-key arrays rode the exchange and were distinct'd
-    * post-shuffle). Multiple merge columns aggregate independently and
-    * rejoin on the key, which reuses the groupBy's hash partitioning
-    * (no extra exchange).
+    * Scale shape: `src` is exploded to scalar (key, token) rows and
+    * deduped BEFORE the collect, so the shuffle carries distinct scalars
+    * with map-side partial aggregation — never whole merged arrays (the
+    * array-carrying formulation was the bench's worst regression:
+    * per-key arrays rode the exchange and were distinct'd post-shuffle).
     *
-    * @param mergeCols output-name -> (source column, intra-value split
-    *   regex, join delimiter)
+    * @param splitRegex the intra-value token separator of `src`
     */
   def mergeThenSplit(
       df: DataFrame,
       keyCols: Seq[String],
-      mergeCols: Map[String, (Column, String, String)],
-      splitCol: String,
-      maxLen: Int,
-      chunkSep: String = "|"): DataFrame = {
+      out: String,
+      src: Column,
+      splitRegex: String,
+      maxLen: Int): DataFrame = {
     val keys = keyCols.map(col)
-    val merged = mergeCols.toSeq
-      .map { case (out, (src, splitRegex, delim)) =>
-        // explode_outer keeps keys whose source is all-null (collect_list
-        // then skips the null token → empty merge, as before)
-        // ONE exchange: collect_set over exploded scalars dedups in the
-        // map-side partial, so the shuffle carries one deduped set per
-        // (key, partition) — strictly smaller than the final array
-        // (the distinct-then-collect formulation paid a second exchange)
-        // Trailing separators are stripped BEFORE the split: Spark's
-        // split keeps trailing empty tokens, Java's String.split (the
-        // reference, AnnotCache.java:183) drops them — without the strip
-        // a value ending in a separator grows a leading '|' after the
-        // sort+rejoin. Interior empties stay, exactly as in Java.
-        df.select(keys :+ explode_outer(
-          split(regexp_replace(src, splitRegex + "+$", ""), splitRegex)).as("_tok"): _*)
-          .groupBy(keys: _*)
-          .agg(concat_ws(delim, array_sort(collect_set(col("_tok")))).as(out))
-      }
-      .reduce { (a, b) =>
-        // NULL-SAFE key equality: a plain equi-join would silently drop
-        // groups whose key contains null (both sides share the key
-        // partitioning from their groupBys, so this adds no exchange)
-        val b2 = keyCols.foldLeft(b)((d, k) => d.withColumnRenamed(k, "_r_" + k))
-        val cond = keyCols.map(k => col(k) <=> col("_r_" + k)).reduce(_ && _)
-        a.join(b2, cond).drop(keyCols.map("_r_" + _): _*)
-      }
-    merged
-      .withColumn(splitCol, explode(chunked(col(splitCol), maxLen, chunkSep)))
+    // explode_outer keeps keys whose source is all-null (collect_set
+    // then skips the null token → empty merge)
+    // ONE exchange: collect_set over exploded scalars dedups in the
+    // map-side partial, so the shuffle carries one deduped set per
+    // (key, partition) — strictly smaller than the final array
+    // (the distinct-then-collect formulation paid a second exchange)
+    // Trailing separators are stripped BEFORE the split: Spark's
+    // split keeps trailing empty tokens, Java's String.split (the
+    // reference, AnnotCache.java:183) drops them — without the strip
+    // a value ending in a separator grows a leading '|' after the
+    // sort+rejoin. Interior empties stay, exactly as in Java.
+    df.select(keys :+ explode_outer(
+      split(regexp_replace(src, splitRegex + "+$", ""), splitRegex)).as("_tok"): _*)
+      .groupBy(keys: _*)
+      .agg(concat_ws("|", array_sort(collect_set(col("_tok")))).as(out))
+      .withColumn(out, explode(chunked(col(out), maxLen)))
   }
 }

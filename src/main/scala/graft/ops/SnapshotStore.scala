@@ -109,15 +109,16 @@ object SnapshotStore {
   def exists(storeDir: String, entity: String): Boolean =
     paths(storeDir, entity).exists(p => new File(p).exists())
 
-  /** [[read]], or an empty frame of `schema` when the entity has no data
-    * yet (a fresh store, an optional side table never staged).
+  /** [[read]] with `schema`, which the files must carry (no inference
+    * job), or an empty frame of `schema` when the entity has no data yet
+    * (a fresh store, an optional side table never staged).
     */
   def readOrEmpty(
       spark: SparkSession,
       storeDir: String,
       entity: String,
       schema: StructType): DataFrame =
-    if (exists(storeDir, entity)) read(spark, storeDir, entity)
+    if (exists(storeDir, entity)) spark.read.schema(schema).parquet(paths(storeDir, entity): _*)
     // a LocalRelation, so the optimizer prunes the joins against it
     else spark.createDataFrame(java.util.List.of[Row](), schema)
 
@@ -236,7 +237,7 @@ object SnapshotStore {
       snapshot: DataFrame,
       changedKeys: DataFrame,
       keyCols: Seq[String],
-      numBuckets: Int = 64)
+      numBuckets: Int)
 
   private def bucketKeyPrefix(entity: String) = s"$entity/bucket="
   private def bucketCountKey(entity: String) = s"$entity/.buckets"

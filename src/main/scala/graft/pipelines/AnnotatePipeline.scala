@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{DiffSync, MergeSplit, NameNormalize}
@@ -9,7 +9,8 @@ import graft.ops.{DiffSync, MergeSplit, NameNormalize}
   * VariantAnnotator.run, VariantAnnotator.java:64-147): variants →
   * carpe-compliance filter (F5) → disease terms via the xref chain
   * variant_xdb(MedGen 54) ⋈ concept_map ⋈ rdo_synonyms (J8) UNION the
-  * normalized-name fallback match (J9) → gene/ortholog fan-out (J10) →
+  * name fallback for unmatched variants (J9), plus HPO terms by name →
+  * PubMed XREF_SOURCE (A12) → direct rows + ortholog fan-out (J10) →
   * two-phase annotation merge (A8/A9) with oversize splits (A10) →
   * DiffSync vs the annotation store with per-aspect guarded deletes.
   *
@@ -141,14 +142,13 @@ object AnnotatePipeline {
     * compares against similarly-normalized stored state.
     */
   def mergeAnnotations(
-      annots: DataFrame, // annotated_rgd_id, term_acc, evidence, xref_source, with_info
+      annots: DataFrame, // annotated_rgd_id, term_acc, aspect, evidence, xref_source, with_info
       xrefMax: Int = 4000,
       withInfoMax: Int = 1700): DataFrame = {
     val phase1 = MergeSplit.mergeThenSplit(
       annots,
       keyCols = Seq("annotated_rgd_id", "term_acc", "aspect", "evidence", "with_info"),
-      mergeCols = Map("xref_source" -> (col("xref_source"), "[|,;]", "|")),
-      splitCol = "xref_source",
+      out = "xref_source", src = col("xref_source"), splitRegex = "[|,;]",
       maxLen = xrefMax)
     MergeSplit.mergeThenSplit(
       phase1,
@@ -156,8 +156,7 @@ object AnnotatePipeline {
       // with_info splits on all three separators, exactly as the
       // reference does (AnnotCache.mergeIncomingAnnots2:183 splits on
       // "[\|\,\;]" before re-concatenating with "|")
-      mergeCols = Map("with_info" -> (col("with_info"), "[|,;]", "|")),
-      splitCol = "with_info",
+      out = "with_info", src = col("with_info"), splitRegex = "[|,;]",
       maxLen = withInfoMax)
   }
 
@@ -198,7 +197,7 @@ object AnnotatePipeline {
       hpoTermIndex: DataFrame,   // HPO names (aspect H; name-match only,
                                  // VariantAnnotator.java:425-496)
       orthologs: DataFrame,
-      currentAnnots: DataFrame,  // annotated_rgd_id, term_acc, xref_source, with_info
+      currentAnnots: DataFrame,  // the ClinvarStore.Annotations snapshot
       excludedConditions: Seq[String] = ExcludedConditionNames,
       maxDeleteFraction: Double = 0.05): DataFrame = {
 
@@ -209,15 +208,16 @@ object AnnotatePipeline {
       variantGene.select("rgd_id", "gene_id"), conceptMap, rdoSynonyms)
 
     val unmatched = compliant
-      .join(byConcept.select("rgd_id").distinct(), Seq("rgd_id"), "left_anti")
+      .join(byConcept.select("rgd_id"), Seq("rgd_id"), "left_anti")
       .select(col("rgd_id"), col("trait_name").as("condition"))
     val byName = diseaseTermsByName(unmatched, termIndex, excludedConditions)
 
     // aspect D: disease terms (concept chain, then name fallback);
     // aspect H: phenotype terms, resolved by NAME against the HPO index
     // for every compliant variant (the reference's phenotype twin has no
-    // concept chain — VariantAnnotator.generatePhenotypeAnnotations)
-    val diseaseTerms = byConcept.unionByName(byName).distinct()
+    // concept chain — VariantAnnotator.generatePhenotypeAnnotations).
+    // byConcept and byName are each distinct and share no rgd_id: so is their union
+    val diseaseTerms = byConcept.unionByName(byName)
       .withColumn("aspect", lit("D"))
     val phenotypeTerms = diseaseTermsByName(
       compliant.select(col("rgd_id"), col("trait_name").as("condition")),
@@ -241,15 +241,12 @@ object AnnotatePipeline {
       lit(null).cast("string").as("with_info"))
     // ortholog gene annotations: ISO evidence, WITH_INFO = the source
     // variant (the propagation provenance, per the reference's ISO
-    // with_info contract)
+    // with_info contract) and its XREF_SOURCE
     val viaOrthologs = orthologAnnotations(
-      withXref.select("rgd_id", "term_acc", "aspect"),
+      withXref.select("rgd_id", "term_acc", "aspect", "xref_source"),
       variantGene.select("rgd_id", "gene_rgd_id"), orthologs)
-      .join(withXref.select(col("rgd_id").as("with_info_rgd"), col("xref_source"))
-        .dropDuplicates("with_info_rgd"),
-        col("with_info") === col("with_info_rgd"), "left")
       .select(col("annotated_rgd_id"), col("term_acc"), col("aspect"),
-        lit("ISO").as("evidence"), coalesce(col("xref_source"), lit("")).as("xref_source"),
+        lit("ISO").as("evidence"), col("xref_source"),
         concat(lit("RGD:"), col("with_info")).as("with_info"))
 
     val merged = mergeAnnotations(direct.unionByName(viaOrthologs))

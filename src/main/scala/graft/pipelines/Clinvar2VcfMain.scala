@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.StructType
   * (coalesce(1) — the reference's single-file contract, K5).
   * dbSNP / reference-base dims are optional parquet dirs under the
   * store (`dbsnp`, `ref_bases`); absent dims mean no reconciliation /
-  * no padding lookup, matching a run without those feeds.
+  * no padding lookup, matching a run without those feeds. Each is read
+  * with the DDL below, not an inferred schema: that DDL is its staging contract.
   */
 object Clinvar2VcfMain {
 

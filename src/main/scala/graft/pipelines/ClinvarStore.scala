@@ -21,7 +21,7 @@ object ClinvarStore {
     val schema: StructType = StructType.fromDDL(ddl)
     val contentCols: Seq[String] = schema.fieldNames.toSeq.diff(keyCols)
 
-    /** The current snapshot; an empty frame of [[schema]] on a fresh store. */
+    /** The current snapshot, read with [[schema]]; empty on a fresh store. */
     def read(spark: SparkSession, storeDir: String): DataFrame =
       SnapshotStore.readOrEmpty(spark, storeDir, name, schema)
 
@@ -70,13 +70,14 @@ object ClinvarStore {
   /** Write each diff as its audit table (K8), the entities concurrently,
     * and return each one read back from what was written. Every later
     * step of the pass plans against that leaf scan, so each diff is
-    * computed exactly once, by its own audit write.
+    * computed exactly once, by its own audit write; the read-back takes
+    * the diff's schema, so no inference job runs.
     */
   def audit(storeDir: String, diffs: Seq[(Entity, DataFrame)]): Seq[(Entity, DataFrame)] =
     SnapshotStore.inParallel(diffs) { case (e, d) =>
       val path = s"$storeDir/audit/${e.name}"
       d.write.mode("overwrite").parquet(path)
-      e -> d.sparkSession.read.parquet(path)
+      e -> d.sparkSession.read.schema(d.schema).parquet(path)
     }
 
   /** The (group, action) -> count counters (K7) of `diffs`, in one job;

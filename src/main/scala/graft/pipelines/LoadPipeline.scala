@@ -208,7 +208,7 @@ object LoadPipeline {
     // the record's RCV set (Aliases.qc, Aliases.java:51-90) — NOT plain
     // key equality. The valid RCV set = ClinVar xdb accessions (key 52)
     // incoming + in-store, plus the record's own primary RCV
-    // (XdbIds.getClinVarIds, XdbIds.java:62-74).
+    // (XdbIds.getClinVarIds, XdbIds.java:62-74); AliasSync dedups it.
     val rcvKeyMap = identified.select(
       col("symbol").as("_sym"), col("rgd_id"), col("rcv_acc"))
     val incomingAliasesKeyed = incomingAliases
@@ -219,7 +219,6 @@ object LoadPipeline {
       .unionByName(store.xdbIds.filter(col("xdb_key") === 52)
         .select(col("rgd_id"), col("acc_id").as("rcv")))
       .unionByName(identified.select(col("rgd_id"), col("rcv_acc").as("rcv")))
-      .distinct()
     val aliasDiff = AliasSync(incomingAliasesKeyed, store.aliases, rcvSets)
     // association diff (GeneAssociations.sync:78-109): retain/remove set
     // algebra = the same full-outer classification on (rgd_id, gene_id)

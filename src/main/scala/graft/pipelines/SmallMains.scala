@@ -17,7 +17,7 @@ object VariantRsIdMain {
         .withColumn("link_text", concat(lit("rs"), col("acc_id"))),
       spark.read.parquet(variantMapPath))
     updates.cache().write.mode("overwrite").parquet(s"$storeDir/audit/rs_id_updates")
-    updates.orderBy("variant_id").collect().take(20).foreach { r =>
+    updates.orderBy("variant_id").take(20).foreach { r =>
       println(s"[rsid] variant ${r.get(0)} rgd ${r.get(1)}: ${r.get(2)} -> ${r.get(3)}")
     }
     println(s"[rsid] total updates: ${updates.count()}")
@@ -38,7 +38,7 @@ object DupTermQcMain {
     val synonyms = args.lift(1).map(p => spark.read.parquet(p))
     val dagEdges = args.lift(2).map(p => spark.read.parquet(p))
     val report = DupTermQcPipeline.run(terms, synonyms, dagEdges)
-    report.orderBy(col("norm_name"), col("rank")).collect().take(40).foreach { r =>
+    report.orderBy(col("norm_name"), col("rank")).take(40).foreach { r =>
       val win = if (r.getBoolean(4)) " <- winner" else ""
       println(s"[dupterm] ${r.getString(0)}: ${r.getString(1)} (rank ${r.getInt(3)})$win")
     }

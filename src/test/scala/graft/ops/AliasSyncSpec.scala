@@ -40,4 +40,28 @@ class AliasSyncSpec extends SparkSpec {
       .select("action").as[String].collect().toSeq
     assert(actions === Seq("delete")) // one row, not delete+keep duplicates
   }
+
+  test("duplicate incoming aliases and RCV rows give the actions of the deduplicated inputs") {
+    val current = Seq(
+      (1L, "usher syndrome", "RCV1"),
+      (1L, "gone with its rcv", "RCV9"),
+      (1L, "stale primary", "RCV1"),
+      (1L, "other rcv alias", "RCV2"),
+      (1L, "nullnotes", null)
+    ).toDF("rgd_id", "value", "notes")
+    def actions(incoming: Seq[(Long, String, String)], rcvSets: Seq[(Long, String)]) =
+      AliasSync(incoming.toDF("rgd_id", "value", "rcv_acc"), current, rcvSets.toDF("rgd_id", "rcv"))
+        .select("rgd_id", "value", "notes", "action")
+        .as[(Long, String, Option[String], String)].collect().toSeq.sorted
+    val once = actions(
+      Seq((1L, "Usher Syndrome", "RCV1"), (1L, "Fresh Alias", "RCV1")),
+      Seq((1L, "RCV1"), (1L, "RCV2")))
+    // the stored match repeated by value and by case; every RCV twice
+    val repeated = actions(
+      Seq((1L, "Usher Syndrome", "RCV1"), (1L, "Usher Syndrome", "RCV1"),
+        (1L, "USHER SYNDROME", "RCV1"), (1L, "Fresh Alias", "RCV1")),
+      Seq((1L, "RCV1"), (1L, "RCV2"), (1L, "RCV2"), (1L, "RCV1")))
+    assert(once.size === 6)
+    assert(repeated === once)
+  }
 }

@@ -30,24 +30,17 @@ class MergeSplitSpec extends SparkSpec {
     }
   }
 
-  test("multi merge columns rejoin null-safely on the key") {
+  test("a null key group survives the merge with its merged value") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val df = Seq(
-      (Option("k1"), "a|b", "x"),
-      (Option("k1"), "b", "y"),
-      (Option.empty[String], "c", "z") // null key must survive recombination
-    ).toDF("k", "v1", "v2")
-    val out = MergeSplit.mergeThenSplit(df, Seq("k"),
-      Map("v1" -> ((col("v1"), "[|]", "|")), "v2" -> ((col("v2"), "[|]", "|"))),
-      splitCol = "v1", maxLen = 100)
-    assert(out.count() === 2)
-    val nullRow = out.filter(col("k").isNull)
-      .select("v1", "v2").as[(String, String)].head()
-    assert(nullRow === (("c", "z")))
-    val k1 = out.filter(col("k") === "k1")
-      .select("v1", "v2").as[(String, String)].head()
-    assert(k1 === (("a|b", "x|y")))
+      (Option("k1"), "a|b"),
+      (Option("k1"), "b"),
+      (Option.empty[String], "c")
+    ).toDF("k", "v")
+    val out = MergeSplit.mergeThenSplit(df, Seq("k"), "v", col("v"), "[|]", maxLen = 100)
+      .as[(Option[String], String)].collect().toSet
+    assert(out === Set((Some("k1"), "a|b"), (None, "c")))
   }
 
   test("trailing separators drop like Java String.split; interior empties survive") {
@@ -59,8 +52,7 @@ class MergeSplitSpec extends SparkSpec {
       (3, ";;"),     // all separators: Java split yields [] -> empty merge
       (4, null.asInstanceOf[String])
     ).toDF("k", "v")
-    val out = MergeSplit.mergeThenSplit(
-      df, Seq("k"), Map("v" -> ((col("v"), "[|,;]", "|"))), "v", maxLen = 100)
+    val out = MergeSplit.mergeThenSplit(df, Seq("k"), "v", col("v"), "[|,;]", maxLen = 100)
       .as[(Int, String)].collect().toMap
     assert(out(1) === "a|b")
     assert(out(2) === "|a|b")
@@ -72,8 +64,7 @@ class MergeSplitSpec extends SparkSpec {
     val df = Seq(
       (1, "b|a"), (1, "c"), (2, "zzzzzz|yyyyyy")
     ).toDF("k", "xref")
-    val out = MergeSplit.mergeThenSplit(
-      df, Seq("k"), Map("xrefs" -> (col("xref"), "[|]", "|")), "xrefs", maxLen = 8)
+    val out = MergeSplit.mergeThenSplit(df, Seq("k"), "xrefs", col("xref"), "[|]", maxLen = 8)
       .as[(Int, String)].collect().toSet
     // k=1 merged "a|b|c" fits; k=2 merged "yyyyyy|zzzzzz" splits at '|'
     assert(out === Set((1, "a|b|c"), (2, "yyyyyy"), (2, "zzzzzz")))

@@ -212,7 +212,9 @@ class AnnotatePipelineSpec extends SparkSpec {
   private def rdoSynonyms = Seq(("DOID:1", "OMIM:613647")).toDF("term_acc", "synonym")
   private def termIndex = graft.ops.NameNormalize.termIndex(
     Seq(("DOID:9", "Rare Thing")).toDF("acc", "nm"), "acc", "nm")
-  private def orthologs = Seq((500L, 9500L), (500L, 9501L)).toDF("gene_rgd_id", "homolog_rgd_id")
+  // 9600: an ortholog of variant 4's gene; variant 4 has no PubMed xref
+  private def orthologs = Seq((500L, 9500L), (500L, 9501L), (501L, 9600L))
+    .toDF("gene_rgd_id", "homolog_rgd_id")
 
   // HPO twin index: variant 1's trait resolves by name to HP:0000556
   private def hpoTermIndex = graft.ops.NameNormalize.termIndex(
@@ -263,7 +265,14 @@ class AnnotatePipelineSpec extends SparkSpec {
   test("ISO with_info records the propagation source variant") {
     val wi = result.filter($"evidence" === "ISO")
       .select("with_info").as[String].collect().toSet
-    assert(wi === Set("RGD:1"))
+    assert(wi === Set("RGD:1", "RGD:4"))
+  }
+
+  test("ISO rows of a variant with no PubMed xref carry an empty xref_source") {
+    val iso = result.filter($"evidence" === "ISO" && $"with_info" === "RGD:4")
+      .select("annotated_rgd_id", "term_acc", "aspect", "xref_source")
+      .as[(Long, String, String, String)].collect().toSet
+    assert(iso === Set((9600L, "DOID:9", "D", "")))
   }
 }
 
