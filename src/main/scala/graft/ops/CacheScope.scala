@@ -40,15 +40,6 @@ object CacheScope {
     p
   }
 
-  /** Register an ALREADY-persisted frame (the final frame of an
-    * iterative loop that manages its own per-round lifecycle) for the
-    * next [[releaseAll]].
-    */
-  def register[T](ds: Dataset[T]): Dataset[T] = {
-    registry.add(ds)
-    ds
-  }
-
   /** LINEAGE CUT + persist for a frame that fans out into MANY
     * downstream plan references: rebuilding the frame over its own RDD
     * (`createDataFrame(df.rdd, df.schema)`) replaces the LOGICAL

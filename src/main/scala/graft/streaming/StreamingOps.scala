@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured Streaming operators over an events-shaped stream
   * (event_id, ts, user_id, event_type, value).
@@ -18,8 +20,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingOps {
 
+  /** A row with an event time: what [[closeOnSilence]] groups. */
+  trait Timed { def ts: java.sql.Timestamp }
+
   final case class Event(eventId: Long, ts: java.sql.Timestamp, userId: Long,
-      eventType: String, value: Double)
+      eventType: String, value: Double) extends Timed
 
   final case class UserState(nEvents: Long, total: Double, lastTs: Long)
 
@@ -40,16 +45,16 @@ object StreamingOps {
 
   /** Per-user running totals via mapGroupsWithState — the streaming
     * form of the per-entity accumulator collections (A5-A7 shape:
-    * state merged per key across arrivals). Processing-time timeout
-    * reclaims idle users' state.
+    * state merged per key across arrivals). No timeout is set: each
+    * user's state is kept for the life of the query, so this fits a
+    * bounded user keyspace; the [[closeOnSilence]] closers below are
+    * the evicting forms.
     */
-  def userRunningTotals(
-      events: Dataset[Event],
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[UserUpdate] = {
+  def userRunningTotals(events: Dataset[Event]): Dataset[UserUpdate] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.userId)
-      .mapGroupsWithState[UserState, UserUpdate](timeout) {
+      .mapGroupsWithState[UserState, UserUpdate](GroupStateTimeout.NoTimeout) {
         (userId: Long, rows: Iterator[Event], state: GroupState[UserState]) =>
           val prev = state.getOption.getOrElse(UserState(0L, 0d, Long.MinValue))
           val next = rows.foldLeft(prev) { (s, e) =>
@@ -60,62 +65,130 @@ object StreamingOps {
       }
   }
 
-  final case class SessionState(start: Long, end: Long, n: Long, total: Double)
+  /** A key's open state and the newest event time seen for it — the
+    * state [[closeOnSilence]] keeps per key. Public because the state
+    * codec's generated code calls its accessors.
+    */
+  final case class Held[S](s: S, lastSeen: Long)
+
+  /** The event-time close protocol, the one kernel of every keyed
+    * closer here ([[sessionize]], [[dialogueQcStream]] and the four
+    * `*FinalStream` eviction twins). Per key, state lives while events
+    * arrive; once the key has been silent for `horizonMs` of event time
+    * past its newest event and the watermark passes that point, the
+    * key CLOSES: `close` emits its final row (or none) ONCE, append
+    * mode, and the state is removed. An unbounded keyspace thus holds
+    * state only for the keys inside the horizon. A row arriving after
+    * its key closed, but inside the watermark's allowed lateness,
+    * REOPENS the key as a fresh group; rows older than the watermark
+    * drop before any fold.
+    *
+    * The kernel owns the protocol; a caller owns its typed projection
+    * (with a `ts` event-time column), its input guards, its fold and
+    * its close-time emit.
+    *   - Rows with a NULL event time are dropped: they can neither set
+    *     a timeout nor compare to the watermark. Each closer's law
+    *     quantifies over the rows that carry an event time.
+    *   - `fold` takes the key's open state (None for a fresh group) and
+    *     the micro-batch's rows, and returns the new open state plus
+    *     any rows it closed mid-batch (the gap closers do; the
+    *     quiescence twins never do). It must consume `rows` before it
+    *     returns: the kernel reads the newest event time off them.
+    *   - The timeout is `max(lastSeen + horizonMs, watermark + 1)`:
+    *     Spark refuses a timeout at or below the current watermark,
+    *     which an almost-late row would otherwise ask for.
+    */
+  private def closeOnSilence[K: Encoder, E <: Timed, S: TypeTag, O: Encoder](
+      rows: Dataset[E], horizonMs: Long, watermarkDelay: String)(
+      key: E => K,
+      fold: (K, Option[S], Iterator[E]) => (S, Iterator[O]),
+      close: (K, S) => Option[O]): Dataset[O] = {
+    require(horizonMs > 0, s"gapMs / quiesceMs must be positive, got $horizonMs")
+    import rows.sparkSession.implicits._
+    rows
+      .filter(col("ts").isNotNull)
+      .withWatermark("ts", watermarkDelay)
+      .groupByKey(key)
+      .flatMapGroupsWithState[Held[S], O](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (k: K, batch: Iterator[E], state: GroupState[Held[S]]) =>
+          if (state.hasTimedOut) {
+            val held = state.get
+            state.remove()
+            close(k, held.s).iterator
+          } else {
+            val prev = state.getOption
+            var lastSeen = prev.fold(Long.MinValue)(_.lastSeen)
+            val (s, closed) = fold(k, prev.map(_.s),
+              batch.map { e => lastSeen = math.max(lastSeen, e.ts.getTime); e })
+            state.update(Held(s, lastSeen))
+            state.setTimeoutTimestamp(
+              math.max(lastSeen + horizonMs, state.getCurrentWatermarkMs() + 1L))
+            closed
+          }
+      }
+  }
+
+  /** An open session's event-time span: what the gap closers' fold reads. */
+  trait Span { def end: Long }
+
+  final case class SessionState(start: Long, end: Long, n: Long, total: Double) extends Span
 
   final case class SessionOut(userId: Long, sessionStart: Long, sessionEnd: Long,
       nEvents: Long, totalValue: Double)
 
   final case class DialogueQcState(start: Long, end: Long, nTurns: Long,
-      roles: Seq[String], lastRole: String, violations: Long)
+      roles: Seq[String], lastRole: String, violations: Long) extends Span
 
   final case class DialogueQcOut(userId: Long, sessionStart: Long, sessionEnd: Long,
       nTurns: Long, nRoles: Long, nAlternationViolations: Long,
       validDialogue: Boolean)
 
-  /** Gap-based sessionization via flatMapGroupsWithState: events from
-    * one user belong to the same session while consecutive arrivals are
-    * within `gapMs` of each other (event time); a longer silence CLOSES
-    * the session, which is then emitted and the state restarts. An
-    * event-time timeout flushes the final open session when the
-    * watermark passes it — state never grows without bound.
+  /** The gap closers' one fold, on [[closeOnSilence]] with horizon
+    * `gapMs` and a fixed 10-minute watermark: a micro-batch's rows sort
+    * by (ts, eventId), the batch window order, and a row more than
+    * `gapMs` past the open session's end closes that session mid-batch
+    * (emitted at once) and opens the next. `open` starts a session on a
+    * row, `extend` adds a row to an open one. A row closes a session
+    * only by opening a later one, so the open session always ends at
+    * the newest event time seen for the user: the kernel's timeout is
+    * that session's own gap timeout.
+    */
+  private def closeGaps[S <: Span : TypeTag, O: Encoder](events: Dataset[Event], gapMs: Long)(
+      open: Event => S, extend: (S, Event) => S, emit: (Long, S) => O): Dataset[O] = {
+    import events.sparkSession.implicits._
+    closeOnSilence[Long, Event, S, O](events, gapMs, "10 minutes")(_.userId,
+      (userId, prev, rows) => {
+        val closed = scala.collection.mutable.ArrayBuffer[O]()
+        var cur = prev
+        rows.toSeq.sortBy(e => (e.ts.getTime, e.eventId)).foreach { e =>
+          cur = Some(cur match {
+            case Some(s) if e.ts.getTime - s.end <= gapMs => extend(s, e)
+            case Some(s) => closed += emit(userId, s); open(e)
+            case None => open(e)
+          })
+        }
+        (cur.get, closed.iterator)
+      },
+      (userId, s) => Some(emit(userId, s)))
+  }
+
+  /** Gap-based sessionization: events from one user belong to the same
+    * session while consecutive arrivals are within `gapMs` of each
+    * other (event time); a longer silence CLOSES the session, which is
+    * then emitted and the state restarts. The [[closeOnSilence]]
+    * timeout flushes the final open session when the watermark passes
+    * it — state never grows without bound. Rows with a null `ts` are
+    * dropped.
     */
   def sessionize(
       events: Dataset[Event],
       gapMs: Long = 30 * 60 * 1000L): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(userId, s.start, s.end, s.n, s.total))
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.eventId))
-            val closed = scala.collection.mutable.ArrayBuffer[SessionOut]()
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.end <= gapMs =>
-                  cur = Some(SessionState(s.start, math.max(s.end, t), s.n + 1, s.total + e.value))
-                case Some(s) =>
-                  closed += SessionOut(userId, s.start, s.end, s.n, s.total)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.end + gapMs)
-            }
-            closed.iterator
-          }
-      }
+    closeGaps[SessionState, SessionOut](events, gapMs)(
+      e => SessionState(e.ts.getTime, e.ts.getTime, 1, e.value),
+      (s, e) => SessionState(s.start, math.max(s.end, e.ts.getTime), s.n + 1, s.total + e.value),
+      (userId, s) => SessionOut(userId, s.start, s.end, s.n, s.total))
   }
 
   /** Streaming DIALOGUE QC — the continuous twin of
@@ -131,9 +204,9 @@ object StreamingOps {
     * micro-batch rows sort by (ts, id), matching the batch window
     * order), and the dialogue's distinct role list (bounded by the
     * role vocabulary — event types here, a handful by contract; the
-    * state never holds turns). Late events beyond the watermark drop,
-    * the same contract as [[sessionize]]. stream == batch pinned on a
-    * replayed slice.
+    * state never holds turns). Late events beyond the watermark and
+    * rows with a null `ts` drop, the same contract as [[sessionize]].
+    * stream == batch pinned on a replayed slice.
     *
     * ORDERING CONTRACT (weaker than a blanket "stream == batch"): the
     * batch equivalence holds when each dialogue's turns arrive in one
@@ -151,47 +224,13 @@ object StreamingOps {
       events: Dataset[Event],
       gapMs: Long = 30 * 60 * 1000L): Dataset[DialogueQcOut] = {
     import events.sparkSession.implicits._
-    def emit(userId: Long, s: DialogueQcState) =
-      DialogueQcOut(userId, s.start, s.end, s.nTurns, s.roles.size.toLong,
-        s.violations, s.violations == 0L)
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[DialogueQcState, DialogueQcOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[DialogueQcState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(emit(userId, s))
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.eventId))
-            val closed = scala.collection.mutable.ArrayBuffer[DialogueQcOut]()
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              val role = e.eventType
-              cur match {
-                case Some(s) if t - s.end <= gapMs =>
-                  cur = Some(DialogueQcState(s.start, math.max(s.end, t),
-                    s.nTurns + 1,
-                    if (s.roles.contains(role)) s.roles else s.roles :+ role,
-                    role,
-                    s.violations + (if (s.lastRole == role) 1L else 0L)))
-                case Some(s) =>
-                  closed += emit(userId, s)
-                  cur = Some(DialogueQcState(t, t, 1L, Seq(role), role, 0L))
-                case None =>
-                  cur = Some(DialogueQcState(t, t, 1L, Seq(role), role, 0L))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.end + gapMs)
-            }
-            closed.iterator
-          }
-      }
+    closeGaps[DialogueQcState, DialogueQcOut](events, gapMs)(
+      e => DialogueQcState(e.ts.getTime, e.ts.getTime, 1L, Seq(e.eventType), e.eventType, 0L),
+      (s, e) => DialogueQcState(s.start, math.max(s.end, e.ts.getTime), s.nTurns + 1,
+        if (s.roles.contains(e.eventType)) s.roles else s.roles :+ e.eventType,
+        e.eventType, s.violations + (if (s.lastRole == e.eventType) 1L else 0L)),
+      (userId, s) => DialogueQcOut(userId, s.start, s.end, s.nTurns, s.roles.size.toLong,
+        s.violations, s.violations == 0L))
   }
 
   /** The streaming newest-wins head (A3/q10 shape): latest event per
@@ -546,13 +585,13 @@ object StreamingOps {
     * field would kill the encoder on exactly those rows.
     */
   final case class GradedResponse(prompt: String, candId: Option[Long],
-      content: Option[String], signal: Double, ts: java.sql.Timestamp)
+      content: Option[String], signal: Double, ts: java.sql.Timestamp) extends Timed
 
-  /** Per-prompt running pair state: candidate count, last event time,
-    * and the running (signal, id, content)-max and -min candidates —
-    * the batch operator's O(1) agg state made explicit.
+  /** Per-prompt running pair state: candidate count and the running
+    * (signal, id, content)-max and -min candidates — the batch
+    * operator's O(1) agg state made explicit.
     */
-  final case class PairState(n: Long, lastSeen: Long,
+  final case class PairState(n: Long,
       chS: Double, chI: Option[Long], chC: Option[String],
       rjS: Double, rjI: Option[Long], rjC: Option[String])
 
@@ -597,14 +636,12 @@ object StreamingOps {
   }
 
   /** The EVICTING preference-pair assembler — the unbounded-keyspace
-    * answer [[preferencePairsStream]] cannot give: a prompt's state
-    * lives only while the prompt is ACTIVE, and after `quiesceMs` of
-    * event-time silence the prompt CLOSES — its final best-vs-worst
-    * pair is emitted ONCE (append mode, delta-sized sink writes) and
-    * its state is dropped. An open-ended prompt firehose thus holds
-    * state only for the prompts inside the quiescence horizon, not for
-    * every prompt ever seen — the [[sessionize]] discipline applied to
-    * the preference family.
+    * answer [[preferencePairsStream]] cannot give, on the
+    * [[closeOnSilence]] kernel with horizon `quiesceMs`: a prompt's
+    * state lives only while the prompt is ACTIVE, its final
+    * best-vs-worst pair is emitted ONCE at close (append mode,
+    * delta-sized sink writes), and a row after the close reopens the
+    * prompt as a fresh group.
     *
     * Emission semantics: the closed prompt's pair equals the BATCH
     * [[graft.scale.Dialogue.preferencePairs]] row over exactly the
@@ -612,14 +649,12 @@ object StreamingOps {
     * log): the state machine maintains the same (signal, id, content)
     * struct-max/min with the same strict-margin law (no-contrast
     * prompts close silently — they never had a pair), the same
-    * null-signal exclusion, and the same NaN fail-loud. A row arriving
-    * AFTER its prompt closed (but inside the watermark's allowed
-    * lateness) REOPENS the prompt as a fresh group — the same
-    * split-session behavior [[sessionize]] has for a post-gap event;
-    * rows older than the watermark drop, as everywhere.
+    * null-signal exclusion, and the same NaN fail-loud. The one
+    * documented divergence is the kernel's: rows with a NULL event
+    * time are excluded.
     *
     * Per-prompt state is the batch agg's O(1) state made explicit:
-    * two (signal, id, content) candidates plus two longs —
+    * two (signal, id, content) candidates plus a count —
     * content-sized like the batch struct state, but held only for
     * ACTIVE prompts and reclaimed on close.
     *
@@ -636,67 +671,40 @@ object StreamingOps {
       tsCol: String,
       quiesceMs: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(quiesceMs > 0, s"quiesceMs must be positive, got $quiesceMs")
     val spark = responses.sparkSession
     import spark.implicits._
     val typed = graft.scale.Dialogue.signalGated(
       responses, signalCol, "preferencePairsFinalStream",
       "a NaN would always win the pair")
-      // a null event time has no place in a time-based protocol: it
-      // cannot set a timeout or compare to the watermark. The batch op
-      // has no time column, so this is the one documented divergence —
-      // the stream's law quantifies over rows THAT CARRY an event time.
-      .filter(col(tsCol).isNotNull)
       .select(
         col(promptCol).cast("string").as("prompt"),
         col(candCol).cast("long").as("candId"),
         col(contentCol).cast("string").as("content"),
         col(signalCol).cast("double").as("signal"),
         col(tsCol).as("ts"))
-      .withWatermark("ts", watermarkDelay)
       .as[GradedResponse]
-    typed
-      .groupByKey(_.prompt)
-      .flatMapGroupsWithState[PairState, FinalPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (prompt: String, rows: Iterator[GradedResponse], state: GroupState[PairState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            // the batch strict-margin law: no contrast, no pair
-            if (s.chS > s.rjS)
-              Iterator(FinalPair(prompt, s.n, s.chI, s.chS, s.chC,
-                s.rjI, s.rjS, s.rjC, s.chS - s.rjS))
-            else Iterator.empty
-          } else {
-            var s = state.getOption.orNull
-            rows.foreach { e =>
-              val t = e.ts.getTime
-              s =
-                if (s == null)
-                  PairState(1L, t, e.signal, e.candId, e.content,
-                    e.signal, e.candId, e.content)
-                else {
-                  val ch =
-                    if (structGt(e.signal, e.candId, e.content, s.chS, s.chI, s.chC))
-                      (e.signal, e.candId, e.content)
-                    else (s.chS, s.chI, s.chC)
-                  val rj =
-                    if (structGt(s.rjS, s.rjI, s.rjC, e.signal, e.candId, e.content))
-                      (e.signal, e.candId, e.content)
-                    else (s.rjS, s.rjI, s.rjC)
-                  PairState(s.n + 1L, math.max(s.lastSeen, t),
-                    ch._1, ch._2, ch._3, rj._1, rj._2, rj._3)
-                }
-            }
-            state.update(s)
-            // the timeout must sit strictly past the current watermark
-            // (Spark refuses otherwise, e.g. for an almost-late row)
-            state.setTimeoutTimestamp(
-              math.max(s.lastSeen + quiesceMs, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    closeOnSilence[String, GradedResponse, PairState, FinalPair](
+        typed, quiesceMs, watermarkDelay)(_.prompt,
+      (_, prev, rows) => {
+        val s = rows.foldLeft(prev) {
+          case (None, e) =>
+            Some(PairState(1L, e.signal, e.candId, e.content, e.signal, e.candId, e.content))
+          case (Some(s), e) =>
+            val ch =
+              if (structGt(e.signal, e.candId, e.content, s.chS, s.chI, s.chC))
+                (e.signal, e.candId, e.content)
+              else (s.chS, s.chI, s.chC)
+            val rj =
+              if (structGt(s.rjS, s.rjI, s.rjC, e.signal, e.candId, e.content))
+                (e.signal, e.candId, e.content)
+              else (s.rjS, s.rjI, s.rjC)
+            Some(PairState(s.n + 1L, ch._1, ch._2, ch._3, rj._1, rj._2, rj._3))
+        }
+        (s.get, Iterator.empty)
+      },
+      // the batch strict-margin law: no contrast, no pair
+      (prompt, s) => Option.when(s.chS > s.rjS)(FinalPair(prompt, s.n, s.chI, s.chS, s.chC,
+        s.rjI, s.rjS, s.rjC, s.chS - s.rjS)))
       .toDF()
   }
 
@@ -742,27 +750,24 @@ object StreamingOps {
     * feedback eviction machine consumes.
     */
   final case class FeedbackEvent(prompt: String, desirable: Boolean,
-      ts: java.sql.Timestamp)
+      ts: java.sql.Timestamp) extends Timed
 
-  /** Per-prompt running class counts + last event time. */
-  final case class FeedbackState(nd: Long, nu: Long, lastSeen: Long)
+  /** Per-prompt running class counts. */
+  final case class FeedbackState(nd: Long, nu: Long)
 
   final case class FinalCounts(prompt: String, n_desirable: Long,
       n_undesirable: Long)
 
   /** The EVICTING feedback-balance monitor —
-    * [[feedbackClassCountsStream]]'s unbounded-keyspace answer via the
-    * [[preferencePairsFinalStream]] quiescence recipe: a prompt's two
-    * counter longs live only while the prompt is ACTIVE; after
-    * `quiesceMs` of event-time silence the prompt CLOSES, its final
-    * (n_desirable, n_undesirable) row emits ONCE (append mode) and the
-    * state drops. The closed row equals the complete-mode aggregation
-    * over exactly the rows that arrived before the close (spec-pinned);
-    * a row arriving after the close (inside the watermark) REOPENS the
-    * prompt as a fresh group; null signals are excluded and NaN fails
-    * loud exactly as in batch. The one documented divergence: rows
-    * with a NULL event time are excluded — a time-based protocol
-    * cannot place them.
+    * [[feedbackClassCountsStream]]'s unbounded-keyspace answer on the
+    * [[closeOnSilence]] kernel with horizon `quiesceMs`: a prompt's two
+    * counter longs live only while the prompt is ACTIVE, and its final
+    * (n_desirable, n_undesirable) row emits ONCE at close. The closed
+    * row equals the complete-mode aggregation over exactly the rows
+    * that arrived before the close (spec-pinned); null signals are
+    * excluded and NaN fails loud exactly as in batch. The one
+    * documented divergence is the kernel's: rows with a NULL event
+    * time are excluded.
     *
     * @return streaming (prompt, n_desirable, n_undesirable),
     *         append-mode; one row per CLOSED prompt
@@ -775,42 +780,22 @@ object StreamingOps {
       tsCol: String,
       quiesceMs: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(quiesceMs > 0, s"quiesceMs must be positive, got $quiesceMs")
     val spark = responses.sparkSession
     import spark.implicits._
     val typed = graft.scale.Dialogue.signalGated(
       responses, signalCol, "feedbackClassCountsFinalStream",
       "it would silently count undesirable")
-      .filter(col(tsCol).isNotNull)
       .select(
         col(promptCol).cast("string").as("prompt"),
         (col(signalCol) >= lit(threshold)).as("desirable"),
         col(tsCol).as("ts"))
-      .withWatermark("ts", watermarkDelay)
       .as[FeedbackEvent]
-    typed
-      .groupByKey(_.prompt)
-      .flatMapGroupsWithState[FeedbackState, FinalCounts](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (prompt: String, rows: Iterator[FeedbackEvent], state: GroupState[FeedbackState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(FinalCounts(prompt, s.nd, s.nu))
-          } else {
-            var s = state.getOption.getOrElse(FeedbackState(0L, 0L, Long.MinValue))
-            rows.foreach { e =>
-              s = FeedbackState(
-                s.nd + (if (e.desirable) 1L else 0L),
-                s.nu + (if (e.desirable) 0L else 1L),
-                math.max(s.lastSeen, e.ts.getTime))
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.lastSeen + quiesceMs, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    closeOnSilence[String, FeedbackEvent, FeedbackState, FinalCounts](
+        typed, quiesceMs, watermarkDelay)(_.prompt,
+      (_, prev, rows) => (rows.foldLeft(prev.getOrElse(FeedbackState(0L, 0L))) { (s, e) =>
+        if (e.desirable) s.copy(nd = s.nd + 1L) else s.copy(nu = s.nu + 1L)
+      }, Iterator.empty),
+      (prompt, s) => Some(FinalCounts(prompt, s.nd, s.nu)))
       .toDF()
   }
 
@@ -846,9 +831,9 @@ object StreamingOps {
     * state machine must fold the same integers).
     */
   final case class RewardEvent(grp: String, traj: Long, qMilli: Long,
-      ts: java.sql.Timestamp)
+      ts: java.sql.Timestamp) extends Timed
 
-  /** Per-trajectory running (sum, count) + last event time. The sum is
+  /** Per-trajectory running (sum, count). The sum is
     * an exact DECIMAL, not a long — the batch decimal(38,0) analogue:
     * a long fold would fail on a TRANSIENT overflow (partials past
     * 2^63 whose final sum fits), and whether that happens would depend
@@ -857,32 +842,29 @@ object StreamingOps {
     * are exact up to the state codec's 10^20 integral capacity
     * (Decimal(38,18)); past it the machine fails BY NAME.
     */
-  final case class TrajState(sum: scala.math.BigDecimal, n: Long, lastSeen: Long)
+  final case class TrajState(sum: scala.math.BigDecimal, n: Long)
 
   final case class FinalSignal(grp: String, traj: Long,
       signal_milli: Long, n_reward_turns: Long)
 
   /** The EVICTING trajectory-signal reducer —
-    * [[trajectorySignalStream]]'s unbounded-keyspace answer via the
-    * [[preferencePairsFinalStream]] quiescence recipe: a (group,
-    * trajectory)'s state is TWO LONGS plus a timestamp, held only
-    * while the trajectory is ACTIVE; after `quiesceMs` of event-time
-    * silence it CLOSES, its final [[graft.scale.Dialogue.turnSignalReduce]]
-    * row emits ONCE (append mode) and the state drops — a grading
-    * firehose holds state only for dialogues inside the quiescence
-    * horizon. The closed row equals the batch reduction over exactly
-    * the rows that arrived before the close (spec-pinned): the same
-    * quantize-FIRST law (each reward ⌊·1000⌋ in-plan, exact decimals
-    * fold in the state machine — see [[TrajState]]), the same
-    * null-reward exclusion (an all-null trajectory never opens state
-    * and closes silently, exactly the batch omission), the same NaN
-    * fail-loud, and the same final-sum-only long-cast guard — an
-    * overflowing trajectory fails BY NAME at close, transient partials
-    * never fail where batch succeeds. A late row
-    * inside the watermark REOPENS the trajectory as a fresh group.
-    * Two documented divergences from batch: rows with a NULL event
-    * time are excluded (a time-based protocol cannot place them), and
-    * a null or non-long-castable TRAJECTORY KEY fails by name (batch
+    * [[trajectorySignalStream]]'s unbounded-keyspace answer on the
+    * [[closeOnSilence]] kernel with horizon `quiesceMs`: a (group,
+    * trajectory)'s (sum, count) state is held only while the trajectory
+    * is ACTIVE, and its final [[graft.scale.Dialogue.turnSignalReduce]]
+    * row emits ONCE at close — a grading firehose holds state only for
+    * dialogues inside the quiescence horizon. The closed row equals the
+    * batch reduction over exactly the rows that arrived before the
+    * close (spec-pinned): the same quantize-FIRST law (each reward
+    * ⌊·1000⌋ in-plan, exact decimals fold in the state machine — see
+    * [[TrajState]]), the same null-reward exclusion (an all-null
+    * trajectory never opens state and closes silently, exactly the
+    * batch omission), the same NaN fail-loud, and the same
+    * final-sum-only long-cast guard — an overflowing trajectory fails
+    * BY NAME at close, transient partials never fail where batch
+    * succeeds. Two documented divergences from batch: the kernel's
+    * exclusion of rows with a NULL event time, and a null or
+    * non-long-castable TRAJECTORY KEY fails by name (batch
     * [[graft.scale.Dialogue.turnSignalReduce]] keeps a null-key group;
     * a long-keyed state machine cannot represent one, and silently
     * dropping it would hide a broken upstream id packing).
@@ -898,11 +880,10 @@ object StreamingOps {
       tsCol: String,
       quiesceMs: Long,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(quiesceMs > 0, s"quiesceMs must be positive, got $quiesceMs")
     val spark = turnRewards.sparkSession
     import spark.implicits._
     val typed = turnRewards
-      .filter(col(rewardCol).isNotNull && col(tsCol).isNotNull)
+      .filter(col(rewardCol).isNotNull)
       .select(
         col(groupCol).cast("string").as("grp"),
         // a null (or non-long-castable) trajectory key fails BY NAME:
@@ -915,44 +896,30 @@ object StreamingOps {
         graft.ops.Guards.quantizedMilli(rewardCol,
           "trajectorySignalFinalStream").as("qMilli"),
         col(tsCol).as("ts"))
-      .withWatermark("ts", watermarkDelay)
       .as[RewardEvent]
-    typed
-      .groupByKey(e => (e.grp, e.traj))
-      .flatMapGroupsWithState[TrajState, FinalSignal](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, Long), rows: Iterator[RewardEvent], state: GroupState[TrajState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            // the batch long-cast guard, applied to the FINAL sum only
-            // (exactly where batch applies it)
-            if (s.sum.abs >= scala.math.BigDecimal("9223372036854775808"))
-              throw new IllegalArgumentException(
-                "trajectorySignalFinalStream: trajectory milli sum exceeds " +
-                  "a long — the reduction would wrap silently; rescale the " +
-                  "rewards")
-            Iterator(FinalSignal(key._1, key._2, s.sum.toLongExact, s.n))
-          } else {
-            var s = state.getOption.getOrElse(
-              TrajState(scala.math.BigDecimal(0L), 0L, Long.MinValue))
-            rows.foreach { e =>
-              val sum = s.sum + scala.math.BigDecimal(e.qMilli)
-              // the state codec's (38,18) integral capacity — named,
-              // never a silent encoder truncation
-              if (sum.abs >= scala.math.BigDecimal("1e20"))
-                throw new IllegalArgumentException(
-                  "trajectorySignalFinalStream: a running trajectory milli " +
-                    "sum exceeds the state codec's exact range (10^20); " +
-                    "rescale the rewards")
-              s = TrajState(sum, s.n + 1L, math.max(s.lastSeen, e.ts.getTime))
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.lastSeen + quiesceMs, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    closeOnSilence[(String, Long), RewardEvent, TrajState, FinalSignal](
+        typed, quiesceMs, watermarkDelay)(e => (e.grp, e.traj),
+      (_, prev, rows) => (rows.foldLeft(prev.getOrElse(TrajState(0L, 0L))) { (s, e) =>
+        val sum = s.sum + e.qMilli
+        // the state codec's (38,18) integral capacity — named, never a
+        // silent encoder truncation
+        if (sum.abs >= scala.math.BigDecimal("1e20"))
+          throw new IllegalArgumentException(
+            "trajectorySignalFinalStream: a running trajectory milli " +
+              "sum exceeds the state codec's exact range (10^20); " +
+              "rescale the rewards")
+        TrajState(sum, s.n + 1L)
+      }, Iterator.empty),
+      { (key, s) =>
+        // the batch long-cast guard, applied to the FINAL sum only
+        // (exactly where batch applies it)
+        if (s.sum.abs >= scala.math.BigDecimal("9223372036854775808"))
+          throw new IllegalArgumentException(
+            "trajectorySignalFinalStream: trajectory milli sum exceeds " +
+              "a long — the reduction would wrap silently; rescale the " +
+              "rewards")
+        Some(FinalSignal(key._1, key._2, s.sum.toLongExact, s.n))
+      })
       .toDF()
   }
 
@@ -985,31 +952,25 @@ object StreamingOps {
     * the typed row the drift eviction machine consumes (the bucket is
     * ALREADY hashed in-plan: the state machine folds counts only).
     */
-  final case class BucketEvent(snap: String, b: Long, ts: java.sql.Timestamp)
-
-  /** Per-(snapshot, bucket) running count + last event time. */
-  final case class BucketState(cnt: Long, lastSeen: Long)
+  final case class BucketEvent(snap: String, b: Long, ts: java.sql.Timestamp) extends Timed
 
   final case class FinalBucketCount(snap: String, b: Long, p_cnt: Long)
 
   /** The EVICTING drift-count monitor — [[driftBucketCountsStream]]'s
-    * rolling-snapshot answer via the [[preferencePairsFinalStream]]
-    * quiescence recipe, closing the r18 gap's LAST complete-mode
-    * monitor: the stream carries a SNAPSHOT column (the era / ingest
-    * batch / crawl slice under measurement), each ACTIVE
-    * (snapshot, bucket) holds one long + a timestamp, and after
-    * `quiesceMs` of event-time silence the key CLOSES, its final
-    * `(snapshot, b, p_cnt)` row emits ONCE (append mode) and the state
-    * drops — the drift tail then runs batch-side per closed snapshot
+    * rolling-snapshot answer on the [[closeOnSilence]] kernel with
+    * horizon `quiesceMs`: the stream carries a SNAPSHOT column (the era
+    * / ingest batch / crawl slice under measurement), each ACTIVE
+    * (snapshot, bucket) key holds one count, and its final
+    * `(snapshot, b, p_cnt)` row emits ONCE at close — the drift tail
+    * then runs batch-side per closed snapshot
     * (`Sampling.driftFromBucketCounts` against the frozen reference),
     * exactly the live form's composition with the snapshot as the
     * grouping key. Total state is bounded by
     * active-snapshots · buckets, whatever the firehose's history. The
     * closed counts equal [[graft.scale.Sampling.tokenBucketCounts]]
-    * over exactly the snapshot's pre-close rows (spec-pinned); a late
-    * row inside the watermark REOPENS its (snapshot, bucket) as a
-    * fresh key. The one documented divergence: rows with a NULL event
-    * time are excluded — a time-based protocol cannot place them.
+    * over exactly the snapshot's pre-close rows (spec-pinned). The one
+    * documented divergence is the kernel's: rows with a NULL event time
+    * are excluded.
     *
     * @return streaming (snap, b, p_cnt), append-mode; one row per
     *         CLOSED (snapshot, bucket)
@@ -1024,11 +985,9 @@ object StreamingOps {
       watermarkDelay: String = "10 minutes"): DataFrame = {
     require(buckets > 0 && buckets <= (1 << 24),
       "buckets must fit the md5 bucket space")
-    require(quiesceMs > 0, s"quiesceMs must be positive, got $quiesceMs")
     val spark = docs.sparkSession
     import spark.implicits._
     val typed = docs
-      .filter(col(tsCol).isNotNull)
       .select(col(snapshotCol).cast("string").as("snap"),
         explode(regexp_extract_all(
           lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"),
@@ -1036,28 +995,12 @@ object StreamingOps {
       .select(col("snap"),
         graft.scale.TextStats.hashBucket(col("tok"), buckets).as("b"),
         col("ts"))
-      .withWatermark("ts", watermarkDelay)
       .as[BucketEvent]
-    typed
-      .groupByKey(e => (e.snap, e.b))
-      .flatMapGroupsWithState[BucketState, FinalBucketCount](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, Long), rows: Iterator[BucketEvent], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(FinalBucketCount(key._1, key._2, s.cnt))
-          } else {
-            var s = state.getOption.getOrElse(BucketState(0L, Long.MinValue))
-            rows.foreach { e =>
-              s = BucketState(s.cnt + 1L, math.max(s.lastSeen, e.ts.getTime))
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.lastSeen + quiesceMs, state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    // the state is the key's running token count
+    closeOnSilence[(String, Long), BucketEvent, Long, FinalBucketCount](
+        typed, quiesceMs, watermarkDelay)(e => (e.snap, e.b),
+      (_, prev, rows) => (prev.getOrElse(0L) + rows.size, Iterator.empty),
+      (key, cnt) => Some(FinalBucketCount(key._1, key._2, cnt)))
       .toDF()
   }
 

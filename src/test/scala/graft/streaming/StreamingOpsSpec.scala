@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -78,41 +79,87 @@ class StreamingOpsSpec extends SparkSpec {
     // not grow state without bound. Event-time timeouts REMOVE flushed
     // sessions from the state store, and rows older than the watermark
     // are filtered before the state function — pin both via the query's
-    // own stateOperators metrics, not just output rows.
+    // own stateOperators metrics, not just output rows. dialogueQcStream
+    // closes through the same kernel and runs the same scenario.
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = sessionize(input.toDS(), gapMs = 5 * 60 * 1000L)
-      .writeStream.format("memory").queryName("sessbound")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // b1: two users open sessions -> 2 state rows
-      input.addData(
-        Event(1, ts(1), 100, "click", 1.0),
-        Event(2, ts(3), 100, "click", 2.0),
-        Event(3, ts(2), 200, "view", 4.0))
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.head.numRowsTotal === 2L)
-      // b2: a third user far ahead advances the watermark to minute 49
-      input.addData(Event(9, ts(59), 999, "click", 0.0))
-      q.processAllAvailable()
-      // b3: 999's session extends (3-min gap); the watermark now past
-      // users 100/200's timeout timestamps EVICTS their state; a late
-      // minute-2 event (47 min below the watermark) must be filtered —
-      // neither a new session nor a mutation of the flushed one
-      input.addData(
-        Event(10, java.sql.Timestamp.valueOf("2026-01-01 11:02:00"), 999, "click", 0.0),
-        Event(11, ts(2), 100, "late", 99.0))
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.head.numRowsTotal === 1L,
-        "flushed sessions must be evicted from the state store")
-      val out = spark.table("sessbound")
-        .selectExpr("userId", "nEvents", "totalValue").as[(Long, Long, Double)]
-        .collect().toSet
-      assert(out.contains((100L, 2L, 3.0))) // flushed whole, late row excluded
-      assert(out.contains((200L, 1L, 4.0)))
-      assert(!out.exists(r => r._1 == 100L && r._3 == 99.0),
-        "late event leaked into a session")
-    } finally q.stop()
+    def bounded(name: String, op: Dataset[Event] => Dataset[_]): DataFrame = {
+      val input = MemoryStream[Event]
+      val q = op(input.toDS())
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        // b1: two users open sessions -> 2 state rows
+        input.addData(
+          Event(1, ts(1), 100, "click", 1.0),
+          Event(2, ts(3), 100, "click", 2.0),
+          Event(3, ts(2), 200, "view", 4.0))
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.head.numRowsTotal === 2L)
+        // b2: a third user far ahead advances the watermark to minute 49
+        input.addData(Event(9, ts(59), 999, "click", 0.0))
+        q.processAllAvailable()
+        // b3: 999's session extends (3-min gap); the watermark now past
+        // users 100/200's timeout timestamps EVICTS their state; a late
+        // minute-2 event (47 min below the watermark) must be filtered —
+        // neither a new session nor a mutation of the flushed one
+        input.addData(
+          Event(10, java.sql.Timestamp.valueOf("2026-01-01 11:02:00"), 999, "click", 0.0),
+          Event(11, ts(2), 100, "late", 99.0))
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.head.numRowsTotal === 1L,
+          "flushed sessions must be evicted from the state store")
+        spark.table(name)
+      } finally q.stop()
+    }
+    val out = bounded("sessbound", sessionize(_, gapMs = 5 * 60 * 1000L))
+      .selectExpr("userId", "nEvents", "totalValue").as[(Long, Long, Double)]
+      .collect().toSet
+    assert(out.contains((100L, 2L, 3.0))) // flushed whole, late row excluded
+    assert(out.contains((200L, 1L, 4.0)))
+    assert(!out.exists(r => r._1 == 100L && r._3 == 99.0),
+      "late event leaked into a session")
+    val dlg = bounded("dlgbound", dialogueQcStream(_, gapMs = 5 * 60 * 1000L))
+      .selectExpr("userId", "nTurns", "nRoles").as[(Long, Long, Long)]
+      .collect().toSet
+    assert(dlg.contains((100L, 2L, 1L))) // flushed whole, late row excluded
+    assert(dlg.contains((200L, 1L, 1L)))
+    assert(dlg.count(_._1 == 100L) === 1,
+      "late event leaked into a dialogue")
+  }
+
+  test("gap closers: a null-ts event is excluded and the other rows close unchanged; gapMs <= 0 is refused") {
+    implicit val sqlCtx = spark.sqlContext
+    val evs = Seq(
+      Event(1, ts(1), 100, "click", 1.0),
+      Event(2, ts(3), 100, "view", 2.0),
+      Event(3, ts(20), 100, "view", 4.0))
+    val nullTs = Event(4, null, 100, "click", 8.0)
+    def closed(name: String, op: Dataset[Event] => Dataset[_], rows: Seq[Event]): Set[Row] = {
+      val input = MemoryStream[Event]
+      val q = op(input.toDS())
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(rows: _*)
+        q.processAllAvailable()
+        // a foreign user far ahead flushes user 100's open session
+        input.addData(Event(9, ts(59), 999, "click", 0.0))
+        q.processAllAvailable()
+        spark.table(name).filter("userId = 100").collect().toSet
+      } finally q.stop()
+    }
+    val ops = Seq[(String, Dataset[Event] => Dataset[_])](
+      "sess" -> (sessionize(_, gapMs = 5 * 60 * 1000L)),
+      "dlg" -> (dialogueQcStream(_, gapMs = 5 * 60 * 1000L)))
+    for ((name, op) <- ops) {
+      val want = closed(s"${name}_nonull", op, evs)
+      assert(want.size === 2, s"$name: the gap splits user 100 into two sessions")
+      assert(closed(s"${name}_nullts", op, evs :+ nullTs) === want,
+        s"$name: a null-ts row must be dropped, not fold into a session")
+    }
+    val empty = MemoryStream[Event].toDS()
+    intercept[IllegalArgumentException](sessionize(empty, gapMs = 0L))
+    intercept[IllegalArgumentException](dialogueQcStream(empty, gapMs = -1L))
   }
 
   test("dedupStream: same-fingerprint docs collapse across micro-batches within the horizon") {
