@@ -52,7 +52,7 @@ object CacheScope {
     * references to q163 cost +20 s at sf0.01 before the cut, and the
     * cut then took the whole family BELOW its pre-guard cost).
     *
-    * Deliberately NOT `localCheckpoint`: a locally-checkpointed block
+    * Deliberately NOT a [[Rounds.cut]]: a locally-checkpointed block
     * that gets EVICTED under memory pressure is unrecoverable (the
     * compute lineage is truncated) — measured as "Block rdd_N does not
     * exist" task failures at the 100× century staging. Here the cut is

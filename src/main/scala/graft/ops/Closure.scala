@@ -23,6 +23,9 @@ import org.apache.spark.sql.functions._
   *  - Above the threshold: distributed path doubling — each round unions
   *    the closure with its self-join, so covered path length doubles and
   *    a DAG of depth L converges in O(log L) shuffle-join rounds.
+  *
+  * The switch and the rounds run on [[Rounds]], whose scaladoc says why
+  * every round is a locally-checkpointed cut.
   */
 object Closure {
 
@@ -48,23 +51,14 @@ object Closure {
     val e = edges
       .select(col(childCol).as("term"), col(parentCol).as("ancestor"))
       .distinct()
-      .persist()
-    val n = e.count()
-    val out =
-      if (n <= driverThreshold) driverClosure(e)
-      else distributedClosure(e, maxRounds)
-    e.unpersist()
-    out
+    Rounds.sized(e, driverThreshold, e.schema)(driverClosure)(distributedClosure(_, _, maxRounds))
   }
 
-  /** Dim-sized path: collect the edges, memoized iterative DFS (explicit
-    * stack — no recursion-depth limit), parallelize the closure back.
-    * Cycles surface as an IllegalStateException, like the distributed
-    * path's round cap.
+  /** Dim-sized path: memoized iterative DFS (explicit stack — no
+    * recursion-depth limit) over the collected edges. Cycles surface as
+    * an IllegalStateException, like the distributed path's round cap.
     */
-  private def driverClosure(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    val pairs = e.collect().map(r => (r.get(0), r.get(1)))
+  private def driverClosure(pairs: Array[(Any, Any)]): Seq[Row] = {
     val parents = new mutable.HashMap[Any, mutable.ArrayBuffer[Any]]()
     pairs.foreach { case (c, p) =>
       parents.getOrElseUpdate(c, new mutable.ArrayBuffer[Any]()) += p
@@ -94,63 +88,35 @@ object Closure {
         }
       }
     }
-    val rows = anc.iterator.flatMap { case (t, as) => as.iterator.map(a => Row(t, a)) }.toSeq
-    DriverDim.toDF(spark, rows, e.schema)
+    anc.iterator.flatMap { case (t, as) => as.iterator.map(a => Row(t, a)) }.toSeq
   }
 
   /** Path doubling for graphs too big to collect; join strategy per
     * round is left to AQE (re-broadcasting the GROWING closure costs
     * more than the shuffle it saves once it passes ~1M pairs).
     */
-  private def distributedClosure(e: DataFrame, maxRounds: Int): DataFrame = {
-    val spark = e.sparkSession
-    // rounds re-rooted on their own locally-checkpointed RDD: each
-    // doubling round references cur THREE times (union + both join
-    // sides), so plain persists walk 3^rounds plan paths and stack
-    // lineage — the iterative-loop class the CC chain probe OOM'd on
-    // (see Dedup.connectedComponents / MEMORY_NOTES r13)
-    def cutRound(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val r = df.rdd
-      r.localCheckpoint()
-      (spark.createDataFrame(r, df.schema), r)
-    }
-    var (cur, curRdd) = cutRound(e)
-    var n = cur.count()
-    var round = 0
-    var changed = true
-    while (changed) {
-      if (round >= maxRounds) {
-        curRdd.unpersist(blocking = false) // no cache leak on the failure path
-        throw new IllegalStateException(
-          s"closure did not converge after $maxRounds rounds (cycle in DAG?)")
-      }
+  private def distributedClosure(e: DataFrame, edgeCount: Long, maxRounds: Int): DataFrame = {
+    var n = edgeCount
+    Rounds.iterate(e, maxRounds,
+        s"closure did not converge after $maxRounds rounds (cycle in DAG?)") { cur =>
       val hop = cur.select(col("term").as("h_term"), col("ancestor").as("h_anc"))
-      val (next, nextRdd) = cutRound(cur
+      (cur
         .unionByName(
           cur.join(hop, cur("ancestor") === col("h_term"))
             .select(cur("term"), col("h_anc").as("ancestor")))
-        .distinct())
-      val m = next.count()
-      changed = m != n
-      curRdd.unpersist(blocking = false)
-      cur = next
-      curRdd = nextRdd
-      n = m
-      round += 1
+        .distinct(),
+        next => {
+          val m = next.count()
+          val grew = m != n
+          n = m
+          // a cycle closes onto itself: doubling CONVERGES (the closure
+          // is finite) but leaves reflexive pairs — surface it like the
+          // driver path's back-edge detection rather than returning them
+          if (!grew && next.filter(col("term") === col("ancestor")).limit(1).count() > 0)
+            throw new IllegalStateException("closure found a cycle in the DAG (reflexive pair)")
+          grew
+        })
     }
-    // a cycle closes onto itself: doubling CONVERGES (the closure is
-    // finite) but leaves reflexive pairs — surface it like the driver
-    // path's back-edge detection rather than returning them silently
-    if (cur.filter(col("term") === col("ancestor")).limit(1).count() > 0) {
-      curRdd.unpersist(blocking = false) // no cache leak on the failure path
-      throw new IllegalStateException("closure found a cycle in the DAG (reflexive pair)")
-    }
-    // returned frame scans the cached final-round RDD (callers fan out
-    // over it); released by the query driver's CacheScope (terminal —
-    // see registerRdd's caveat)
-    CacheScope.registerRdd(curRdd)
-    cur
   }
 
   /** (acc_a, acc_b) pairs that sit on the SAME branch — one is an

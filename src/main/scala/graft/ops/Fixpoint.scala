@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Iterative fixpoint resolution over a substitution table — the Spark
@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * above it, distributed pointer jumping — substitute through the
   * PARTIALLY-RESOLVED table, not the raw edges, so a chain of length L
   * converges in O(log L) broadcast-join rounds. Either way the 100 TB
-  * fact table never iterates: it joins the FINAL materialized map.
+  * fact table never iterates: it joins the FINAL materialized map. The
+  * switch and the rounds run on [[Rounds]], whose scaladoc says why
+  * every round is a locally-checkpointed cut.
   */
 object Fixpoint {
 
@@ -34,57 +36,26 @@ object Fixpoint {
     // distinct first so both paths agree on row multiplicity for inputs
     // carrying duplicate substitution rows (same idiom as Closure/Dedup)
     val edges = subs.select(col(oldCol).as("old_id"), col(newCol).as("resolved_id")).distinct()
-    val n0 = edges.count()
-    if (n0 <= driverThreshold) return driverResolve(edges)
-    val spark = subs.sparkSession
-    // rounds are re-rooted on their own locally-checkpointed RDD: a
-    // plain-persisted round embeds the previous round's plan and
-    // references it twice (cur + jump), the 2^rounds plan-walk /
-    // lineage-stacking class the CC chain-graph probe OOM'd on (see
-    // Dedup.connectedComponents / MEMORY_NOTES r13)
-    def cutRound(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val r = df.rdd
-      r.localCheckpoint()
-      (spark.createDataFrame(r, df.schema), r)
-    }
-    var (cur, curRdd) = cutRound(edges)
-    var round = 0
-    var changed = true
-    while (changed) {
-      if (round >= maxRounds) {
-        curRdd.unpersist(blocking = false) // no cache leak on the failure path
-        throw new IllegalStateException(
-          s"fixpoint did not converge after $maxRounds rounds (cycle in substitutions?)")
+    Rounds.sized(edges, driverThreshold, edges.schema)(driverResolve) { (e, _) =>
+      Rounds.iterate(e, maxRounds,
+          s"fixpoint did not converge after $maxRounds rounds (cycle in substitutions?)") { cur =>
+        // pointer jumping: follow resolved_id through the current table
+        val jump = cur.select(col("old_id").as("j_old"), col("resolved_id").as("j_new"))
+        val joined = cur
+          .join(broadcast(jump), cur("resolved_id") === col("j_old"), "left")
+          .persist()
+        val jumped = joined.filter(col("j_new").isNotNull).limit(1).count() > 0
+        (joined.select(col("old_id"), coalesce(col("j_new"), col("resolved_id")).as("resolved_id")),
+          next => { next.count(); joined.unpersist(); jumped })
       }
-      // pointer jumping: follow resolved_id through the current table
-      val jump = cur.select(col("old_id").as("j_old"), col("resolved_id").as("j_new"))
-      val joined = cur
-        .join(broadcast(jump), cur("resolved_id") === col("j_old"), "left")
-        .persist()
-      changed = joined.filter(col("j_new").isNotNull).limit(1).count() > 0
-      val (next, nextRdd) = cutRound(joined
-        .select(col("old_id"), coalesce(col("j_new"), col("resolved_id")).as("resolved_id")))
-      next.count() // materialize the cut before unpersisting parents
-      curRdd.unpersist(blocking = false)
-      joined.unpersist()
-      cur = next
-      curRdd = nextRdd
-      round += 1
     }
-    // returned frame scans the cached final-round RDD; released by the
-    // query driver's CacheScope (terminal — see registerRdd's caveat)
-    CacheScope.registerRdd(curRdd)
-    cur
   }
 
-  /** Dim-sized path: collect the substitution map, follow every chain
-    * once with memoization (path compression), parallelize the resolved
-    * map back. Cycles throw like the distributed path's round cap.
+  /** Dim-sized path: follow every chain of the collected substitution
+    * map once with memoization (path compression). Cycles throw like
+    * the distributed path's round cap.
     */
-  private def driverResolve(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val pairs = edges.collect().map(r => (r.get(0), r.get(1)))
+  private def driverResolve(pairs: Array[(Any, Any)]): Seq[Row] = {
     val next = new scala.collection.mutable.HashMap[Any, Any]()
     pairs.foreach { case (o, n) => next(o) = n }
     val resolved = new scala.collection.mutable.HashMap[Any, Any]()
@@ -105,7 +76,6 @@ object Fixpoint {
         path.foreach(p => resolved(p) = end)
       }
     }
-    val rows = resolved.iterator.map { case (o, r) => org.apache.spark.sql.Row(o, r) }.toSeq
-    DriverDim.toDF(spark, rows, edges.schema)
+    resolved.iterator.map { case (o, r) => Row(o, r) }.toSeq
   }
 }

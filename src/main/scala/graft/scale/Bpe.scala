@@ -41,31 +41,11 @@ import org.apache.spark.sql.functions._
   * table IS a driver-sized model, same contract as the streaming
   * frozen-model maps). Iteration frames are re-rooted on their own
   * locally-checkpointed RDD so `numMerges` iterations nest neither
-  * plans nor RDD lineage (see `persistedCut`). Encoding is scan-pure: a chain of
+  * plans nor RDD lineage (see [[graft.ops.Rounds]]). Encoding is scan-pure: a chain of
   * `numMerges` codegen'd `replace`s inside one projection — no
   * shuffle, no state.
   */
 object Bpe {
-
-  /** Re-root a frame on its own locally-checkpointed RDD — bounds BOTH
-    * driver-side plan depth (the r13 nested-cache plan-walk finding; see
-    * [[Curation]]) and executor-side RDD LINEAGE depth across merge
-    * iterations. The second bound is the one a persist alone does not
-    * give: caching never truncates dependencies (eviction recompute
-    * needs them), so task serialization still recurses the whole
-    * iteration chain — measured as a DAGScheduler StackOverflowError
-    * near 40 stacked iterations. `localCheckpoint` truncates the
-    * lineage at the iteration's first action, keeping every later
-    * iteration's serialized closure constant-depth. The checkpointed
-    * RDDs are vocabulary-sized and unpersist automatically when the
-    * loop drops its reference (ContextCleaner).
-    */
-  private def persistedCut(df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val cut = df.rdd
-    cut.localCheckpoint()
-    (df.sparkSession.createDataFrame(cut, df.schema), cut)
-  }
 
   /** End-of-word marker appended before splitting into symbols —
     * distinguishes word-final subwords ("est_" in "lowest") from
@@ -122,11 +102,11 @@ object Bpe {
   def trainMerges(docs: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var (cur, curRdd) = persistedCut(
+    var (cur, curRdd) = graft.ops.Rounds.cut(
       wordCounts(docs, textCol).withColumn("sym", symInit(col("w"))))
     // eagerly unpersist each superseded round's checkpointed RDD once
     // the NEXT round's argmax collect has materialized its successor
-    // (the Dedup/Fixpoint/Closure loop discipline) — otherwise up to
+    // (the Rounds.iterate discipline) — otherwise up to
     // numMerges vocabulary-sized cached RDDs linger until GC and
     // releaseAll can't reclaim them; the final round's RDD registers
     // with CacheScope like connectedComponents' result
@@ -159,7 +139,7 @@ object Bpe {
         // the last round needs no successor — its argmax was the model's
         // final row; building one would only re-root a frame nobody reads
         prevRdd = curRdd
-        val next = persistedCut(cur.withColumn("sym",
+        val next = graft.ops.Rounds.cut(cur.withColumn("sym",
           replace(col("sym"), lit(s" ${m.left}  ${m.right} "), lit(s" ${m.left}${m.right} "))))
         cur = next._1
         curRdd = next._2

@@ -34,30 +34,15 @@ import graft.ops.CacheScope
   */
 object Curation {
 
-  /** Persist `df` with its logical lineage CUT at an RDD boundary.
-    *
-    * The layered pipeline persists stage frames whose plans each embed
-    * the previous stage's `InMemoryRelation` — which carries ITS full
-    * child plan, recursively. Per-execution plan bookkeeping (the
-    * listener's `SparkPlanInfo`, plan descriptions, canonicalization)
-    * walks those nested trees once per PATH, so seven persist layers
-    * make every downstream action pay seconds of DRIVER time at any
-    * data size (measured: 3.6 s to count a 386-row cache; capping
-    * `spark.sql.maxPlanStringLength` only halved it — the walk itself
-    * remains). Re-rooting the persisted frame on its own materialized
-    * RDD (`LogicalRDD`) bounds every plan at one cache layer: the
-    * upstream lineage lives inside the RDD, invisible to the planner.
-    *
-    * Costs, deliberately accepted for SLIM frames only: one
-    * InternalRow→Row conversion per row at cache build (bare longs
-    * here), construction becomes eager at the `.rdd` call (this
-    * pipeline is construction-eager anyway — ShardPack's prefix-sum
-    * pass), and Catalyst cannot push filters below the cut (consumers
-    * semi-join the whole frame, so nothing is lost). Recompute-on-
-    * eviction still works: the RDD lineage reaches back through the
-    * upstream caches.
-    */
-  private def persistedCut(df: DataFrame): DataFrame = CacheScope.cut(df)
+  // Stage frames that feed several consumers are re-rooted with
+  // CacheScope.cut, which bounds every downstream plan at one cache
+  // layer: nested persists made each action walk the whole chain of
+  // cached plans once per path (the r13 plan walk; see
+  // graft.ops.Rounds). Its costs are accepted for SLIM frames only: one
+  // InternalRow→Row conversion per row at cache build (bare longs
+  // here), an eager `.rdd` (this pipeline is construction-eager anyway —
+  // ShardPack's prefix-sum pass), and no filter pushdown below the cut
+  // (consumers semi-join the whole frame, so nothing is lost).
 
   def curate(
       docs: DataFrame,
@@ -247,13 +232,13 @@ object Curation {
     // downstream read — and once the caches are warm the observed nodes
     // under them never re-execute, so a later counting action reads
     // nothing.)
-    val dedIds = persistedCut(
+    val dedIds = CacheScope.cut(
       Dedup.dedupByClusterPriorityWithReps(chunks, reps, "chunk_id", priorityCol)
         .select("chunk_id"))
     val ded = chunks.join(dedIds, Seq("chunk_id"), "left_semi")
     // 3. decontaminate (holdout renamed to the chunk shape — only its
     // gram set matters)
-    val cleanIds = persistedCut(
+    val cleanIds = CacheScope.cut(
       ded.join(
         Dedup.decontaminate(
           ded,
@@ -271,12 +256,12 @@ object Curation {
     // DuckDB quantile_cont oracle mirrors — see the scaladoc trade.
     require(surpKeepQuantile > 0 && surpKeepQuantile <= 1,
       s"surpKeepQuantile must be in (0, 1], got $surpKeepQuantile")
-    // persistedCut (r20): scored feeds the cutoff agg AND the gate's
+    // CacheScope.cut (r20): scored feeds the cutoff agg AND the gate's
     // filter side — uncached, the model-build + scoring joins under
     // bigramSurprisal ran twice per gate (the explode itself was already
     // shared through bi's persist; measured 4.1 s for the gate stage at
     // sf0.1, about half of it the second pass). Slim (id + 3 longs) rows.
-    val scored = persistedCut(
+    val scored = CacheScope.cut(
       TextStats.bigramSurprisal(clean, "chunk_id", "chunk_text"))
     val cutExpr =
       if (approxQuantileAccuracy > 0)
@@ -303,12 +288,12 @@ object Curation {
     // stage-scheduling overhead, which the counter re-reads would pay
     // twice more per counter (measured: 3.8 s mixed + 5.8 s trainSeq
     // cold at sf0.1 — the bulk of the old q118-minus-q115 gap)
-    val mixed = persistedCut(TextStats.temperatureMixAtResolution(
+    val mixed = CacheScope.cut(TextStats.temperatureMixAtResolution(
       gated, "chunk_id", groupCol, budgetSeqs, mixResolution))
     // 6. leakage-safe split on the SAME clustering as the dedup
     val split = Sampling.leakageSafeSplitWithReps(
       gated.select("chunk_id"), reps, "chunk_id", testPermille, valPermille)
-    val trainSeq = persistedCut(mixed.join(
+    val trainSeq = CacheScope.cut(mixed.join(
       split.filter(col("split") === "train").select("chunk_id"),
       Seq("chunk_id"), "left_semi"))
     // 7. shard-pack the train copies. Budgets are denominated in the
@@ -525,7 +510,7 @@ object Curation {
           expr(s"id_a div ${chunkIdSpan}L") =!= expr(s"id_b div ${chunkIdSpan}L")))
     val reps = Dedup.connectedComponents(pairs, "id_a", "id_b")
       .withColumnRenamed("id", "chunk_id")
-    val dedIds = persistedCut(
+    val dedIds = CacheScope.cut(
       Dedup.dedupByClusterPriorityWithReps(chunks, reps, "chunk_id", priorityCol)
         .select("chunk_id"))
     val ded = chunks.join(dedIds, Seq("chunk_id"), "left_semi")
@@ -537,7 +522,7 @@ object Curation {
       Dedup.minhashSignatures(storeAsDocs, "chunk_id", "chunk_text",
         shingleSize, numHashes))
     val dedAsDocs = ded.select(col("chunk_id"), col("chunk_text"))
-    val incIds = persistedCut(
+    val incIds = CacheScope.cut(
       Dedup.nearDupAgainstSignatures(
         dedAsDocs, storeAsDocs,
         Dedup.minhashSignatures(dedAsDocs, "chunk_id", "chunk_text",
@@ -548,7 +533,7 @@ object Curation {
         .select("chunk_id"))
     val inc = chunks.join(incIds, Seq("chunk_id"), "left_semi")
     // 4. decontaminate + batch-local quantile gate (base stages 3-4)
-    val cleanIds = persistedCut(
+    val cleanIds = CacheScope.cut(
       inc.join(
         Dedup.decontaminate(
           inc,
@@ -560,9 +545,9 @@ object Curation {
     val clean = chunks.join(cleanIds, Seq("chunk_id"), "left_semi")
     require(surpKeepQuantile > 0 && surpKeepQuantile <= 1,
       s"surpKeepQuantile must be in (0, 1], got $surpKeepQuantile")
-    // persistedCut (r20): same double-consumer shape as the base
+    // CacheScope.cut (r20): same double-consumer shape as the base
     // pipeline's gate — see pretrainCurate
-    val scored = persistedCut(
+    val scored = CacheScope.cut(
       TextStats.bigramSurprisal(clean, "chunk_id", "chunk_text"))
     val cutExpr =
       if (approxQuantileAccuracy > 0)
@@ -582,12 +567,12 @@ object Curation {
     // 5. mixture rebalance over combined store+batch domain populations
     val storeSizes = storeChunks.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_base"))
-    val mixed = persistedCut(TextStats.temperatureMixRebalance(
+    val mixed = CacheScope.cut(TextStats.temperatureMixRebalance(
       gated, "chunk_id", groupCol, storeSizes, budgetSeqs, mixResolution))
     // 6. leakage-safe split on the batch clustering
     val split = Sampling.leakageSafeSplitWithReps(
       gated.select("chunk_id"), reps, "chunk_id", testPermille, valPermille)
-    val trainSeq = persistedCut(mixed.join(
+    val trainSeq = CacheScope.cut(mixed.join(
       split.filter(col("split") === "train").select("chunk_id"),
       Seq("chunk_id"), "left_semi"))
     // 7. shard-pack at the caller's offset; like the base pipeline,

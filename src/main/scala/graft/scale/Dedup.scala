@@ -1,7 +1,10 @@
 package graft.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType, StructType}
+
+import graft.ops.Rounds
 
 /** Deduplication operators for 100 TB training-data pipelines.
   *
@@ -416,6 +419,8 @@ object Dedup {
     * over the pair list, all distributed; the driver only runs the
     * convergence check. (For adversarial billion-edge long-chain graphs
     * use the alternating small-star/large-star formulation instead.)
+    * The size switch and the round loop run on [[graft.ops.Rounds]],
+    * whose scaladoc says why every round is a locally-checkpointed cut.
     *
     * @return (id, rep) — one row per node that appears in `pairs`, with
     *         the component's minimum id as representative
@@ -427,46 +432,23 @@ object Dedup {
       maxRounds: Int = 15,
       driverThreshold: Long = 2000000L): DataFrame = {
     val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val edges = fwd
+    val symmetric = fwd
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist()
+    val id = symmetric.schema.fields.head
     // size switch (same design as Closure/Fixpoint): a pair list that
     // fits the driver resolves in one union-find pass instead of paying
     // per-round distributed scheduling; huge pair lists (near-dup sweeps
     // over billions of docs) take the propagation rounds below
-    if (edges.count() <= driverThreshold) {
-      val out = driverComponents(edges)
-      edges.unpersist()
-      return out
-    }
-    // Per-round frames are re-rooted on their own locally-checkpointed
-    // RDD rather than plain-persisted. A persisted round still EMBEDS
-    // the previous round's full plan (and references it twice — join +
-    // union), so driver plan bookkeeping walks 2^rounds paths and task
-    // serialization recurses the whole lineage chain: measured as a
-    // driver OOM at ~30 rounds on a 3M-edge chain graph (Profile
-    // ccdeep) — data that is trivially small. The checkpoint cut makes
-    // every round's plan a LogicalRDD leaf and truncates lineage at the
-    // round's convergence action, so cost per round is flat in the
-    // round number. Superseded round RDDs are unpersisted as soon as
-    // the next round materializes; the final one is registered for the
-    // query driver's CacheScope release.
-    val spark = pairs.sparkSession
-    def cutRound(df: org.apache.spark.sql.DataFrame)
-        : (org.apache.spark.sql.DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val r = df.rdd
-      r.localCheckpoint()
-      (spark.createDataFrame(r, df.schema), r)
-    }
-    // initialization FUSED with propagation round 1: every node of the
-    // symmetric edge list appears as src, so one groupBy yields
-    // rep = min(self, direct neighbors) — the state after the first
-    // round — for the cost of the node-distinct shuffle alone
-    var (labels, labelsRdd) = cutRound(edges
-      .groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("id"), least(col("id"), col("mn")).as("rep")))
+    Rounds.sized(symmetric, driverThreshold,
+        StructType(Seq(id.copy(name = "id"), id.copy(name = "rep"))))(driverComponents)(
+      (edges, _) => propagateLabels(edges, maxRounds))
+  }
+
+  /** Distributed min-label propagation over the (persisted) symmetric
+    * edge list.
+    */
+  private def propagateLabels(edges: DataFrame, maxRounds: Int): DataFrame = {
     // Convergence detection: labels are MONOTONE (a node's rep only ever
     // decreases), so for numeric ids the rounds have converged exactly
     // when Σrep stops falling — one cheap aggregation over the persisted
@@ -479,69 +461,57 @@ object Dedup {
     // the sum unchanged and exit propagation early — those fall back to
     // the exact changed-rows check.
     val numericIds = edges.schema.fields.head.dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-          org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case d: org.apache.spark.sql.types.DecimalType => d.scale == 0
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.scale == 0
       case _ => false
     }
-    // seed the sum with the fused-init state (the same aggregation also
-    // materializes the persisted labels), so a graph that converges at
-    // init (stars) exits after ONE confirming loop round
-    var prevSum: java.math.BigDecimal =
-      if (numericIds) labels.agg(sum(col("rep").cast("decimal(38,0)"))).head().getDecimal(0)
-      else null
-    var round = 0
-    var changed = true
-    while (changed) {
-      if (round >= maxRounds) {
-        // don't leak the live round / edge caches on the failure path
-        labelsRdd.unpersist(blocking = false)
-        edges.unpersist(blocking = false)
-        throw new IllegalStateException(
-          s"components did not converge after $maxRounds rounds (pathological chain?)")
-      }
+    def repSum(labels: DataFrame): java.math.BigDecimal =
+      labels.agg(sum(col("rep").cast("decimal(38,0)"))).head().getDecimal(0)
+    var prevSum: java.math.BigDecimal = null
+    // initialization FUSED with propagation round 1: every node of the
+    // symmetric edge list appears as src, so one groupBy yields
+    // rep = min(self, direct neighbors) — the state after the first
+    // round — for the cost of the node-distinct shuffle alone
+    val init = edges
+      .groupBy(col("src").as("id"))
+      .agg(min(col("dst")).as("mn"))
+      .select(col("id"), least(col("id"), col("mn")).as("rep"))
+    Rounds.iterate(init, maxRounds,
+        s"components did not converge after $maxRounds rounds (pathological chain?)") { labels =>
+      // seed the sum with the fused-init state (the same aggregation also
+      // materializes the persisted labels), so a graph that converges at
+      // init (stars) exits after ONE confirming loop round
+      if (numericIds && prevSum == null) prevSum = repSum(labels)
       // one round = ONE join (edge relabel) + ONE min-agg over the
       // union with the current labels: "take the min of yourself and
       // your neighbors" without a second node-sized join back (the
       // earlier neighborMin⋈labels formulation paid an extra shuffle
       // stage per round — pure latency at dim scale, pure cost at 100 TB)
-      val (next, nextRdd) = cutRound(edges
+      (edges
         .join(labels, col("src") === col("id"))
         .select(col("dst").as("id"), col("rep"))
         .unionByName(labels)
         .groupBy("id")
-        .agg(min(col("rep")).as("rep")))
-      if (numericIds) {
-        val s = next.agg(sum(col("rep").cast("decimal(38,0)"))).head().getDecimal(0)
-        changed = s != null && (prevSum == null || s.compareTo(prevSum) != 0)
-        prevSum = s
-      } else {
-        changed = next.join(labels.withColumnRenamed("rep", "old_rep"), Seq("id"))
-          .filter(col("rep") =!= col("old_rep"))
-          .limit(1)
-          .count() > 0
-      }
-      // next is materialized by the convergence action above, so the
-      // superseded round's blocks can go now
-      labelsRdd.unpersist(blocking = false)
-      labels = next
-      labelsRdd = nextRdd
-      round += 1
+        .agg(min(col("rep")).as("rep")),
+        next =>
+          if (numericIds) {
+            val s = repSum(next)
+            val changed = s != null && (prevSum == null || s.compareTo(prevSum) != 0)
+            prevSum = s
+            changed
+          } else
+            next.join(labels.withColumnRenamed("rep", "old_rep"), Seq("id"))
+              .filter(col("rep") =!= col("old_rep"))
+              .limit(1)
+              .count() > 0)
     }
-    edges.unpersist()
-    // returned frame scans the cached final-round RDD; released by the
-    // query driver's CacheScope (terminal — see registerRdd's caveat)
-    graft.ops.CacheScope.registerRdd(labelsRdd)
-    labels
   }
 
   /** Driver union-find with path compression for dim-sized pair lists;
     * representatives are the component minimum, matching the
     * distributed path exactly.
     */
-  private def driverComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val pairs = edges.collect().map(r => (r.get(0), r.get(1)))
+  private def driverComponents(pairs: Array[(Any, Any)]): Seq[Row] = {
     val parent = new scala.collection.mutable.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var root = x
@@ -559,14 +529,10 @@ object Dedup {
       if (ra != rb) parent(ra) = rb
     }
     val byRoot = parent.keysIterator.toSeq.groupBy(find)
-    val rows = byRoot.valuesIterator.flatMap { members =>
+    byRoot.valuesIterator.flatMap { members =>
       val rep = members.min(OrderingForAny)
-      members.iterator.map(m => org.apache.spark.sql.Row(m, rep))
+      members.iterator.map(m => Row(m, rep))
     }.toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      edges.schema.fields.head.copy(name = "id"),
-      edges.schema.fields.head.copy(name = "rep")))
-    graft.ops.DriverDim.toDF(spark, rows, schema)
   }
 
   /** Min ordering over the id types that appear in pair lists (numeric

@@ -502,7 +502,7 @@ object Sampling {
     * round adds one 1-row normalization agg riding a broadcast cross
     * join — R single-partition stages over domain-count-sized frames
     * by contract. `rounds ≤ 16` keeps the unrolled plan shallow (a
-    * longer horizon would want the persistedCut round discipline).
+    * longer horizon would want graft.ops.Rounds' round loop).
     *
     * @return (domainCol, loss_milli, excess_milli, w_final_ppm, w_avg_ppm)
     */

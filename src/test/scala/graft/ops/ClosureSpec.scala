@@ -33,9 +33,19 @@ class ClosureSpec extends SparkSpec {
       .as[(String, String)].collect().toSet
     assert(viaDriver === viaCluster)
     val cyclic = Seq(("A", "B"), ("B", "A")).toDF("child", "parent")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException](Closure.ancestors(cyclic))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached,
+      "the driver path's back-edge throw left cached RDDs")
     intercept[IllegalStateException](
       Closure.ancestors(cyclic, maxRounds = 5, driverThreshold = 0))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached,
+      "the distributed path's reflexive-pair throw left cached RDDs")
+    // a 1-round cap throws before convergence
+    intercept[IllegalStateException](
+      Closure.ancestors(cyclic, maxRounds = 1, driverThreshold = 0))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached,
+      "the distributed path's round-cap throw left cached RDDs")
   }
 
   test("sameBranchPairs is symmetric") {

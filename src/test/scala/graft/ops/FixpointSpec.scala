@@ -25,8 +25,13 @@ class FixpointSpec extends SparkSpec {
 
   test("cycles throw on both paths") {
     val cyclic = Seq((1L, 2L), (2L, 1L)).toDF("o", "n")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException](Fixpoint.resolve(cyclic, "o", "n"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached,
+      "the driver path's cycle throw left cached RDDs")
     intercept[IllegalStateException](
       Fixpoint.resolve(cyclic, "o", "n", maxRounds = 5, driverThreshold = 0))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached,
+      "the distributed path's round-cap throw left cached RDDs")
   }
 }

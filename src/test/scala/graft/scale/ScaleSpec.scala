@@ -167,6 +167,14 @@ class ScaleSpec extends SparkSpec {
     graft.ops.CacheScope.releaseAll()
   }
 
+  test("connectedComponents: a round-capped chain throws and leaves nothing cached") {
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException](Dedup.connectedComponents(
+      chain, "id_a", "id_b", maxRounds = 2, driverThreshold = 0))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cached)
+  }
+
   test("connectedComponents: fractional ids take the exact changed-rows check, not the truncating sum") {
     // a 4-node chain whose labels differ by < 1.0: every rep truncates
     // to 0 under a decimal(38,0) cast, so the sum-convergence fast path
