@@ -104,6 +104,11 @@ case class CmsSketchAgg(
 
 object CmsSketch {
 
+  /** The sketch aggregate over `c`. Streamable unchanged as a global
+    * aggregation (complete mode, state one `depth × width` buffer); the
+    * StreamingOpsSpec case "cmsSketchStream: the sketch after N
+    * micro-batches equals the batch sketch" pins stream == batch.
+    */
   def apply(c: Column, depth: Int, width: Int): Column =
     ColumnBridge.column(
       CmsSketchAgg(ColumnBridge.expression(c), depth, width).toAggregateExpression())

@@ -39,15 +39,16 @@ object Fixpoint {
     Rounds.sized(edges, driverThreshold, edges.schema)(driverResolve) { (e, _) =>
       Rounds.iterate(e, maxRounds,
           s"fixpoint did not converge after $maxRounds rounds (cycle in substitutions?)") { cur =>
-        // pointer jumping: follow resolved_id through the current table
+        // pointer jumping: follow resolved_id through the current table;
+        // the round carries whether a row jumped, and the one aggregate
+        // that reads it also materializes the cut
         val jump = cur.select(col("old_id").as("j_old"), col("resolved_id").as("j_new"))
-        val joined = cur
-          .join(broadcast(jump), cur("resolved_id") === col("j_old"), "left")
-          .persist()
-        val jumped = joined.filter(col("j_new").isNotNull).limit(1).count() > 0
-        (joined.select(col("old_id"), coalesce(col("j_new"), col("resolved_id")).as("resolved_id")),
-          next => { next.count(); joined.unpersist(); jumped })
-      }
+        (cur.join(broadcast(jump), cur("resolved_id") === col("j_old"), "left")
+          .select(col("old_id"),
+            coalesce(col("j_new"), col("resolved_id")).as("resolved_id"),
+            col("j_new").isNotNull.as("jumped")),
+          next => next.agg(coalesce(max(col("jumped")), lit(false))).head().getBoolean(0))
+      }.drop("jumped")
     }
   }
 

@@ -55,15 +55,9 @@ object Bpe {
     */
   val EndOfWord = "_"
 
-  /** The house token stream: lowercase `[a-z0-9]+` runs (same
-    * tokenizer as [[TextStats.bigramSurprisal]] / vocab coverage).
-    */
-  private def tokens(textCol: Column): Column =
-    regexp_extract_all(lower(textCol), lit("[a-z0-9]+"), lit(0))
-
   /** (w, cnt) over `docs` — the one corpus-sized pass. */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(tokens(col(textCol))).as("w"))
+    docs.select(explode(TextStats.words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   /** Initial symbol string of a word: characters + [[EndOfWord]],
@@ -162,12 +156,15 @@ object Bpe {
     * occurrence), pieces in reading order within each word. Scan-pure —
     * tokenize, init symbols, fold the merge chain, split: a single
     * projection pipeline with zero exchanges, the shape that encodes a
-    * 100 TB corpus at scan speed.
+    * 100 TB corpus at scan speed. Streamable unchanged (the frozen merge
+    * table is baked into the plan); the StreamingOpsSpec case
+    * "encodeBpeStream == batch Bpe.encode under a frozen merge table"
+    * pins stream == batch.
     */
   def encode(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[Merge]): DataFrame =
     docs
-      .select(col(idCol), explode(tokens(col(textCol))).as("w"))
+      .select(col(idCol), explode(TextStats.words(col(textCol))).as("w"))
       .select(col(idCol),
         explode(split(trim(applyMerges(symInit(col("w")), merges)), "  ")).as("piece"))
 
@@ -472,7 +469,7 @@ object Bpe {
   def pieceDim(docs: DataFrame, textCol: String, merges: Seq[Merge]): DataFrame = {
     val table = merges
     val applyUdf = udf((w: String) => applyMergesLocal(w, table))
-    docs.select(explode(tokens(col(textCol))).as("w"))
+    docs.select(explode(TextStats.words(col(textCol))).as("w"))
       .distinct()
       .select(col("w"), applyUdf(col("w")).as("pieces"))
   }
@@ -510,7 +507,7 @@ object Bpe {
       merges: Seq[Merge], dim: DataFrame): DataFrame = {
     val table = merges
     val applyUdf = udf((w: String) => applyMergesLocal(w, table))
-    docs.select(col(idCol), explode(tokens(col(textCol))).as("w"))
+    docs.select(col(idCol), explode(TextStats.words(col(textCol))).as("w"))
       .join(dim.select(col("w"), col("pieces")), Seq("w"), "left")
       .select(col(idCol),
         explode(coalesce(col("pieces"), applyUdf(col("w")))).as("piece"))
@@ -530,10 +527,10 @@ object Bpe {
       merges: Seq[Merge]): DataFrame = {
     val table = merges
     val applyUdf = udf((w: String) => applyMergesLocal(w, table))
-    val vocab = docs.select(explode(tokens(col(textCol))).as("w"))
+    val vocab = docs.select(explode(TextStats.words(col(textCol))).as("w"))
       .distinct()
       .select(col("w"), applyUdf(col("w")).as("pieces"))
-    docs.select(col(idCol), explode(tokens(col(textCol))).as("w"))
+    docs.select(col(idCol), explode(TextStats.words(col(textCol))).as("w"))
       .join(vocab, "w")
       .select(col(idCol), explode(col("pieces")).as("piece"))
   }
@@ -574,10 +571,10 @@ object Bpe {
       merges: Seq[Merge]): DataFrame = {
     val table = merges
     val npUdf = udf((w: String) => applyMergesLocal(w, table).length)
-    val vocab = docs.select(explode(tokens(col(textCol))).as("w"))
+    val vocab = docs.select(explode(TextStats.words(col(textCol))).as("w"))
       .distinct()
       .select(col("w"), npUdf(col("w")).as("np"))
-    docs.select(col(idCol), explode(tokens(col(textCol))).as("w"))
+    docs.select(col(idCol), explode(TextStats.words(col(textCol))).as("w"))
       .join(vocab, "w")
       .groupBy(col(idCol)).agg(sum("np").cast("long").as("n_tokens"))
   }
@@ -595,10 +592,10 @@ object Bpe {
       merges: Seq[Merge]): DataFrame = {
     val table = merges
     val npUdf = udf((w: String) => applyMergesLocal(w, table).length)
-    val vocab = docs.select(explode(tokens(col(textCol))).as("w"))
+    val vocab = docs.select(explode(TextStats.words(col(textCol))).as("w"))
       .distinct()
       .select(col("w"), npUdf(col("w")).as("np"))
-    docs.select(col(domainCol).as("domain"), explode(tokens(col(textCol))).as("w"))
+    docs.select(col(domainCol).as("domain"), explode(TextStats.words(col(textCol))).as("w"))
       .join(vocab, "w")
       .groupBy("domain")
       .agg(count(lit(1)).as("n_words"), sum("np").cast("long").as("n_pieces"))
@@ -623,7 +620,7 @@ object Bpe {
       merges: Seq[Merge]): DataFrame = {
     val table = merges
     val applyUdf = udf((w: String) => applyMergesLocal(w, table))
-    docs.select(explode(tokens(col(textCol))).as("w"))
+    docs.select(explode(TextStats.words(col(textCol))).as("w"))
       .distinct()
       .select(col("w"), applyUdf(col("w")).as("pieces"))
   }
@@ -632,7 +629,7 @@ object Bpe {
       textCol: String, vocab: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val words = docs.select(col(idCol),
-      posexplode(tokens(col(textCol))).as(Seq("wi", "w")))
+      posexplode(TextStats.words(col(textCol))).as(Seq("wi", "w")))
     val prior = Window.partitionBy(col(idCol)).orderBy(col("wi"))
       .rowsBetween(Window.unboundedPreceding, -1)
     words.join(vocab, "w")

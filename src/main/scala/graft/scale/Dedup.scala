@@ -67,7 +67,7 @@ object Dedup {
     * codegen'd per-document loop (see [[graft.functions.WordShingles]]).
     */
   def shingles(text: Column, n: Int): Column =
-    graft.functions.WordShingles(split(trim(text), "\\s+"), n)
+    graft.functions.WordShingles(TextStats.spaceTokens(text), n)
 
   /** Per-band member lists under a hard bucket cap — the LSH skew
     * guard. Buckets that exceed `maxBucket` members (degenerate or
@@ -719,7 +719,7 @@ object Dedup {
       spanTokens: Int = 8,
       minDocs: Int = 2): DataFrame = {
     val spans = docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("t"))
+      .select(col(idCol), TextStats.spaceTokens(col(textCol)).as("t"))
       .select(col(idCol), explode(expr(
         s"case when size(t) >= $spanTokens then " +
           s"transform(sequence(0, size(t) - $spanTokens), " +
@@ -768,7 +768,7 @@ object Dedup {
       spanTokens: Int = 8,
       minDocs: Int = 2): DataFrame = {
     val spans = docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("t"))
+      .select(col(idCol), TextStats.spaceTokens(col(textCol)).as("t"))
       .select(col(idCol), explode(expr(
         s"case when size(t) >= $spanTokens then " +
           s"transform(sequence(0, size(t) - $spanTokens), " +
@@ -785,7 +785,7 @@ object Dedup {
       .groupBy(idCol)
       .agg(collect_list(col("i")).as("starts"))
     docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("t"))
+      .select(col(idCol), TextStats.spaceTokens(col(textCol)).as("t"))
       .join(dupStarts, Seq(idCol), "left")
       .withColumn("starts", coalesce(col("starts"), array().cast("array<int>")))
       .withColumn("kept", expr(

@@ -363,33 +363,6 @@ object Dialogue {
         valid.join(contamDlgs, Seq(keyCol, "session_seq"), "left_anti")))
   }
 
-  /** PREFERENCE-PAIR ASSEMBLY — the DPO/RLHF data shape: from a graded
-    * response log (one row per candidate response: prompt key,
-    * candidate id, content, preference signal), build one (chosen,
-    * rejected) pair per prompt. Chosen is the candidate maximizing
-    * (signal, id) lexicographically, rejected the one minimizing it —
-    * the id tiebreak makes the pair a pure function of the log (max
-    * signal ties resolve to the LARGEST id, min ties to the SMALLEST).
-    * A pair exists only when chosen's signal STRICTLY exceeds
-    * rejected's: a prompt whose candidates all share one signal carries
-    * no preference evidence, and a single-candidate prompt has nothing
-    * to contrast — both emit no row rather than a degenerate pair.
-    * Null-signal candidates are excluded up front (no signal = no
-    * evidence), so they can neither win nor lose a pair.
-    *
-    * Best-vs-worst (not all-pairs) is the assembly policy: it is the
-    * highest-margin pair per prompt, the standard DPO reduction, and
-    * the only one whose cost is one hash agg with O(1) per-group state
-    * (struct min/max — no collect_list of the candidate set, so a
-    * viral prompt with millions of graded candidates costs the same
-    * state as one with three). All-pairs would be |candidates|² rows
-    * per prompt — the all-pairs shape this library bans everywhere.
-    *
-    * @return (promptCol, n_candidates, chosen_id, chosen_signal,
-    *         chosen_content, rejected_id, rejected_signal,
-    *         rejected_content, margin) — margin = chosen − rejected
-    *         signal
-    */
   /** The shared fail-loud signal gate of the preference/feedback
     * family: drop null signals (no signal = no evidence), and for
     * FLOATING signal columns refuse NaN loud BEFORE any consumer —
@@ -419,6 +392,40 @@ object Dialogue {
         lit(0).cast(sigType)) + col(signalCol))
   }
 
+  /** PREFERENCE-PAIR ASSEMBLY — the DPO/RLHF data shape: from a graded
+    * response log (one row per candidate response: prompt key,
+    * candidate id, content, preference signal), build one (chosen,
+    * rejected) pair per prompt. Chosen is the candidate maximizing
+    * (signal, id) lexicographically, rejected the one minimizing it —
+    * the id tiebreak makes the pair a pure function of the log (max
+    * signal ties resolve to the LARGEST id, min ties to the SMALLEST).
+    * A pair exists only when chosen's signal STRICTLY exceeds
+    * rejected's: a prompt whose candidates all share one signal carries
+    * no preference evidence, and a single-candidate prompt has nothing
+    * to contrast — both emit no row rather than a degenerate pair.
+    * Null-signal candidates are excluded up front (no signal = no
+    * evidence), so they can neither win nor lose a pair.
+    *
+    * Best-vs-worst (not all-pairs) is the assembly policy: it is the
+    * highest-margin pair per prompt, the standard DPO reduction, and
+    * the only one whose cost is one hash agg with O(1) per-group state
+    * (struct min/max — no collect_list of the candidate set, so a
+    * viral prompt with millions of graded candidates costs the same
+    * state as one with three). All-pairs would be |candidates|² rows
+    * per prompt — the all-pairs shape this library bans everywhere.
+    *
+    * Streamable unchanged in complete mode: per-prompt state is the two
+    * running struct candidates and a count, though content-sized and
+    * growing with prompt cardinality (the evicting form is
+    * `StreamingOps.preferencePairsFinalStream`). The StreamingOpsSpec
+    * case "preferencePairsStream == batch preferencePairs at every
+    * micro-batch prefix" pins stream == batch.
+    *
+    * @return (promptCol, n_candidates, chosen_id, chosen_signal,
+    *         chosen_content, rejected_id, rejected_signal,
+    *         rejected_content, margin) — margin = chosen − rejected
+    *         signal
+    */
   def preferencePairs(
       responses: DataFrame,
       promptCol: String,
@@ -927,12 +934,8 @@ object Dialogue {
       threshold: Double): DataFrame = {
     val base = signalGated(responses, signalCol, "binaryFeedback",
       "it would silently label undesirable")
-    val labeled = base.withColumn("desirable", col(signalCol) >= lit(threshold))
-    val stats = labeled.groupBy(col(promptCol))
-      .agg(
-        sum(when(col("desirable"), 1L).otherwise(0L)).as("n_desirable"),
-        sum(when(!col("desirable"), 1L).otherwise(0L)).as("n_undesirable"))
-    labeled.join(stats, Seq(promptCol))
+    base.withColumn("desirable", col(signalCol) >= lit(threshold))
+      .join(classCounts(base, promptCol, signalCol, threshold), Seq(promptCol))
       .withColumn("weight_milli",
         when(col("n_desirable") === 0L || col("n_undesirable") === 0L, 1000L)
           .otherwise(expr(
@@ -943,6 +946,41 @@ object Dialogue {
         col("desirable"), col("n_desirable"), col("n_undesirable"),
         col("weight_milli"))
   }
+
+  /** Per-prompt CLASS COUNTS of a binary-feedback log —
+    * [[binaryFeedback]]'s front half: per prompt the number of
+    * desirable (signal ≥ threshold) and undesirable candidates. Null
+    * signals are excluded and NaN fails loud, as in [[binaryFeedback]].
+    * One hash agg with two longs of per-prompt state, so it is
+    * streamable unchanged (complete mode) as a live feedback-balance
+    * monitor; the evicting form is
+    * `StreamingOps.feedbackClassCountsFinalStream`. The StreamingOpsSpec
+    * case "feedbackClassCountsStream: stream == batch class counts at
+    * every prefix; two-stage join == binaryFeedback" pins stream ==
+    * batch.
+    *
+    * @return (promptCol, n_desirable, n_undesirable)
+    */
+  def feedbackClassCounts(
+      responses: DataFrame,
+      promptCol: String,
+      signalCol: String,
+      threshold: Double): DataFrame =
+    classCounts(
+      signalGated(responses, signalCol, "feedbackClassCounts",
+        "it would silently count undesirable"),
+      promptCol, signalCol, threshold)
+
+  /** [[feedbackClassCounts]]' aggregation over already-gated rows. */
+  private def classCounts(
+      gated: DataFrame, promptCol: String, signalCol: String,
+      threshold: Double): DataFrame =
+    gated.groupBy(col(promptCol))
+      .agg(
+        sum(when(col(signalCol) >= lit(threshold), 1L).otherwise(0L))
+          .as("n_desirable"),
+        sum(when(col(signalCol) < lit(threshold), 1L).otherwise(0L))
+          .as("n_undesirable"))
 
   /** [[binaryFeedback]] with the q155 gates applied CANDIDATE-LEVEL —
     * the [[gatedGroupAdvantages]] law: unpaired feedback is
@@ -997,7 +1035,12 @@ object Dialogue {
     * and the long cast is guarded, so an overflowing trajectory fails
     * with a named error instead of a corrupted signal. Composition
     * law, spec-pinned: [[turnAdvantagesFromRewards]] ==
-    * [[turnAdvantages]] over pre-reduced signals.
+    * [[turnAdvantages]] over pre-reduced signals. Streamable unchanged
+    * in complete mode, as a live trajectory-signal reducer (the
+    * evicting form is `StreamingOps.trajectorySignalFinalStream`); the
+    * StreamingOpsSpec case "trajectorySignalStream == batch
+    * turnSignalReduce at every micro-batch prefix" pins stream ==
+    * batch.
     *
     * @return (groupCol, trajCol, signal_milli, n_reward_turns)
     */

@@ -1,6 +1,6 @@
 package graft.scale
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,11 +58,20 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  /** Lowercased alnum tokens — the [[TextStats.vocabCoverage]] tokenizer,
-    * shared so index and query agree on term identity.
+  /** The integer-BM25 saturation of one term, `tfsat_milli` over
+    * `rel_milli` (both as in the object scaladoc); the term's score is
+    * `idf_milli * tfsat_milli`. The one per-row kernel of [[searchTopK]]
+    * (postings `tf`, document length `dl`, corpus `avgdl`) and
+    * `StreamingOps.retrieveStream` (its token array's counts against
+    * frozen stats). The score product stays at the call sites so the
+    * batch aggregate keeps summing two projected columns.
     */
-  private def toks(c: org.apache.spark.sql.Column) =
-    regexp_extract_all(lower(c), lit("[a-z0-9]+"), lit(0))
+  def bm25TfSatMilli(tf: Column, dl: Column, avgdl: Column): Column = {
+    def div(a: Column, b: Column) = call_function("div", a, b)
+    val relMilli = div(lit(1000) * dl, avgdl)
+    val inner = lit(250) + div(lit(750) * relMilli, lit(1000))
+    div(tf * lit(2200000), tf * lit(1000) + div(lit(1200) * inner, lit(1000)))
+  }
 
   /** Top-k corpus docs per query. `queries` carries (queryIdCol,
     * queryTextCol); term multiplicity within a query is collapsed (each
@@ -102,7 +111,7 @@ object Retrieval {
 
     val postings = graft.ops.CacheScope.persisted(
       corpus
-        .select(col(idCol).as("doc_id"), explode(toks(col(textCol))).as("term"))
+        .select(col(idCol).as("doc_id"), explode(TextStats.words(col(textCol))).as("term"))
         .groupBy("doc_id", "term")
         .agg(count(lit(1)).as("tf")))
 
@@ -128,7 +137,8 @@ object Retrieval {
 
     val qterms = broadcast(
       queries
-        .select(col(queryIdCol).as("query_id"), explode(toks(col(queryTextCol))).as("term"))
+        .select(col(queryIdCol).as("query_id"),
+          explode(TextStats.words(col(queryTextCol))).as("term"))
         .distinct())
 
     val scored = postings
@@ -136,9 +146,7 @@ object Retrieval {
       .join(dfreqKept, "term") // un-hinted: AQE broadcasts while vocab fits
       .join(doclen, "doc_id")
       .crossJoin(broadcast(stats))
-      .withColumn("rel_milli", expr("(1000 * dl) div avgdl"))
-      .withColumn("tfsat_milli", expr(
-        "(tf * 2200000) div (tf * 1000 + (1200 * (250 + (750 * rel_milli) div 1000)) div 1000)"))
+      .withColumn("tfsat_milli", bm25TfSatMilli(col("tf"), col("dl"), col("avgdl")))
       .withColumn("idf_milli", expr("(1000 * (n_docs - df + 1)) div (df + 1)"))
       .groupBy("query_id", "doc_id")
 

@@ -154,8 +154,8 @@ object Sampling {
   }
 
   /** (id, b) one row per token OCCURRENCE, b = hashed feature bucket —
-    * the `[a-z0-9]+` lowercase stream (the corpus-wide tokenizer of
-    * [[TextStats.bigramSurprisal]] / [[Retrieval]]) hashed to
+    * the [[TextStats.words]] token array (the one
+    * `StreamingOps.dsirScoreStream` folds per row) hashed to
     * `buckets` via the md5 bucket (oracle form:
     * `('0x' || substr(md5(tok),1,8))::BIGINT % buckets`).
     */
@@ -165,8 +165,7 @@ object Sampling {
     docs
       .select(
         col(idCol).as("id"),
-        explode(regexp_extract_all(
-          lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"))
+        explode(TextStats.words(col(textCol))).as("tok"))
       .select(col("id"), TextStats.hashBucket(col("tok"), buckets).as("b"))
 
   /** The DSIR model as a SHIPPABLE artifact: one row per feature bucket
@@ -188,13 +187,8 @@ object Sampling {
       buckets: Int = 4096): DataFrame = {
     require(buckets > 0 && buckets <= (1 << 24), "buckets must fit the md5 bucket space")
     val spark = raw.sparkSession
-    def counts(df: DataFrame, name: String) =
-      df.select(explode(regexp_extract_all(
-          lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"))
-        .select(TextStats.hashBucket(col("tok"), buckets).as("b"))
-        .groupBy("b").agg(count(lit(1)).as(name))
-    val qc = counts(raw, "q")
-    val pc = counts(target, "p")
+    val qc = tokenBucketCounts(raw, textCol, buckets, "q")
+    val pc = tokenBucketCounts(target, textCol, buckets, "p")
     val k = qc.agg(sum("q").as("qtot")).crossJoin(pc.agg(sum("p").as("ptot")))
       .select((millilog2(coalesce(col("qtot"), lit(0L)) + buckets.toLong) -
         millilog2(coalesce(col("ptot"), lit(0L)) + buckets.toLong)).as("k"))
@@ -248,11 +242,7 @@ object Sampling {
     val qc = rocc.groupBy("b").agg(sum("cnt").as("q"))
     // target-side counts are id-free by construction — the target
     // corpus never needs an id column (its ids are never used)
-    val pc = target
-      .select(explode(regexp_extract_all(
-        lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"))
-      .select(TextStats.hashBucket(col("tok"), buckets).as("b"))
-      .groupBy("b").agg(count(lit(1)).as("p"))
+    val pc = tokenBucketCounts(target, textCol, buckets, "p")
     // per-bucket milli-log2 likelihood ratio of the +1-smoothed counts;
     // buckets absent from the raw side never get probed (q >= 1 for
     // every scored occurrence by construction), absent target buckets
@@ -308,19 +298,19 @@ object Sampling {
   }
 
   /** (b, `name`) per-feature-bucket token counts — the count frame
-    * BOTH drift halves build: the batch monitor's two eras here, and
-    * the live era via
-    * [[graft.streaming.StreamingOps.driftBucketCountsStream]] (the
-    * same expression over a streaming frame). One keyed agg over at
-    * most `buckets` groups.
+    * BOTH drift halves build (the batch monitor's two eras here) and
+    * both DSIR models' per-corpus counts. One keyed agg over at most
+    * `buckets` groups. Streamable unchanged as the live era's counts
+    * (complete mode, state bucket-sized); the StreamingOpsSpec case
+    * "driftBucketCountsStream + batch tail == the batch drift monitor
+    * at every prefix" pins stream == batch.
     */
   def tokenBucketCounts(
       docs: DataFrame, textCol: String, buckets: Int,
       name: String = "cnt"): DataFrame = {
     require(buckets > 0 && buckets <= (1 << 24), "buckets must fit the md5 bucket space")
     docs
-      .select(explode(regexp_extract_all(
-        lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"))
+      .select(explode(TextStats.words(col(textCol))).as("tok"))
       .select(TextStats.hashBucket(col("tok"), buckets).as("b"))
       .groupBy("b").agg(count(lit(1)).as(name))
   }

@@ -10,10 +10,25 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
+  /** The house token stream: lowercase `[a-z0-9]+` runs. One home for
+    * every operator that tokenizes this way (vocab coverage, bigram
+    * surprisal, retrieval, BPE, DSIR, drift), so index and query, model
+    * and serving, batch and stream agree on term identity.
+    */
+  def words(text: Column): Column =
+    regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
+
+  /** The whitespace token array: `text` trimmed of spaces and split on
+    * whitespace runs. A blank text, or one padded with tabs or
+    * newlines, leaves empty strings at the array's ends; the callers
+    * that count tokens drop them (`length > 0`).
+    */
+  def spaceTokens(text: Column): Column = split(trim(text), "\\s+")
+
   /** Whitespace token count. */
   def tokenCount(text: Column): Column =
     when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text), "\\s+")))
+      .otherwise(size(spaceTokens(text)))
 
   /** BPE-ish token estimate: word pieces + standalone punctuation. */
   def bpeIshTokenCount(text: Column): Column =
@@ -100,7 +115,7 @@ object TextStats {
     val tok = docs
       .select(
         col(idCol).as("id"),
-        explode(split(trim(col(textCol)), "\\s+")).as("t"))
+        explode(spaceTokens(col(textCol))).as("t"))
       .withColumn("h", md5(col("t").cast("binary")))
     val votes = (0 until 64).map { b =>
       val nib = expr(s"instr('0123456789abcdef', substr(h, ${b / 4 + 1}, 1)) - 1")
@@ -257,7 +272,7 @@ object TextStats {
     * (id). The only shuffled payload is (id, gram, partial count).
     */
   def repetitionSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = split(trim(col(textCol)), "\\s+")
+    val tok = spaceTokens(col(textCol))
     val base = docs.select(
       col(idCol),
       size(tok).as("n_tokens"),
@@ -312,7 +327,7 @@ object TextStats {
       lineTokens: Int = 10,
       minDocs: Int = 2): DataFrame = {
     val lines = docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("t"))
+      .select(col(idCol), spaceTokens(col(textCol)).as("t"))
       .select(col(idCol), explode(expr(
         s"transform(sequence(0L, (size(t) - 1) div $lineTokens), " +
           s"j -> md5(cast(array_join(slice(t, cast(j * $lineTokens + 1 as int), $lineTokens), ' ') as binary)))"))
@@ -538,7 +553,7 @@ object TextStats {
   private def ngramOccurrences(
       docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     docs
-      .select(col(idCol).as("id"), split(trim(col(textCol)), "\\s+").as("t"))
+      .select(col(idCol).as("id"), spaceTokens(col(textCol)).as("t"))
       .select(col("id"), explode(when(size(col("t")) >= n,
         expr(s"transform(sequence(0, size(t) - $n), " +
           s"i -> array_join(slice(t, i + 1, $n), ' '))"))
@@ -615,7 +630,7 @@ object TextStats {
         .select(
           col(idCol).as("id"),
           col(labelCol).cast("long").as("y"),
-          explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+          explode(spaceTokens(col(textCol))).as("tok"))
         .filter(length(col("tok")) > 0)
         .select(col("id"), col("y"), hashBucket(col("tok"), dim).as("j"))
         .groupBy(col("id"), col("y"), col("j"))
@@ -650,7 +665,9 @@ object TextStats {
     * unknown buckets score 0 (the left join's coalesce), so a model
     * trained on one corpus serves any other. The weight frame is
     * dim-bounded → broadcast; the corpus side is one explode + one
-    * hash-agg, no shuffle beyond the per-doc sum.
+    * hash-agg, no shuffle beyond the per-doc sum. The token array is
+    * [[spaceTokens]] with empty strings dropped, the one
+    * `StreamingOps.classifyStream` folds per row.
     */
   def scoreWithWeights(
       docs: DataFrame,
@@ -661,7 +678,7 @@ object TextStats {
     docs
       .select(
         col(idCol),
-        explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+        explode(spaceTokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) > 0)
       .select(col(idCol), hashBucket(col("tok"), dim).as("feature_id"))
       .join(broadcast(weights), Seq("feature_id"), "left")
@@ -700,7 +717,7 @@ object TextStats {
     // to [-500, 499]
     val weight = pmod(bucket * lit(2654435761L), lit(1000L)) - lit(500L)
     docs
-      .select(col(idCol), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+      .select(col(idCol), explode(spaceTokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) > 0)
       .select(col(idCol), weight.as("w"))
       .groupBy(idCol)
@@ -857,8 +874,7 @@ object TextStats {
       textCol: String,
       k: Int = 100): DataFrame = {
     val counts = docs
-      .select(explode(regexp_extract_all(
-        lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"))
+      .select(explode(words(col(textCol))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
     val total = counts.agg(sum("n").as("tot"))
     val w = org.apache.spark.sql.expressions.Window
@@ -908,20 +924,26 @@ object TextStats {
     scoreBigrams(bi, modelFromBigrams(bi), idCol)
   }
 
+  /** The adjacent pairs of a token array, in order: one
+    * struct(w1, w2) per bigram OCCURRENCE. The per-row kernel of
+    * [[bigramOccurrences]] and `StreamingOps.surprisalStream`; an array
+    * of fewer than 2 tokens has no bigrams (callers filter it first).
+    */
+  def bigrams(tokens: Column): Column =
+    zip_with(
+      slice(tokens, lit(1), size(tokens) - 1),
+      slice(tokens, lit(2), size(tokens) - 1),
+      (a, b) => struct(a.as("w1"), b.as("w2")))
+
   /** (id, w1, w2) one row per bigram OCCURRENCE; token-less and
     * single-token docs emit nothing.
     */
   private def bigramOccurrences(
       docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
-      .select(
-        col(idCol).as("id"),
-        regexp_extract_all(lower(col(textCol)), lit("[a-z0-9]+"), lit(0)).as("t"))
+      .select(col(idCol).as("id"), words(col(textCol)).as("t"))
       .filter(size(col("t")) >= 2)
-      .select(col("id"), explode(zip_with(
-        slice(col("t"), lit(1), size(col("t")) - 1),
-        slice(col("t"), lit(2), size(col("t")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
+      .select(col("id"), explode(bigrams(col("t"))).as("bg"))
       .select(col("id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
 
   private def modelFromBigrams(bi: DataFrame): DataFrame = {
@@ -957,7 +979,9 @@ object TextStats {
     * interpreted dispatch — 17.7 s → see BASELINE for the measured
     * century delta), explode. No shuffle anywhere (scan-pure like the
     * quality filters); output rows ≈ Σ ceil(len/stride), the chunk
-    * inventory itself.
+    * inventory itself. Streamable unchanged: per-row work needs no
+    * state, and the StreamingOpsSpec case "chunkStream == batch
+    * chunkByTokens on a replayed corpus" pins stream == batch.
     */
   def chunkByTokens(
       docs: DataFrame,
@@ -977,7 +1001,7 @@ object TextStats {
     docs
       .select(
         (col(idCol) +: carried) :+
-          filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0).as("t"): _*)
+          filter(spaceTokens(col(textCol)), t => length(t) > 0).as("t"): _*)
       .filter(size(col("t")) > 0)
       .select(
         (col(idCol) +: carried) :+

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import graft.scale.{Retrieval, TextStats}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -17,6 +18,16 @@ import scala.reflect.runtime.universe.TypeTag
   * same parquet layout turns any batch query here into a continuous
   * one; watermarks bound state so a 100 TB/day stream doesn't grow
   * executor state without bound.
+  *
+  * A batch operator that is per-row work or one Spark aggregate runs on
+  * a stream unchanged (`chunkByTokens`, `Bpe.encode`, `CmsSketch`,
+  * `preferencePairs`, `feedbackClassCounts`, `turnSignalReduce`,
+  * `tokenBucketCounts`; StreamingOpsSpec pins each stream == batch), so
+  * it has no twin here. The twins here need what a batch plan cannot
+  * give a stream: watermarked or keyed close state, or a per-row fold
+  * against a driver-collected model where the batch operator joins —
+  * and those folds build their rows from the batch operator's own
+  * Column kernel.
   */
 object StreamingOps {
 
@@ -267,7 +278,7 @@ object StreamingOps {
       textCol: String = "text",
       watermarkDelay: String = "10 minutes"): DataFrame =
     docs
-      .withColumn("fingerprint", graft.scale.TextStats.fingerprint(col(textCol)))
+      .withColumn("fingerprint", TextStats.fingerprint(col(textCol)))
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("fingerprint")
 
@@ -309,11 +320,14 @@ object StreamingOps {
     * start). STATELESS by the same argument as [[decontaminateStream]]:
     * a document arrives whole, its margin is a per-row fold of its own
     * tokens against the dim-bounded weight map (driver-sized by
-    * contract — `dim` ≤ 2^20 and in practice tiny) — no watermark, no
-    * state store, no shuffle. Integer weights keep the margin
-    * bit-identical to the batch operator (StreamingOpsSpec pins
-    * equality). Model refresh = restart the query with a new snapshot,
-    * the standard frozen-model serving contract.
+    * contract — `dim` ≤ 2^20 and in practice tiny; the batch operator
+    * broadcast-joins it instead) — no watermark, no state store, no
+    * shuffle. The token array is the batch operator's
+    * ([[graft.scale.TextStats.spaceTokens]], empty strings dropped),
+    * and integer weights keep the margin bit-identical to it
+    * (StreamingOpsSpec pins equality). Model refresh = restart the
+    * query with a new snapshot, the standard frozen-model serving
+    * contract.
     */
   def classifyStream(
       docs: DataFrame,
@@ -326,22 +340,15 @@ object StreamingOps {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val wMap = typedlit(w)
     docs
-      .select(
-        col(idCol),
-        filter(split(trim(col(textCol)), "\\s+"), t => length(t) > 0).as("toks"))
+      .select(col(idCol),
+        filter(TextStats.spaceTokens(col(textCol)), t => length(t) > 0).as("toks"))
       // token-less documents emit NO row, matching the batch operator
-      // exactly (scoreWithWeights' explode+filter leaves them rowless) —
-      // without this the stream==batch pin held only because the test
-      // corpus had no empty/whitespace-only texts
+      // exactly (scoreWithWeights' explode+filter leaves them rowless)
       .filter(size(col("toks")) > 0)
-      .select(
-        col(idCol),
-        aggregate(
-          col("toks"),
-          lit(0L),
-          (acc, t) => acc + coalesce(
-            element_at(wMap,
-              graft.scale.TextStats.hashBucket(t, dim)), lit(0L)))
+      .select(col(idCol),
+        aggregate(col("toks"), lit(0L),
+          (acc, t) =>
+            acc + coalesce(element_at(wMap, TextStats.hashBucket(t, dim)), lit(0L)))
           .as("margin"))
       .withColumn("label", (col("margin") > 0).cast("long"))
   }
@@ -349,15 +356,18 @@ object StreamingOps {
   /** Streaming LM-surprisal scoring — the continuous serving form of
     * `TextStats.surprisalWithModel` (an in-domain reference corpus
     * trains `TextStats.bigramModel` once; arriving documents score
-    * against the frozen snapshot). STATELESS by the
-    * [[classifyStream]] argument: a document arrives whole, its score
-    * is a per-row fold of its own bigrams against the collected model
-    * map (driver-sized by contract — a corpus-trained bigram model is
-    * vocabulary-bounded and Zipf-concentrated; cap it with a min-count
-    * floor upstream when it isn't). Bigrams absent from the model
-    * don't score and docs with no known bigram emit NO row — exactly
-    * the batch operator's inner-join semantics (StreamingOpsSpec pins
-    * stream == batch). Integer sums keep the margin bit-identical.
+    * against the frozen snapshot). STATELESS by the [[classifyStream]]
+    * argument: a document arrives whole, its score is a per-row fold of
+    * its own bigrams (the batch operator's
+    * [[graft.scale.TextStats.bigrams]] kernel over the
+    * [[graft.scale.TextStats.words]] array) against the collected model
+    * map, where the batch operator joins (driver-sized by contract — a
+    * corpus-trained bigram model is vocabulary-bounded and
+    * Zipf-concentrated; cap it with a min-count floor upstream when it
+    * isn't). Bigrams absent from the model don't score and docs with no
+    * known bigram emit NO row — exactly the batch operator's inner-join
+    * semantics (StreamingOpsSpec pins stream == batch). Integer sums
+    * keep the margin bit-identical.
     */
   def surprisalStream(
       docs: DataFrame,
@@ -370,17 +380,12 @@ object StreamingOps {
       .toMap
     val mMap = typedlit(m)
     docs
-      .select(
-        col(idCol),
-        regexp_extract_all(lower(col(textCol)), lit("[a-z0-9]+"), lit(0)).as("t"))
+      .select(col(idCol), TextStats.words(col(textCol)).as("t"))
       .filter(size(col("t")) >= 2)
-      .select(
-        col(idCol),
+      .select(col(idCol),
         filter(
-          zip_with(
-            slice(col("t"), lit(1), size(col("t")) - 1),
-            slice(col("t"), lit(2), size(col("t")) - 1),
-            (a, b) => concat(a, lit("\u0000"), b)),
+          transform(TextStats.bigrams(col("t")),
+            bg => concat(bg("w1"), lit("\u0000"), bg("w2"))),
           k => element_at(mMap, k).isNotNull).as("known"))
       .filter(size(col("known")) > 0)
       .select(
@@ -396,8 +401,9 @@ object StreamingOps {
     * "tell me when a document matching this benchmark prompt
     * arrives"). A static index snapshot supplies the per-(query, term)
     * integer idf weights and the corpus `avgdl`; each arriving
-    * document is scored per-row with the SAME integer-milli BM25
-    * surrogate — tf from its own token array, saturation from its own
+    * document is scored per-row with the batch operator's integer-milli
+    * BM25 kernel ([[graft.scale.Retrieval.bm25TfSatMilli]]) — tf from its
+    * own [[graft.scale.TextStats.words]] array, saturation from its own
     * length — so the operator is STATELESS: no watermark, no state
     * store, no shuffle, and the scores equal the batch operator's
     * under the same frozen stats (StreamingOpsSpec pins equality).
@@ -416,22 +422,14 @@ object StreamingOps {
       avgdl: Long): DataFrame = {
     require(avgdl >= 1, s"avgdl must be >= 1, got $avgdl")
     require(queryTermWeights.nonEmpty, "standing query set is empty")
-    // truncating div for NONNEGATIVE longs via exact double math:
-    // (a - a%b) is an exact multiple of b and far below 2^53 here
-    def idiv(a: Column, b: Column): Column = ((a - pmod(a, b)) / b).cast("long")
     val withToks = docs
-      .withColumn("toks",
-        regexp_extract_all(lower(col(textCol)), lit("[a-z0-9]+"), lit(0)))
+      .withColumn("toks", TextStats.words(col(textCol)))
       .withColumn("dl", size(col("toks")).cast("long"))
-      .withColumn("rel_milli", idiv(lit(1000L) * col("dl"), lit(avgdl)))
     val hits = queryTermWeights.groupBy(_._1).toSeq.sortBy(_._1).map {
       case (qid, ws) =>
         val (scores, tfs) = ws.sortBy(_._2).map { case (_, term, idfMilli) =>
           val tf = size(filter(col("toks"), x => x === lit(term))).cast("long")
-          val inner = lit(250L) + idiv(lit(750L) * col("rel_milli"), lit(1000L))
-          val tfsat = idiv(tf * lit(2200000L),
-            tf * lit(1000L) + idiv(lit(1200L) * inner, lit(1000L)))
-          (lit(idfMilli) * tfsat, tf)
+          (lit(idfMilli) * Retrieval.bm25TfSatMilli(tf, col("dl"), lit(avgdl)), tf)
         }.unzip
         struct(
           lit(qid).as("query_id"),
@@ -480,102 +478,6 @@ object StreamingOps {
         col(leftIdCol) +: col(keyCol) +: col(tsCol) +:
           payloadCols.map(c => col("m").getField(c).as(s"asof_$c")): _*)
   }
-
-  /** Streaming pretraining chunking — split an arriving document
-    * stream into fixed token windows ([[graft.scale.TextStats.chunkByTokens]]'s
-    * exact semantics and columns). STATELESS like
-    * [[decontaminateStream]]: a document arrives whole and its chunks
-    * are a per-row explode of its own token stream — no watermark, no
-    * state store, works in append mode — so the batch operator's plan
-    * IS the streaming plan (scan-pure per-row work; the
-    * [[graft.functions.ChunkWindows]] codegen kernel runs unchanged).
-    * StreamingOpsSpec pins stream == batch on a replayed corpus.
-    */
-  def chunkStream(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      window: Int,
-      stride: Int): DataFrame =
-    graft.scale.TextStats.chunkByTokens(docs, idCol, textCol, window, stride)
-
-  /** Streaming BPE encoding — tokenize an arriving document stream
-    * with a FROZEN trained merge table ([[graft.scale.Bpe.encode]]'s
-    * exact semantics and columns). The merge table is the driver-sized
-    * frozen model ([[classifyStream]]'s contract — trained offline by
-    * [[graft.scale.Bpe.trainMerges]], baked into the plan as a chain of
-    * literal `replace`s), so the operator is STATELESS per-row
-    * projection work: no watermark, no state store, no shuffle, append
-    * mode — the batch plan IS the streaming plan, and every micro-batch
-    * encodes at scan speed. StreamingOpsSpec pins stream == batch on a
-    * replayed corpus split across micro-batch boundaries.
-    */
-  def encodeBpeStream(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      merges: Seq[graft.scale.Bpe.Merge]): DataFrame =
-    graft.scale.Bpe.encode(docs, idCol, textCol, merges)
-
-  /** Streaming count-min sketch — the [[graft.functions.CmsSketch]]
-    * aggregate run as a continuous global aggregation (complete mode):
-    * each micro-batch folds into the same fixed d×w counter buffer via
-    * the aggregate's element-wise merge, so the sketch after any prefix
-    * of the stream equals the batch sketch of the same rows
-    * (StreamingOpsSpec pins this across micro-batch boundaries). State
-    * is the one serialized buffer — constant regardless of stream
-    * length, the whole point of sketching a stream.
-    */
-  def cmsSketchStream(
-      values: DataFrame,
-      valueCol: String,
-      depth: Int = 4,
-      width: Int = 256): DataFrame =
-    values.agg(graft.functions.CmsSketch(col(valueCol), depth, width).as("sketch"))
-
-  /** Streaming PREFERENCE-PAIR assembly — the continuous twin of
-    * [[graft.scale.Dialogue.preferencePairs]] over a live graded
-    * response log: each trigger re-emits the current best-vs-worst
-    * (chosen, rejected) pair per prompt as of everything seen
-    * (complete mode). The batch op is ONE hash agg with O(1) per-group
-    * state (struct min/max — no candidate list), which is exactly what
-    * makes it streamable unchanged: the state store holds per prompt
-    * only the running (signal, id)-max and -min candidates plus a
-    * count, regardless of stream length — the [[cmsSketchStream]]
-    * bounded-state discipline. A viral prompt with millions of graded
-    * candidates costs the same state as one with three. Two costs are
-    * NOT O(1) and callers must size for them: (1) the min/max structs
-    * carry the candidates' full CONTENT strings, so per-prompt state is
-    * content-sized (two responses' text), and total state grows with
-    * PROMPT CARDINALITY — an unbounded prompt keyspace grows the state
-    * store without bound (no watermark evicts complete-mode agg state);
-    * (2) complete mode re-emits the ENTIRE pair frame every trigger, so
-    * sink write cost per trigger is pair-count-sized, not delta-sized.
-    * This complete-mode form fits bounded prompt keyspaces (a grading
-    * campaign, an eval set) where the CURRENT pair of every prompt is
-    * the product; for an open-ended prompt firehose use
-    * [[preferencePairsFinalStream]], which holds state only for active
-    * prompts and emits each prompt's FINAL pair once on quiescence
-    * (append mode, delta-sized writes). Strict-margin
-    * and null-exclusion laws carry over verbatim; stream == batch at
-    * every micro-batch prefix is spec-pinned. Pair-level GATING stays
-    * batch-side on the polled sink ([[graft.scale.Dialogue.gatedPreferencePairs]]'s
-    * decontaminate + validity probes need joins against the pair
-    * frame's own derivation — a second aggregation over the streaming
-    * agg's output, which Structured Streaming does not allow in one
-    * query).
-    *
-    * @return streaming [[graft.scale.Dialogue.preferencePairs]] frame,
-    *         complete-mode
-    */
-  def preferencePairsStream(
-      responses: DataFrame,
-      promptCol: String,
-      candCol: String,
-      contentCol: String,
-      signalCol: String): DataFrame =
-    graft.scale.Dialogue.preferencePairs(
-      responses, promptCol, candCol, contentCol, signalCol)
 
   /** One graded response with its event time — the typed row
     * [[preferencePairsFinalStream]]'s state machine consumes. candId
@@ -636,8 +538,9 @@ object StreamingOps {
   }
 
   /** The EVICTING preference-pair assembler — the unbounded-keyspace
-    * answer [[preferencePairsStream]] cannot give, on the
-    * [[closeOnSilence]] kernel with horizon `quiesceMs`: a prompt's
+    * answer the live complete-mode form (the batch
+    * [[graft.scale.Dialogue.preferencePairs]] run on a stream) cannot
+    * give, on the [[closeOnSilence]] kernel with horizon `quiesceMs`: a prompt's
     * state lives only while the prompt is ACTIVE, its final
     * best-vs-worst pair is emitted ONCE at close (append mode,
     * delta-sized sink writes), and a row after the close reopens the
@@ -708,44 +611,6 @@ object StreamingOps {
       .toDF()
   }
 
-  /** The LIVE feedback-balance monitor — running per-prompt CLASS
-    * COUNTS of a binary-feedback stream (the
-    * [[graft.scale.Dialogue.binaryFeedback]] front half as a continuous
-    * aggregation, complete mode): per prompt the running count of
-    * desirable (signal ≥ threshold) and undesirable candidates. Unlike
-    * [[preferencePairsStream]]'s content-carrying min/max state, the
-    * per-prompt state here is TWO LONGS — O(1) and slim, the cleanest
-    * bounded-state story in the preference family (total state grows
-    * with prompt cardinality in this complete-mode form — the LIVE
-    * monitor's trade; [[feedbackClassCountsFinalStream]] is the
-    * evicting form for an unbounded prompt firehose). The
-    * per-candidate labels and balance weights stay batch-side on the
-    * polled sink (the weight needs a counts⋈labels join — a second
-    * stage over the streaming agg, the [[preferencePairsStream]]
-    * two-stage recipe; spec pins the composition == the batch
-    * [[graft.scale.Dialogue.binaryFeedback]] frame). Null signals are
-    * excluded and NaN fails loud exactly as in the batch op (an
-    * unguarded NaN compares false and silently lands undesirable).
-    *
-    * @return streaming (promptCol, n_desirable, n_undesirable),
-    *         complete-mode
-    */
-  def feedbackClassCountsStream(
-      responses: DataFrame,
-      promptCol: String,
-      signalCol: String,
-      threshold: Double): DataFrame = {
-    val base = graft.scale.Dialogue.signalGated(
-      responses, signalCol, "feedbackClassCountsStream",
-      "it would silently count undesirable")
-    base.groupBy(col(promptCol))
-      .agg(
-        sum(when(col(signalCol) >= lit(threshold), 1L).otherwise(0L))
-          .as("n_desirable"),
-        sum(when(col(signalCol) < lit(threshold), 1L).otherwise(0L))
-          .as("n_undesirable"))
-  }
-
   /** One graded response with its event time — the typed row the
     * feedback eviction machine consumes.
     */
@@ -758,9 +623,10 @@ object StreamingOps {
   final case class FinalCounts(prompt: String, n_desirable: Long,
       n_undesirable: Long)
 
-  /** The EVICTING feedback-balance monitor —
-    * [[feedbackClassCountsStream]]'s unbounded-keyspace answer on the
-    * [[closeOnSilence]] kernel with horizon `quiesceMs`: a prompt's two
+  /** The EVICTING feedback-balance monitor — the unbounded-keyspace
+    * answer of the live complete-mode form (the batch
+    * [[graft.scale.Dialogue.feedbackClassCounts]] run on a stream), on
+    * the [[closeOnSilence]] kernel with horizon `quiesceMs`: a prompt's two
     * counter longs live only while the prompt is ACTIVE, and its final
     * (n_desirable, n_undesirable) row emits ONCE at close. The closed
     * row equals the complete-mode aggregation over exactly the rows
@@ -799,32 +665,6 @@ object StreamingOps {
       .toDF()
   }
 
-  /** The LIVE trajectory-signal reducer —
-    * [[graft.scale.Dialogue.turnSignalReduce]] as a continuous
-    * aggregation (complete mode): per (group, trajectory) the running
-    * quantize-then-sum milli signal and reward-turn count over an
-    * arriving per-turn reward stream — the PRM front half kept current
-    * while grading runs. The batch op is ONE hash agg with O(1)
-    * per-trajectory state (a decimal sum + a long count), which is
-    * exactly what makes it streamable unchanged; the quantize-FIRST
-    * law matters doubly here (a floating running sum would also drift
-    * with arrival order). NaN fails loud and the overflow guard rides
-    * the output exactly as in batch. Total state grows with trajectory
-    * cardinality (complete mode) — the LIVE monitor's trade;
-    * [[trajectorySignalFinalStream]] is the evicting form for an
-    * unbounded trajectory firehose. Stream == batch at every
-    * micro-batch prefix, spec-pinned.
-    *
-    * @return streaming (groupCol, trajCol, signal_milli,
-    *         n_reward_turns), complete-mode
-    */
-  def trajectorySignalStream(
-      turnRewards: DataFrame,
-      groupCol: String,
-      trajCol: String,
-      rewardCol: String): DataFrame =
-    graft.scale.Dialogue.turnSignalReduce(turnRewards, groupCol, trajCol, rewardCol)
-
   /** One quantized per-turn reward with its event time — the typed row
     * the trajectory eviction machine consumes (the reward is ALREADY
     * milli-quantized in-plan: quantize-FIRST is the batch law, and the
@@ -847,8 +687,9 @@ object StreamingOps {
   final case class FinalSignal(grp: String, traj: Long,
       signal_milli: Long, n_reward_turns: Long)
 
-  /** The EVICTING trajectory-signal reducer —
-    * [[trajectorySignalStream]]'s unbounded-keyspace answer on the
+  /** The EVICTING trajectory-signal reducer — the unbounded-keyspace
+    * answer of the live complete-mode form (the batch
+    * [[graft.scale.Dialogue.turnSignalReduce]] run on a stream), on the
     * [[closeOnSilence]] kernel with horizon `quiesceMs`: a (group,
     * trajectory)'s (sum, count) state is held only while the trajectory
     * is ACTIVE, and its final [[graft.scale.Dialogue.turnSignalReduce]]
@@ -923,31 +764,6 @@ object StreamingOps {
       .toDF()
   }
 
-  /** The LIVE half of the drift monitor: running per-feature-bucket
-    * token counts over the arriving target-era stream — the exact
-    * count frame [[graft.scale.Sampling.domainDriftContributors]]
-    * builds for a batch corpus, kept current in complete mode (one
-    * keyed aggregation over at most `buckets` groups: state is
-    * bucket-sized regardless of stream length, the cmsSketchStream
-    * discipline — PER ERA; a firehose of ROLLING snapshots accretes a
-    * bucket set per snapshot forever, which is
-    * [[driftBucketCountsFinalStream]]'s evicting territory). The drift
-    * TAIL runs batch-side on the polled sink —
-    * `Sampling.driftFromBucketCounts(sink, refCounts, smooth)` against
-    * the FROZEN reference-era counts — because the tail needs a second
-    * global aggregation over the streaming agg's output, which
-    * Structured Streaming does not allow in one query; the spec pins
-    * the composition equal to the batch monitor after every
-    * micro-batch.
-    *
-    * @return streaming (b, p_cnt), complete-mode
-    */
-  def driftBucketCountsStream(
-      docs: DataFrame,
-      textCol: String,
-      buckets: Int = 4096): DataFrame =
-    graft.scale.Sampling.tokenBucketCounts(docs, textCol, buckets, "p_cnt")
-
   /** One (snapshot, bucket) token observation with its event time —
     * the typed row the drift eviction machine consumes (the bucket is
     * ALREADY hashed in-plan: the state machine folds counts only).
@@ -956,8 +772,10 @@ object StreamingOps {
 
   final case class FinalBucketCount(snap: String, b: Long, p_cnt: Long)
 
-  /** The EVICTING drift-count monitor — [[driftBucketCountsStream]]'s
-    * rolling-snapshot answer on the [[closeOnSilence]] kernel with
+  /** The EVICTING drift-count monitor — the rolling-snapshot answer of
+    * the live complete-mode form (the batch
+    * [[graft.scale.Sampling.tokenBucketCounts]] run on a stream), on the
+    * [[closeOnSilence]] kernel with
     * horizon `quiesceMs`: the stream carries a SNAPSHOT column (the era
     * / ingest batch / crawl slice under measurement), each ACTIVE
     * (snapshot, bucket) key holds one count, and its final
@@ -989,11 +807,10 @@ object StreamingOps {
     import spark.implicits._
     val typed = docs
       .select(col(snapshotCol).cast("string").as("snap"),
-        explode(regexp_extract_all(
-          lower(col(textCol)), lit("[a-z0-9]+"), lit(0))).as("tok"),
+        explode(TextStats.words(col(textCol))).as("tok"),
         col(tsCol).as("ts"))
       .select(col("snap"),
-        graft.scale.TextStats.hashBucket(col("tok"), buckets).as("b"),
+        TextStats.hashBucket(col("tok"), buckets).as("b"),
         col("ts"))
       .as[BucketEvent]
     // the state is the key's running token count
@@ -1110,8 +927,10 @@ object StreamingOps {
     * llr per feature bucket, smoothing constant folded in, DENSE over
     * the bucket domain so even never-trained buckets score at the
     * smoothed floor) collects to a driver map (`buckets` entries by
-    * contract — 4096-ary default, ≤ 2²⁴ hard cap) and each arriving
-    * document scores as a per-row fold of its own hashed tokens.
+    * contract — 4096-ary default, ≤ 2²⁴ hard cap; the batch operator
+    * joins instead) and each arriving document scores as a per-row fold
+    * of its own hashed tokens, the batch operator's
+    * [[graft.scale.TextStats.words]] array.
     * STATELESS: no watermark, no state store, no shuffle; token-less
     * docs emit NO row and scores are bit-identical to the batch
     * operator's on the training corpus (StreamingOpsSpec pins both).
@@ -1132,9 +951,7 @@ object StreamingOps {
       s"dense DSIR model must cover all $buckets buckets, got ${m.size}")
     val mMap = typedlit(m)
     docs
-      .select(
-        col(idCol),
-        regexp_extract_all(lower(col(textCol)), lit("[a-z0-9]+"), lit(0)).as("toks"))
+      .select(col(idCol), TextStats.words(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(
         col(idCol),
@@ -1142,8 +959,7 @@ object StreamingOps {
         aggregate(
           col("toks"),
           lit(0L),
-          (acc, t) => acc + element_at(mMap,
-            graft.scale.TextStats.hashBucket(t, buckets)))
+          (acc, t) => acc + element_at(mMap, TextStats.hashBucket(t, buckets)))
           .as("score_milli"))
   }
 }

@@ -383,7 +383,7 @@ class StreamingOpsSpec extends SparkSpec {
     val corpus = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.chunkStream(
+    val q = graft.scale.TextStats.chunkByTokens(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text", window = 32, stride = 16)
       .writeStream.format("memory").queryName("ch_eq").outputMode(OutputMode.Append()).start()
     try {
@@ -412,7 +412,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(merges.nonEmpty)
     val corpus = docsDf.select("doc_id", "text").as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)]
-    val q = StreamingOps.encodeBpeStream(
+    val q = Bpe.encode(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text", merges)
       .groupBy("doc_id", "piece").count()
       .writeStream.format("memory").queryName("bpe_eq")
@@ -518,8 +518,8 @@ class StreamingOpsSpec extends SparkSpec {
     // the FROZEN reference-era half, persisted once (the index contract)
     val refCounts = Sampling.tokenBucketCounts(ref, "text", 256, "q_cnt").persist()
     val input = MemoryStream[(Long, String)]
-    val q = driftBucketCountsStream(
-      input.toDF().toDF("doc_id", "text"), "text", buckets = 256)
+    val q = Sampling.tokenBucketCounts(
+      input.toDF().toDF("doc_id", "text"), "text", buckets = 256, "p_cnt")
       .writeStream.format("memory").queryName("drift_counts")
       .outputMode(OutputMode.Complete()).start()
     def driftRows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -663,11 +663,17 @@ class StreamingOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val toks = regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))
-    val queries = docs.filter(col("doc_id") % 7 === 0)
+    val corpus0 = spark.read.parquet(s"$dir/documents.parquet")
+    val toks = graft.scale.TextStats.words(col("text"))
+    val queries = corpus0.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id").as("query_id"),
         array_join(slice(toks, 1, 8), " ").as("qtext"))
+    // planted parity cases the corpus doesn't contain: token-less docs
+    // and a doc that matches no query term — the batch operator emits
+    // no row for any of them, and the stream must agree
+    val planted = Seq((9000001L, ""), (9000002L, " \t "),
+      (9000003L, "zzqx1 zzqx2 zzqx3")).toDF("doc_id", "text")
+    val docs = corpus0.select(col("doc_id"), col("text")).unionByName(planted)
 
     // freeze the index stats the way a snapshot would
     val postings = docs
@@ -704,6 +710,8 @@ class StreamingOpsSpec extends SparkSpec {
         .searchTopK(docs, queries, "doc_id", "text", "query_id", "qtext", k = 10000)
         .select("query_id", "doc_id", "score")
         .as[(Long, Long, Long)].collect().toSet
+      assert(!batch.exists(_._2 >= 9000001L),
+        "batch must drop token-less and no-match docs entirely")
       assert(streamed === batch,
         s"stream-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
     } finally q.stop()
@@ -730,7 +738,7 @@ class StreamingOpsSpec extends SparkSpec {
       (real.last._1, 9000002L, "null signal too", None: Option[Double]))
     assert(resp.count(_._4.isEmpty) === 2 && maxSig > 0.0)
     val input = MemoryStream[(String, Long, String, Option[Double])]
-    val q = StreamingOps.preferencePairsStream(
+    val q = graft.scale.Dialogue.preferencePairs(
         input.toDF().toDF("prompt", "event_id", "content", "value"),
         "prompt", "event_id", "content", "value")
       .writeStream.format("memory").queryName("pref_eq")
@@ -755,7 +763,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming gated preferences, the TWO-STAGE recipe: complete-mode assembly + batch gates on the polled sink == gatedPreferencePairs") {
-    // the recipe preferencePairsStream's scaladoc prescribes (gating
+    // the recipe for gating the live preferencePairs stream (gating
     // needs joins against the pair frame — a second aggregation over
     // the streaming agg, which one streaming query cannot express):
     // stage 1 assembles pairs continuously; stage 2 applies the
@@ -784,7 +792,7 @@ class StreamingOpsSpec extends SparkSpec {
       .select(col("event_id"))
     val rows = responses.as[(String, Long, String, Option[Double])].collect()
     val input = MemoryStream[(String, Long, String, Option[Double])]
-    val q = StreamingOps.preferencePairsStream(
+    val q = graft.scale.Dialogue.preferencePairs(
         input.toDF().toDF("prompt", "event_id", "content", "value"),
         "prompt", "event_id", "content", "value")
       .writeStream.format("memory").queryName("pref_gate")
@@ -826,7 +834,7 @@ class StreamingOpsSpec extends SparkSpec {
         col("value"))
     val rows = responses.as[(String, Long, String, Option[Double])].collect()
     val input = MemoryStream[(String, Long, String, Option[Double])]
-    val q = StreamingOps.feedbackClassCountsStream(
+    val q = graft.scale.Dialogue.feedbackClassCounts(
         input.toDF().toDF("prompt", "event_id", "content", "value"),
         "prompt", "value", threshold = 35.0)
       .writeStream.format("memory").queryName("fb_counts")
@@ -878,15 +886,16 @@ class StreamingOpsSpec extends SparkSpec {
         org.apache.spark.sql.functions.split(col("text"), " ")).as("tok"))
     val vals = toks.as[String].collect()
     val input = MemoryStream[String]
-    val q = StreamingOps.cmsSketchStream(input.toDF().toDF("tok"), "tok")
+    def sketch(df: DataFrame) =
+      df.agg(graft.functions.CmsSketch(col("tok"), 4, 256).as("sketch"))
+    val q = sketch(input.toDF().toDF("tok"))
       .writeStream.format("memory").queryName("cms_eq").outputMode(OutputMode.Complete()).start()
     try {
       val (b1, b2) = vals.splitAt(vals.length / 3)
       input.addData(b1.toSeq: _*); q.processAllAvailable()
       input.addData(b2.toSeq: _*); q.processAllAvailable()
       val streamed = spark.table("cms_eq").as[Seq[Long]].collect().head
-      val batch = StreamingOps.cmsSketchStream(toks, "tok")
-        .as[Seq[Long]].collect().head
+      val batch = sketch(toks).as[Seq[Long]].collect().head
       assert(streamed === batch)
       assert(streamed.sum === 4L * vals.length, "mass conservation across micro-batches")
     } finally q.stop()
@@ -903,7 +912,7 @@ class StreamingOpsSpec extends SparkSpec {
         col("value").as("reward"))
     val rows = rewards.as[(String, Long, Option[Double])].collect()
     val input = MemoryStream[(String, Long, Option[Double])]
-    val q = StreamingOps.trajectorySignalStream(
+    val q = graft.scale.Dialogue.turnSignalReduce(
         input.toDF().toDF("grp", "traj", "reward"),
         "grp", "traj", "reward")
       .writeStream.format("memory").queryName("traj_sig")
@@ -1083,7 +1092,7 @@ class StreamingOpsSpec extends SparkSpec {
       input.addData(("Z", Some(1.0), ts(120))); q.processAllAvailable()
       val closed = spark.table("fb_final")
       val streamed = rowSeqs(closed)
-      val want = rowSeqs(StreamingOps.feedbackClassCountsStream(
+      val want = rowSeqs(graft.scale.Dialogue.feedbackClassCounts(
         spark.createDataFrame(w1).toDF("prompt", "value", "ts").drop("ts"),
         "prompt", "value", 3.0))
       assert(streamed === want,
