@@ -23,6 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object AliasSync {
 
+  /** A stored alias left alone: neither matched nor deleted (step 3). */
+  val Keep = "keep"
+
   /** @param incoming rgd_id, value, rcv_acc (the record's primary RCV)
     * @param current  rgd_id, value, notes (the alias's RCV id, nullable)
     * @param rcvSets  rgd_id, rcv — one row per valid RCV of the record
@@ -64,7 +67,7 @@ object AliasSync {
     val unmatchedStore = candidates
       .join(incLv, Seq("rgd_id", "_lv"), "left_anti")
       .join(primary, Seq("rgd_id"), "left")
-      .withColumn("action", when(col("notes") <=> col("rcv_acc"), "delete").otherwise("keep"))
+      .withColumn("action", when(col("notes") <=> col("rcv_acc"), "delete").otherwise(Keep))
       .select("rgd_id", "value", "notes", "action")
 
     // 4) incoming with no CI match among in-scope stored aliases: insert

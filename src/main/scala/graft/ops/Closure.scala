@@ -106,13 +106,14 @@ object Closure {
             .select(cur("term"), col("h_anc").as("ancestor")))
         .distinct(),
         next => {
-          val m = next.count()
-          val grew = m != n
-          n = m
+          // one aggregate per round: its row count and reflexive pairs
+          val r = next.agg(count(lit(1)), count(when(col("term") === col("ancestor"), 1))).head()
+          val grew = r.getLong(0) != n
+          n = r.getLong(0)
           // a cycle closes onto itself: doubling CONVERGES (the closure
           // is finite) but leaves reflexive pairs — surface it like the
           // driver path's back-edge detection rather than returning them
-          if (!grew && next.filter(col("term") === col("ancestor")).limit(1).count() > 0)
+          if (!grew && r.getLong(1) > 0)
             throw new IllegalStateException("closure found a cycle in the DAG (reflexive pair)")
           grew
         })

@@ -4,6 +4,8 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.StructType
@@ -230,7 +232,7 @@ object SnapshotStore {
     *                    updates, AND deletes (a delete shrinks its
     *                    bucket, so the bucket must rewrite)
     * @param numBuckets  sized so one bucket ≈ one target output file
-    *                    (~1 GB at scale); changing it forces a one-time
+    *                    ([[bucketsFor]]); changing it forces a one-time
     *                    full rewrite (re-bucketing)
     */
   case class BucketedEntity(
@@ -259,6 +261,39 @@ object SnapshotStore {
     */
   def bucketCount(storeDir: String, entity: String): Option[Int] =
     readManifest(storeDir).get(bucketCountKey(entity)).map(_.toInt)
+
+  /** The size one bucket's file is sized to: ~1 GB. */
+  val TargetBucketBytes: Long = 1L << 30
+
+  /** The bucket count to publish `entity` with when its data measures
+    * `bytes`: the count it was last published with, until `bytes`
+    * outgrows that count's target 4×; else (a first bucketed publish, or
+    * outgrown) `bytes` / [[TargetBucketBytes]] rounded up to a power of
+    * two, at least 1. A changed count re-buckets the entity once (the
+    * full rewrite of [[publishBucketed]]); the 4× slack keeps a growing
+    * entity from re-bucketing on every doubling.
+    */
+  def bucketsFor(storeDir: String, entity: String, bytes: Long): Int =
+    bucketCount(storeDir, entity).filter(n => bytes <= 4L * n * TargetBucketBytes).getOrElse {
+      val files = (bytes + TargetBucketBytes - 1) / TargetBucketBytes
+      if (files <= 1) 1 else (java.lang.Long.highestOneBit(files - 1) << 1).toInt
+    }
+
+  /** The bytes of the data files under `dir` (none when it is missing),
+    * from a filesystem listing: no Spark job. Names starting with `_` or
+    * `.` (commit markers, checksums) are not data.
+    */
+  def dataBytes(dir: String): Long = {
+    val root = Paths.get(dir)
+    if (!Files.isDirectory(root)) 0L
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !"_.".contains(p.getFileName.toString.head))
+        .map(Files.size).sum
+      finally walk.close()
+    }
+  }
 
   /** Bucket-selective stage-and-commit — the write-amplification fix
     * for a CDC load at scale.

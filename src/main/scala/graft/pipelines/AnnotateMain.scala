@@ -66,8 +66,8 @@ object AnnotateMain {
       termIndex, hpoTermIndex, orthologs, ClinvarStore.Annotations.read(spark, storeDir))
     // subset publish: only `annotations` moves to the new version; the
     // load entities keep their manifest pointers in the same atomic flip
-    ClinvarStore.publish(
-      storeDir, ClinvarStore.audit(storeDir, Seq(ClinvarStore.Annotations -> diff)),
-      _ => col("aspect"))
+    ClinvarStore.publish(storeDir, ClinvarStore.audit(
+      storeDir, Seq(ClinvarStore.Annotations -> diff),
+      _ => ClinvarStore.Groups(col("aspect"), AnnotatePipeline.Aspects)))
   }
 }

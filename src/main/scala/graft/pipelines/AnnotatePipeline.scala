@@ -19,6 +19,11 @@ import graft.ops.{DiffSync, MergeSplit, NameNormalize}
   */
 object AnnotatePipeline {
 
+  /** The annotation aspects: D disease terms, H phenotype terms. */
+  val Disease = "D"
+  val Phenotype = "H"
+  val Aspects: Seq[String] = Seq(Disease, Phenotype)
+
   /** F5: carpe-compliant variant filter
     * (VariantAnnotator.variantIsCarpeCompliant:245-266; sets from
     * AppConfigure.xml:63-78).
@@ -218,11 +223,11 @@ object AnnotatePipeline {
     // concept chain — VariantAnnotator.generatePhenotypeAnnotations).
     // byConcept and byName are each distinct and share no rgd_id: so is their union
     val diseaseTerms = byConcept.unionByName(byName)
-      .withColumn("aspect", lit("D"))
+      .withColumn("aspect", lit(Disease))
     val phenotypeTerms = diseaseTermsByName(
       compliant.select(col("rgd_id"), col("trait_name").as("condition")),
       hpoTermIndex, excludedConditions)
-      .withColumn("aspect", lit("H"))
+      .withColumn("aspect", lit(Phenotype))
     val variantTerms = diseaseTerms.unionByName(phenotypeTerms)
 
     // A12: the annotation XREF_SOURCE is the variant's sorted PubMed id

@@ -1,10 +1,10 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, when}
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.{CacheScope, DiffSync, SnapshotStore}
+import graft.ops.{AliasSync, CacheScope, DiffSync, SnapshotStore}
 
 /** The ClinVar store layout — the Oracle tables of §1.1 that the
   * reference's Dao.java reads and writes — and the one step that
@@ -60,60 +60,83 @@ object ClinvarStore {
       "xref_source STRING, with_info STRING",
     Seq("annotated_rgd_id", "term_acc", "aspect", "evidence", "xref_source"))
 
-  /** Natural-key hash buckets per entity. 16 keeps fixture stores at a
-    * sane file count; at 100 TB, size it so one bucket ≈ one ~1 GB
-    * file (e.g. 4096 for a 4 TB entity) — the publish writes one file
-    * per CHANGED bucket either way.
+  /** Every action a ClinVar diff classifies a row into: DiffSync's five
+    * and AliasSync's `keep`. A pass counts exactly these.
     */
-  val Buckets = 16
+  val Actions: Seq[String] = Seq(
+    DiffSync.Insert, DiffSync.Update, DiffSync.Delete, DiffSync.Match, DiffSync.KeepStale,
+    AliasSync.Keep)
+
+  /** An entity's counter groups: the column naming each diff row's
+    * group, and every value it takes.
+    */
+  final case class Groups(by: Column, values: Seq[String])
+
+  /** LoadMain's grouping: one group per entity, named after it. */
+  val ByEntity: Entity => Groups = e => Groups(lit(e.name), Seq(e.name))
+
+  /** One diff as its [[audit]] wrote it: the audit table read back, and
+    * the (group, action) -> count counters (K7) of its non-zero pairs.
+    */
+  final case class Audit(entity: Entity, table: DataFrame, counters: Map[(String, String), Long])
+
+  private def auditPath(storeDir: String, e: Entity) = s"$storeDir/audit/${e.name}"
 
   /** Write each diff as its audit table (K8), the entities concurrently,
     * and return each one read back from what was written. Every later
     * step of the pass plans against that leaf scan, so each diff is
     * computed exactly once, by its own audit write; the read-back takes
     * the diff's schema, so no inference job runs.
+    *
+    * The counters ride on the same write: one [[Observation]] counts
+    * every fixed (group, action) pair of `groups` × [[Actions]], and all
+    * rows. A row outside those pairs (a new action or group) fails the
+    * audit rather than dropping from the counters; a failed audit throws
+    * before [[publish]] can flip the manifest.
     */
-  def audit(storeDir: String, diffs: Seq[(Entity, DataFrame)]): Seq[(Entity, DataFrame)] =
+  def audit(storeDir: String, diffs: Seq[(Entity, DataFrame)], groups: Entity => Groups): Seq[Audit] =
     SnapshotStore.inParallel(diffs) { case (e, d) =>
-      val path = s"$storeDir/audit/${e.name}"
-      d.write.mode("overwrite").parquet(path)
-      e -> d.sparkSession.read.schema(d.schema).parquet(path)
+      val g = groups(e)
+      val pairs = for (v <- g.values; a <- Actions) yield (v, a)
+      val obs = Observation()
+      val path = auditPath(storeDir, e)
+      d.observe(obs, count(lit(1)).as("rows"), pairs.map { case (v, a) =>
+          count(when(g.by === v && col(DiffSync.ActionCol) === a, 1)).as(s"$v.$a")
+        }: _*)
+        .write.mode("overwrite").parquet(path)
+      val m = obs.get
+      val counts = pairs.map { case (v, a) => (v, a) -> m(s"$v.$a").asInstanceOf[Long] }
+      val rows = m("rows").asInstanceOf[Long]
+      val lost = rows - counts.map(_._2).sum
+      if (lost != 0)
+        throw new IllegalStateException(s"audit of ${e.name}: $lost of $rows rows fall " +
+          s"outside the counted groups ${g.values.mkString(",")} and actions ${Actions.mkString(",")}")
+      Audit(e, d.sparkSession.read.schema(d.schema).parquet(path), counts.filter(_._2 > 0).toMap)
     }
 
-  /** The (group, action) -> count counters (K7) of `diffs`, in one job;
-    * `group` names each entity's counter group (a literal, or a column
-    * such as annotate's `aspect`).
+  /** Publish a pass from its [[audit]] tables: write every entity's next
+    * snapshot through ONE bucket-selective manifest flip
+    * ([[SnapshotStore.publishBucketed]], the analog of the reference's
+    * Oracle transaction and per-changed-row DML, Dao.java:218-248), and
+    * release the pass's caches. Each entity's bucket count is sized from
+    * its audit files' bytes ([[SnapshotStore.bucketsFor]]). Entities not
+    * in `audits` keep their pointers. Returns the audits' counters,
+    * (group, action) -> count.
     */
-  def counters(diffs: Seq[(Entity, DataFrame)], group: Entity => Column): Map[(String, String), Long] =
-    diffs.map { case (e, d) => d.select(group(e).as("group"), col(DiffSync.ActionCol)) }
-      .reduce(_.unionByName(_))
-      .groupBy("group", DiffSync.ActionCol).count()
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-
-  /** Publish a pass from its [[audit]] tables: collect their counters,
-    * write every entity's next snapshot through ONE bucket-selective
-    * manifest flip ([[SnapshotStore.publishBucketed]], the analog of the
-    * reference's Oracle transaction and per-changed-row DML,
-    * Dao.java:218-248), and release the pass's caches. Entities not in
-    * `audits` keep their pointers. Returns (group, action) -> count.
-    */
-  def publish(
-      storeDir: String,
-      audits: Seq[(Entity, DataFrame)],
-      group: Entity => Column): Map[(String, String), Long] = {
-    val counts = counters(audits, group)
+  def publish(storeDir: String, audits: Seq[Audit]): Map[(String, String), Long] = {
     SnapshotStore.publishBucketed(
       storeDir,
-      audits.map { case (e, d) =>
+      audits.map { case Audit(e, d, _) =>
         e.name -> SnapshotStore.BucketedEntity(
           snapshot = DiffSync.nextSnapshot(d, e.keyCols, e.contentCols),
           changedKeys = d.filter(col(DiffSync.ActionCol).isin(DiffSync.Changed: _*)),
           keyCols = e.keyCols,
-          numBuckets = Buckets)
+          numBuckets = SnapshotStore.bucketsFor(
+            storeDir, e.name, SnapshotStore.dataBytes(auditPath(storeDir, e))))
       })
     // repeated passes in one session (the convergence loop, a daily
     // batch job) must not accumulate the pipeline-internal caches
     CacheScope.releaseAll()
-    counts
+    audits.flatMap(_.counters).groupMapReduce(_._1)(_._2)(_ + _)
   }
 }

@@ -87,8 +87,9 @@ object LoadMain {
     */
   def run(spark: SparkSession, xmlPath: String, storeDir: String): Map[(String, String), Long] = {
     // the one cache of the parse: every incoming entity below reads it,
-    // and the publish step's releaseAll drops it
-    val vars = graft.ops.CacheScope.persisted(
+    // and the publish step's releaseAll drops it. Cut to a leaf, so the
+    // six diffs' plans do not each re-analyze the parse
+    val vars = graft.ops.CacheScope.cut(
       XmlIngest.variants(XmlIngest.parseRecords(XmlIngest.readRecords(spark, xmlPath))))
 
     val incomingVariants = vars.select(
@@ -122,8 +123,8 @@ object LoadMain {
         HgvsNames.read(spark, storeDir), Aliases.read(spark, storeDir),
         GeneAssociations.read(spark, storeDir), MapPositions.read(spark, storeDir)))
     // children first: the variants touch reads their written audits
-    val children = audit(storeDir, result.children)
-    val variants = audit(storeDir, Seq(Variants -> result.touched(children.map(_._2))))
-    publish(storeDir, variants ++ children, e => lit(e.name))
+    val children = audit(storeDir, result.children, ByEntity)
+    val variants = audit(storeDir, Seq(Variants -> result.touched(children.map(_.table))), ByEntity)
+    publish(storeDir, variants ++ children)
   }
 }

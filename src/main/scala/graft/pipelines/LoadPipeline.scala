@@ -189,9 +189,10 @@ object LoadPipeline {
 
     // persisted: ~7 consumers below (variant diff, key maps, RCV sets,
     // child rekeys) would otherwise each re-run the 3-stage
-    // match and the insert-path range sort from scratch; CacheScope-
+    // match and the insert-path range sort from scratch, and cut to a
+    // leaf so each of their plans analyzes none of it; CacheScope-
     // registered so batch drivers release it between loads
-    val identified = graft.ops.CacheScope.persisted(matchIdentity(incomingVariants, store))
+    val identified = graft.ops.CacheScope.cut(matchIdentity(incomingVariants, store))
     val merged = mergeFields(identified, store)
 
     val variantsDiff = Variants.diff(merged, store.variants)

@@ -139,6 +139,40 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(readKv(store, "e") === all.toMap)
   }
 
+  test("sized buckets: an entity that grows past 4x its target re-buckets and keeps every row") {
+    val store = tmpStore()
+    val t = SnapshotStore.TargetBucketBytes
+    def publish(rows: Seq[(Long, String)], bytes: Long) =
+      SnapshotStore.publishBucketed(store, Seq("e" -> SnapshotStore.BucketedEntity(
+        rows.toDF("id", "v"), rows.map(_._1).toDF("id"), Seq("id"),
+        SnapshotStore.bucketsFor(store, "e", bytes))), retain = 2)
+    // a first publish sizes from the bytes: a power of two, at least 1
+    assert(SnapshotStore.bucketsFor(store, "e", 0L) === 1)
+    assert(SnapshotStore.bucketsFor(store, "e", t) === 1)
+    assert(SnapshotStore.bucketsFor(store, "e", 3 * t) === 4)
+    val small = (1L to 40L).map(i => i -> s"a$i")
+    val v1 = publish(small, SnapshotStore.dataBytes(s"$store/nope"))
+    assert(SnapshotStore.bucketCount(store, "e") === Some(1))
+    // the listing counts the data files only
+    val files = new File(store, s"v$v1/e").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+    assert(SnapshotStore.dataBytes(s"$store/v$v1/e") === files.map(_.length).sum)
+    assert(files.nonEmpty && SnapshotStore.dataBytes(s"$store/v$v1/e") > 0)
+
+    // up to 4x its target the entity keeps its count; past it, re-sizes
+    assert(SnapshotStore.bucketsFor(store, "e", 4 * t) === 1)
+    val grown = (1L to 400L).map(i => i -> s"b$i")
+    val v2 = publish(grown, 4 * t + 1)
+    assert(SnapshotStore.bucketCount(store, "e") === Some(8))
+    val after = bucketState(store, "e")
+    assert(after.size > 1 && after.keySet.subsetOf((0 until 8).toSet))
+    after.values.foreach { case (rel, _) => assert(rel.startsWith(s"v$v2/")) }
+    assert(readKv(store, "e") === grown.toMap)
+    // the previous version, one bucket, still reads
+    assert(SnapshotStore.readAt(spark, store, "e", v1).as[(Long, String)].collect().toMap ===
+      small.toMap)
+  }
+
   test("bucketed publish: zero changed rows leaves every pointer (and all bytes) in place") {
     val store = tmpStore()
     val all = (1L to 30L).map(i => i -> s"a$i")

@@ -38,8 +38,8 @@ class AnnotateMainIntegrationSpec extends SparkSpec {
     // IAGP) and fans out to its ortholog (ISO) — both aspect D inserts
     val r1 = AnnotateMain.run(spark, store, dims)
     assert(r1.getOrElse(("D", "insert"), 0L) >= 2L, s"r1=$r1")
-    assert(graft.ops.SnapshotStore.bucketCount(store, "annotations")
-      === Some(ClinvarStore.Buckets))
+    // sized from the audit's bytes: one ~1 GB bucket holds the fixture
+    assert(graft.ops.SnapshotStore.bucketCount(store, "annotations") === Some(1))
     val annots = graft.ops.SnapshotStore.read(spark, store, "annotations")
     // the published snapshot has exactly its declared schema (names,
     // types, column order)

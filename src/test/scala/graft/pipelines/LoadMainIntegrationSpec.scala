@@ -2,7 +2,7 @@ package graft.pipelines
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit, udf}
+import org.apache.spark.sql.functions.{col, udf}
 
 /** End-to-end `--load` convergence over the real fixture XML and a real
   * on-disk store — the integration surface unit specs miss (this round
@@ -75,7 +75,7 @@ class LoadMainIntegrationSpec extends SparkSpec {
       .map { case (a, i) => (i.toLong, s"alias$i", "RCV000001", a) }
       .toDF("rgd_id", "value", "notes", "action")
     def publish(diff: DataFrame) = ClinvarStore.publish(store,
-      ClinvarStore.audit(store, Seq(ClinvarStore.Aliases -> diff)), e => lit(e.name))
+      ClinvarStore.audit(store, Seq(ClinvarStore.Aliases -> diff), ClinvarStore.ByEntity))
     publish(aliasDiff("insert", "insert", "insert", "insert"))
     val manifestBefore = graft.ops.SnapshotStore.readManifest(store)
 
@@ -92,9 +92,13 @@ class LoadMainIntegrationSpec extends SparkSpec {
     def genes(ids: Long*) = ids.map(i => (i, s"g$i", "insert")).toDF("rgd_id", "gene_id", "action")
     def aliases(notes: String) = Seq((1L, "a1", notes, "insert"), (2L, "a2", notes, "insert"))
       .toDF("rgd_id", "value", "notes", "action")
-    ClinvarStore.publish(store, Seq(
+    // the diffs go to the publish as they are: the snapshot writes, not
+    // the audit writes, are under test
+    def unaudited(diffs: (ClinvarStore.Entity, DataFrame)*) =
+      diffs.map { case (e, d) => ClinvarStore.Audit(e, d, Map.empty) }
+    ClinvarStore.publish(store, unaudited(
       ClinvarStore.GeneAssociations -> genes(1L, 2L),
-      ClinvarStore.Aliases -> aliases("RCV1")), e => lit(e.name))
+      ClinvarStore.Aliases -> aliases("RCV1")))
     val manifest = Files.readAllBytes(Paths.get(store, graft.ops.SnapshotStore.ManifestName))
     def snapshot(e: ClinvarStore.Entity) = e.read(spark, store).collect().map(_.toString).sorted.toSeq
     val before = Seq(ClinvarStore.GeneAssociations, ClinvarStore.Aliases).map(snapshot)
@@ -103,10 +107,9 @@ class LoadMainIntegrationSpec extends SparkSpec {
     // beside it, succeeds
     val boom = udf((v: String) => { if (v != null) throw new IllegalStateException("injected"); v })
     intercept[Exception] {
-      ClinvarStore.publish(store, Seq(
+      ClinvarStore.publish(store, unaudited(
         ClinvarStore.GeneAssociations -> genes(3L, 4L, 5L),
-        ClinvarStore.Aliases -> aliases("RCV2").withColumn("notes", boom(col("notes")))),
-        e => lit(e.name))
+        ClinvarStore.Aliases -> aliases("RCV2").withColumn("notes", boom(col("notes")))))
     }
     assert(Files.readAllBytes(Paths.get(store, graft.ops.SnapshotStore.ManifestName)) === manifest,
       "a failed publish flipped the manifest")

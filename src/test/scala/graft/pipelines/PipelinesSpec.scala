@@ -113,8 +113,10 @@ class LoadPipelineSpec extends SparkSpec {
 
   test("per-entity diff classification + counters (§2.6/K7)") {
     val r = result
-    val c = ClinvarStore.counters(
-      (ClinvarStore.Variants -> r.diff(ClinvarStore.Variants)) +: r.children, e => lit(e.name))
+    val store = java.nio.file.Files.createTempDirectory("counterstore").toFile.getAbsolutePath
+    val c = ClinvarStore.audit(store,
+      (ClinvarStore.Variants -> r.diff(ClinvarStore.Variants)) +: r.children, ClinvarStore.ByEntity)
+      .flatMap(_.counters).toMap
     assert(c(("variants", "update")) === 1L) // CV1 merged
     assert(c(("variants", "insert")) === 1L) // CV3
     assert(c(("variants", "delete")) === 1L) // CV2 stale
