@@ -231,9 +231,9 @@ object SnapshotStore {
     *                    rows whose content changed this load — inserts,
     *                    updates, AND deletes (a delete shrinks its
     *                    bucket, so the bucket must rewrite)
-    * @param numBuckets  sized so one bucket ≈ one target output file
-    *                    ([[bucketsFor]]); changing it forces a one-time
-    *                    full rewrite (re-bucketing)
+    * @param numBuckets  the bucket count ([[bucketsFor]] sizes it from
+    *                    a byte count the caller measures); changing it
+    *                    forces a one-time full rewrite (re-bucketing)
     */
   case class BucketedEntity(
       snapshot: DataFrame,
@@ -262,7 +262,14 @@ object SnapshotStore {
   def bucketCount(storeDir: String, entity: String): Option[Int] =
     readManifest(storeDir).get(bucketCountKey(entity)).map(_.toInt)
 
-  /** The size one bucket's file is sized to: ~1 GB. */
+  /** The bytes of measured input per bucket that [[bucketsFor]] aims at:
+    * 1 GiB. It bounds what the caller measures, not the file a bucket
+    * writes. ClinvarStore measures an entity's audit table, which holds
+    * an `_old` copy of every content column and the delete rows besides
+    * the next snapshot's rows, so a reload's bucket file comes out at up
+    * to about half of this. Unmeasured at scale: every workload so far
+    * publishes one bucket per entity.
+    */
   val TargetBucketBytes: Long = 1L << 30
 
   /** The bucket count to publish `entity` with when its data measures
@@ -344,7 +351,7 @@ object SnapshotStore {
           .withColumn("bucket", bucketExpr(be.keyCols, be.numBuckets))
           .filter(col("bucket").isin(changed.toSeq: _*))
           // hash-repartition on the bucket id → each bucket dir gets ONE
-          // file; at scale numBuckets is sized so that file ≈ 1 GB
+          // file, whose size follows from the caller's numBuckets
           .repartition(col("bucket"))
           .write.partitionBy("bucket").mode("overwrite")
           .parquet(s"$storeDir/v$v/$entity")

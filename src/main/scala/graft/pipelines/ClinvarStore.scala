@@ -119,7 +119,9 @@ object ClinvarStore {
     * ([[SnapshotStore.publishBucketed]], the analog of the reference's
     * Oracle transaction and per-changed-row DML, Dao.java:218-248), and
     * release the pass's caches. Each entity's bucket count is sized from
-    * its audit files' bytes ([[SnapshotStore.bucketsFor]]). Entities not
+    * its audit files' bytes, one bucket per 1 GiB of audit
+    * ([[SnapshotStore.bucketsFor]]); a bucket's snapshot file is smaller
+    * than its share of the audit. Entities not
     * in `audits` keep their pointers. Returns the audits' counters,
     * (group, action) -> count.
     */

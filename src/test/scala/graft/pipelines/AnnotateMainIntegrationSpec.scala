@@ -38,7 +38,7 @@ class AnnotateMainIntegrationSpec extends SparkSpec {
     // IAGP) and fans out to its ortholog (ISO) — both aspect D inserts
     val r1 = AnnotateMain.run(spark, store, dims)
     assert(r1.getOrElse(("D", "insert"), 0L) >= 2L, s"r1=$r1")
-    // sized from the audit's bytes: one ~1 GB bucket holds the fixture
+    // sized from the audit's bytes: one bucket (1 GiB of audit) holds the fixture
     assert(graft.ops.SnapshotStore.bucketCount(store, "annotations") === Some(1))
     val annots = graft.ops.SnapshotStore.read(spark, store, "annotations")
     // the published snapshot has exactly its declared schema (names,

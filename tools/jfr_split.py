@@ -1,20 +1,21 @@
 #!/usr/bin/env python3
-"""Split a JFR recording's samples of one thread in a time window by Spark
+"""Split a JFR recording's main-thread samples in a time window by Spark
 phase and by innermost `graft` call site.
 
-    python3 tools/jfr_split.py <recording.jfr> <from_s> <to_s> \
-        [--trace <perfbench t.trace.<cli>.json>] [--thread main] [--top 12]
+    python3 tools/jfr_split.py <recording.jfr> <perfbench t.trace.<cli>.json> <from_s> <to_s>
 
 The window is in seconds after the trace's `ready_ms` (the session's
-BlockManager start) when `--trace` is given, else after the JVM start.
-With `--trace` the tool first prints the trace's stage-free gaps of 0.5 s
-or more (`[gap] <from>-<to> s`), the windows worth splitting.
+BlockManager start). The tool first prints the trace's stage-free gaps of
+0.5 s or more (`[gap] <from>-<to> s`), the windows worth splitting; with
+an empty window (`from_s >= to_s`) it prints only those and reads no
+samples.
 
-Each `jdk.ExecutionSample` of the thread is charged to one phase: the
-first frame, innermost first, that belongs to class loading, codegen,
+Each `jdk.ExecutionSample` of the `main` thread is charged to one phase:
+the first frame, innermost first, that belongs to class loading, codegen,
 analysis, optimize, plan, encoders or scheduling (else `other`). It is
 also charged to its innermost frame in that phase's code (`[frame]`, e.g.
-which analyzer rule) and to its innermost `graft.` frame (`[site]`).
+which analyzer rule) and to its innermost `graft.` frame (`[site]`); the
+12 largest of each are printed.
 
 Stacks come from `jfr print --json --stack-depth 400`: the default depth
 of 5 stops inside Spark and hides every `graft` frame.  Record with
@@ -22,7 +23,8 @@ of 5 stops inside Spark and hides every `graft` frame.  Record with
 -XX:StartFlightRecording=filename=<f>.jfr,settings=profile`: the JVM
 records only 64 frames by default, which cuts about half of Spark's
 analysis stacks above their `graft` caller.  The JSON of a ~20 s
-LoadMain run is ~80 MB; it is decoded one event at a time.
+LoadMain run is ~80 MB; it is held whole as text and parsed one event at
+a time.
 """
 import argparse
 import collections
@@ -59,9 +61,9 @@ def epoch_s(iso):
     return t + (float("0." + frac) if frac else 0.0)
 
 
-def events(jfr, kind, depth):
-    """The recording's events of `kind`, decoded one at a time."""
-    text = subprocess.run(["jfr", "print", "--json", "--stack-depth", str(depth), "--events", kind, jfr],
+def samples(jfr):
+    """The recording's execution samples: `jfr print`'s whole output, parsed one event at a time."""
+    text = subprocess.run(["jfr", "print", "--json", "--stack-depth", "400", "--events", "jdk.ExecutionSample", jfr],
                           check=True, stdout=subprocess.PIPE, text=True).stdout
     dec, i = json.JSONDecoder(), text.find("[", text.find('"events"')) + 1
     while True:
@@ -103,25 +105,22 @@ def gaps(trace, min_s=0.5):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("jfr")
+    ap.add_argument("trace", help="perfbench t.trace.<cli>.json: the window is relative to its ready_ms")
     ap.add_argument("from_s", type=float)
     ap.add_argument("to_s", type=float)
-    ap.add_argument("--trace", help="perfbench t.trace.<cli>.json: window relative to its ready_ms")
-    ap.add_argument("--thread", default="main")
-    ap.add_argument("--top", type=int, default=12)
     a = ap.parse_args()
 
-    if a.trace:
-        trace = json.load(open(a.trace))
-        t0, ref = trace["ready_ms"] / 1000.0, "ready"
-        for g0, g1 in gaps(trace):
-            print("[gap] %.2f-%.2f s (%.2f s)" % (g0, g1, g1 - g0))
-    else:
-        t0, ref = epoch_s(next(events(a.jfr, "jdk.JVMInformation", 1))["jvmStartTime"]), "jvm start"
+    trace = json.load(open(a.trace))
+    for g0, g1 in gaps(trace):
+        print("[gap] %.2f-%.2f s (%.2f s)" % (g0, g1, g1 - g0))
+    if a.from_s >= a.to_s:
+        return
 
+    t0 = trace["ready_ms"] / 1000.0
     phases, frames, sites, n = collections.Counter(), collections.Counter(), collections.Counter(), 0
-    for ev in events(a.jfr, "jdk.ExecutionSample", 400):
+    for ev in samples(a.jfr):
         t = epoch_s(ev["startTime"]) - t0
-        if not (a.from_s <= t < a.to_s) or (ev["sampledThread"] or {}).get("javaName") != a.thread:
+        if not (a.from_s <= t < a.to_s) or (ev["sampledThread"] or {}).get("javaName") != "main":
             continue
         stack = ev["stackTrace"]["frames"]
         phase, frame = classify(stack)
@@ -131,12 +130,10 @@ def main():
         phases[phase] += 1
         frames["%s %s" % (phase, frame or "-")] += 1
         sites[site] += 1
-    print("[jfr] %s thread=%s window %.2f-%.2f s after %s: %d samples"
-          % (a.jfr, a.thread, a.from_s, a.to_s, ref, n))
+    print("[jfr] %s thread=main window %.2f-%.2f s after ready: %d samples" % (a.jfr, a.from_s, a.to_s, n))
     for tag, counter in (("phase", phases), ("frame", frames), ("site", sites)):
-        for k, c in counter.most_common(a.top if tag != "phase" else None):
+        for k, c in counter.most_common(12 if tag != "phase" else None):
             print("[%s] %5d %5.1f%%  %s" % (tag, c, 100.0 * c / max(n, 1), k))
-
 
 if __name__ == "__main__":
     main()
